@@ -11,7 +11,8 @@ Reference parity:
   dependence.
 
 The SAME token rule must hold in three places: Spark (JVM regex), the DuckDB
-oracle SQL, and the pure-Python test oracle. All three use:
+oracle SQL, and python_tokenize (the test oracles and Searcher.search's
+query path). All three use:
     lower(text) split on '[^a-z0-9]+', drop empty strings.
 Keep TOKEN_SPLIT_RE in sync with oracle_sql() in __spark_entry__.py.
 """
@@ -240,7 +241,9 @@ def tokenize_docs_arrow(
 
 
 def python_tokenize(text: str, maxlen: int | None = None) -> list[str]:
-    """Pure-Python mirror of tokens(); used by test oracles only."""
+    """Pure-Python mirror of tokens(). Searcher.search tokenizes queries
+    with it on the driver (search_all uses tokens()), so the two must agree
+    token for token — the same rule as the test oracles rely on."""
     import re
 
     out = [t for t in re.split(TOKEN_SPLIT_RE, text.lower()) if t]

@@ -54,6 +54,7 @@ def _term_scores(tfs: np.ndarray, dls: np.ndarray, idf: float,
 def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
                        excluded: "tuple[np.ndarray, np.ndarray] | None" = None,
                        after: "tuple[float, int] | None" = None,
+                       allowed: "np.ndarray | None" = None,
                        ) -> tuple[np.ndarray, np.ndarray]:
     """MaxScore kernel for ONE query's blocks → (top pids, top scores).
 
@@ -75,6 +76,11 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
     score and wrongly prune page-2 docs. Paginated queries therefore
     score every candidate posting exactly (the filter applies to the
     final rounded scores, matching the round-6-then-rank contract).
+
+    allowed: sorted unique pid array — the allow-list (F3). Postings of
+    other pids are dropped right after decode, like tombstones, so every
+    accumulator is an eligible doc and the MaxScore threshold stays a
+    valid lower bound of the k-th eligible score.
     """
     # per-term upper bound = max over its blocks (no decode needed)
     by_term = pdf.groupby("term_id", sort=False)
@@ -118,6 +124,11 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
                     pids, scores = pids[keep], scores[keep]
                     if pids.size == 0:
                         continue
+            if allowed is not None:
+                keep = np.isin(pids, allowed, assume_unique=True)
+                pids, scores = pids[keep], scores[keep]
+                if pids.size == 0:
+                    continue
             if not essential:
                 mask = np.isin(pids, acc_pids, assume_unique=True)
                 pids, scores = pids[mask], scores[mask]

@@ -8,13 +8,27 @@ with optional pid allow-lists (pids= / qid_to_pids=, searcher.py:65-94 F3).
 Where the reference loops queries serially through dense_search
 (searcher.py:77-104), search_all here is ONE distributed job. Plan shape:
 
-    queries → terms ⋈ broadcast(term_dict slice)  [tiny]
+    queries → terms ⋈ broadcast(term_dict slice)  [tiny; collected once]
     postings scan: bucket ∈ query buckets AND term_id ∈ query terms
       → partition pruning (bucket=) + row-group min/max pruning (term_id);
       only the query's posting blocks are ever read.
     gather mode:  blocks ⋈ broadcast(qterms) → groupBy(qid) applyInPandas
                   MaxScore kernel (block-max skipping) → exact top-k.
     scatter mode: decode once per block, broadcast-join idf, relational agg.
+
+search (one query) runs the same pruned read and the same MaxScore kernel
+on the driver, with zero Spark jobs — as the reference serves search
+in-process (server.py:16-44):
+
+    python_tokenize(text, query_maxlen), distinct
+    → pyarrow term_dict read, term ∈ query terms     → (term_id, idf)
+    → pyarrow postings read, bucket ∈ {t % index_partitions}
+                             AND term_id ∈ query term ids
+    → wand.score_query_blocks(tombstones, allow-list mask) → exact top-k.
+
+It falls back to search_all when the catalog has no plain-file layout
+(IcebergIndexCatalog.read_arrow is None) or when the tombstones are held
+only as a DataFrame (past _TOMBSTONE_GATHER_MAX rows).
 
 The reference's k-dependent funnel knobs (ncells/threshold/ndocs,
 searcher.py:106-127) have no free parameters here: block-max pruning is
@@ -25,13 +39,14 @@ from __future__ import annotations
 
 from dataclasses import asdict
 
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from colbert_spark.functions import analysis
 from colbert_spark.operators import wand
 from colbert_spark.plans.config import ColBERTConfig
-from colbert_spark.sources.catalog import make_catalog
+from colbert_spark.sources.catalog import make_catalog, posting_buckets
 from colbert_spark.sources.ranking import Ranking
 
 
@@ -94,15 +109,18 @@ class Searcher:
 
     # -- query encoding (lexical analog of Searcher.encode) ----------------
     def _query_terms(self, queries: DataFrame) -> DataFrame:
-        """(qid, term_id, idf, df) for in-dictionary distinct query terms.
-        df rides along so ONE collect of this (tiny) frame answers both
-        the auto-mode decision and the scan-pruning term list."""
+        """(qid, term_id, idf, df) for in-dictionary query terms. df rides
+        along so ONE collect of this (tiny) frame answers both the
+        auto-mode decision and the scan-pruning term list. A term repeated
+        in a query repeats here: search_all drops repeats after that
+        collect, which spares a shuffle (a query holds at most
+        query_maxlen tokens)."""
         qt = queries.select(
             "qid",
             F.explode(
                 analysis.tokens("text", self.config.query_maxlen)
             ).alias("term"),
-        ).distinct()
+        )
         return qt.join(
             self.term_dict.select("term", "term_id", "idf", "df"), "term"
         ).select("qid", "term_id", "idf", "df")
@@ -116,7 +134,7 @@ class Searcher:
         """Postings scan pruned to the query terms' buckets + term ids."""
         if not tids:
             return None
-        buckets = sorted({t % self.config.index_partitions for t in tids})
+        buckets = posting_buckets(tids, self.config.index_partitions)
         scan = self.catalog.read(self.spark, "postings").filter(
             F.col("bucket").isin(buckets)
         )
@@ -167,11 +185,15 @@ class Searcher:
         disabled (the cursor breaks that skip's threshold soundness —
         see wand.score_query_blocks). Same row contract as
         brute.bm25_search_after (equivalence pytest-proven).
+
+        k < 1 raises ValueError before any job runs.
         """
+        _check_k(k)
         if isinstance(queries, dict):
-            queries = self.spark.createDataFrame(
-                list(queries.items()), "qid long, text string"
-            )
+            # from pandas, a local relation: no Python task re-serializes it
+            queries = self.spark.createDataFrame(pd.DataFrame(
+                {"qid": list(queries), "text": list(queries.values())}
+            ).astype({"qid": "int64", "text": "object"}), "qid long, text string")
         after_rows = None
         if after is not None:
             after = after.select("qid", "after_score", "after_pid")
@@ -181,28 +203,21 @@ class Searcher:
             paging = self.spark.createDataFrame(
                 [(int(r["qid"]),) for r in after_rows], "qid long")
             queries = queries.join(F.broadcast(paging), "qid", "left_semi")
-        qterms = self._query_terms(queries).persist()
-        # ONE driver action answers everything the planner needs: cube
-        # gives the vocab-bounded per-term rows (→ scan-pruning tid list)
-        # plus the grand-total row (→ auto-mode nq/maxdf) in a single job.
-        stats_rows = (
-            qterms.cube("term_id")
-            .agg(F.countDistinct("qid").alias("nq"), F.max("df").alias("maxdf"))
-            .collect()
-        )
-        tids = [int(r["term_id"]) for r in stats_rows
-                if r["term_id"] is not None]
+        # the query terms are broadcast anyway, so they go back in as a
+        # local relation rather than a cache that would outlive the call
+        qrows = self._query_terms(queries).toPandas().drop_duplicates(
+            ["qid", "term_id"], ignore_index=True)
+        tids = sorted(set(qrows["term_id"].tolist()))
         if mode == "auto":
-            total = next((r for r in stats_rows if r["term_id"] is None), None)
-            big = total is not None and (
-                (total["nq"] or 0) > self._AUTO_SCATTER_QUERIES
-                or (total["maxdf"] or 0) > self._AUTO_SCATTER_DF
-            )
+            big = (qrows["qid"].nunique() > self._AUTO_SCATTER_QUERIES
+                   or (qrows["df"].max() if len(qrows) else 0)
+                   > self._AUTO_SCATTER_DF)
             mode = "scatter" if big else "gather"
         blocks = self._candidate_blocks(tids)
         if blocks is None:
             empty = self.spark.createDataFrame([], wand.RANKING_SCHEMA)
             return Ranking(empty, self._provenance(k, mode))
+        qterms = self.spark.createDataFrame(qrows)
 
         tomb_df, tomb_small = None, True
         if self.tombstones_df is not None:
@@ -210,11 +225,9 @@ class Searcher:
             # distributed anti-join is the only scale-safe exclusion
             tomb_df, tomb_small, mode = self.tombstones_df, False, "scatter"
         elif self.tombstones is not None and self.tombstones[0].size:
-            tomb_df = self.spark.createDataFrame(
-                [(int(p), int(b))
-                 for p, b in zip(self.tombstones[0], self.tombstones[1])],
-                "pid long, before_epoch long",
-            )
+            tomb_df = self.spark.createDataFrame(pd.DataFrame(
+                {"pid": self.tombstones[0], "before_epoch": self.tombstones[1]}
+            ))
         if qid_to_pids is not None or mode == "scatter":
             ranking = wand.topk_scatter(blocks, qterms, k, self.avgdl,
                                         qid_to_pids=qid_to_pids,
@@ -241,7 +254,21 @@ class Searcher:
 
     def search(self, text: str, k: int = 10,
                pids: list[int] | None = None) -> tuple[list, list, list]:
-        """Single query → (pids, ranks, scores) exactly like searcher.py:131."""
+        """Single query → (pids, ranks, scores) exactly like searcher.py:131.
+
+        Runs on the driver with zero Spark jobs (module docstring), and
+        returns row-for-row what search_all(mode="gather"/"scatter") does
+        for the same query. pids: optional allow-list; the ranking holds
+        only these pids, and an empty list allows nothing (→ empty
+        result). k < 1 raises ValueError before any I/O.
+        """
+        _check_k(k)
+        if pids is not None and len(pids) == 0:
+            return [], [], []
+        if self.tombstones_df is None:
+            hits = self._search_local(text, k, pids)
+            if hits is not None:
+                return hits
         q = self.spark.createDataFrame([(0, text)], "qid long, text string")
         allow = None
         if pids is not None:
@@ -258,6 +285,46 @@ class Searcher:
             [r["score"] for r in rows],
         )
 
+    #: posting-block columns the MaxScore kernel reads
+    _BLOCK_COLUMNS = ["term_id", "block_id", "first_pid", "last_pid",
+                      "max_block_score", "pids", "tfs", "dls"]
+
+    def _search_local(self, text: str, k: int, pids: list[int] | None,
+                      ) -> tuple[list, list, list] | None:
+        """search() through pyarrow reads of the query's term_dict rows
+        and posting blocks; None when the catalog cannot read files."""
+        import numpy as np
+        import pyarrow.dataset as ds
+
+        terms = list(dict.fromkeys(
+            analysis.python_tokenize(text, self.config.query_maxlen)))
+        if not terms:
+            return [], [], []
+        td = self.catalog.read_arrow(
+            "term_dict", ["term_id", "idf"], ds.field("term").isin(terms))
+        if td is None:
+            return None
+        idf = dict(zip(td.column("term_id").to_pylist(),
+                       td.column("idf").to_pylist()))
+        if not idf:
+            return [], [], []
+        tids = sorted(idf)
+        blocks = self.catalog.read_arrow(
+            "postings", self._BLOCK_COLUMNS,
+            ds.field("bucket").isin(
+                posting_buckets(tids, self.config.index_partitions))
+            & ds.field("term_id").isin(tids),
+        ).to_pandas()
+        blocks = blocks.sort_values(["term_id", "block_id"], ignore_index=True)
+        blocks["idf"] = blocks["term_id"].map(idf)
+        allowed = None if pids is None else np.unique(
+            np.asarray(pids, dtype=np.int64))
+        top, scores = wand.score_query_blocks(blocks, k, self.avgdl,
+                                              excluded=self.tombstones,
+                                              allowed=allowed)
+        return ([int(p) for p in top], list(range(1, top.size + 1)),
+                [float(s) for s in scores])
+
     def _provenance(self, k: int, mode: str) -> dict:
         return {
             "engine": "colbert_spark",
@@ -266,3 +333,8 @@ class Searcher:
             "mode": mode,
             "config": asdict(self.config),
         }
+
+
+def _check_k(k: int) -> None:
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")

@@ -20,9 +20,10 @@ colbert/indexing/collection_indexer.py:346-356,484-497):
     metadata.json   config + global stats
     plan.json       build plan (written before work starts; drives resume)
 
-`bucket = pmod(term_id, index_partitions)` and postings files are sorted by
-(term_id, block_id) within each bucket, so query-time reads prune both at
-the partition level (bucket=) and the row-group level (term_id min/max).
+`bucket = pmod(term_id, index_partitions)` (`posting_buckets`) and postings
+files are sorted by (term_id, block_id) within each bucket, so query-time
+reads prune both at the partition level (bucket=) and the row-group level
+(term_id min/max) — through Spark (`read`) or pyarrow (`read_arrow`).
 """
 
 from __future__ import annotations
@@ -38,6 +39,13 @@ POSTINGS_SCHEMA = (
     "num_postings int, max_block_score double, pids binary, tfs binary, "
     "dls binary, enc_bytes int"
 )
+
+
+def posting_buckets(term_ids, index_partitions: int) -> list[int]:
+    """The sorted `bucket=` partitions holding these term ids' postings.
+    Python's % of a positive modulus is Spark's pmod, so negative
+    (xxhash64) ids of appended terms land where the builder wrote them."""
+    return sorted({int(t) % index_partitions for t in term_ids})
 
 
 class IndexCatalog:
@@ -70,6 +78,22 @@ class IndexCatalog:
     # --- tables ----------------------------------------------------------
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.parquet(self.path(table))
+
+    def read_arrow(self, table: str, columns: list[str], filter=None):
+        """Driver-local pyarrow read of `columns` under `filter` (a
+        pyarrow.dataset expression; hive `bucket=` directories surface as
+        a column), no Spark job. The files are listed afresh on every
+        call, so Spark's FileStatusCache never applies; a table with no
+        data files reads as zero rows. Returns None where the backend has
+        no plain-file layout (IcebergIndexCatalog)."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        dataset = ds.dataset(self.path(table), format="parquet",
+                             partitioning="hive")
+        if not dataset.files:  # e.g. postings of a corpus with no tokens
+            return pa.table({c: pa.array([], pa.null()) for c in columns})
+        return dataset.to_table(columns=columns, filter=filter)
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite",
               partition_by: list[str] | None = None) -> None:
@@ -255,6 +279,9 @@ class IcebergIndexCatalog(IndexCatalog):
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         return spark.read.table(self.ident(table))
+
+    def read_arrow(self, table: str, columns: list[str], filter=None):
+        return None  # snapshot files are Iceberg's to list — read via Spark
 
     def write(self, df: DataFrame, table: str, mode: str = "overwrite",
               partition_by: list[str] | None = None) -> None:

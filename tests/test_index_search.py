@@ -12,6 +12,7 @@ from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.plans.indexer import Indexer
 from colbert_spark.plans.searcher import Searcher
 from colbert_spark.sources.datagen import gen_docs_pdf, gen_queries_pdf
+from tests.equivalence import EDGE_QUERIES, assert_equivalent_views
 from tests.oracle import bm25_topk as oracle_topk
 
 N_DOCS = 300
@@ -95,6 +96,85 @@ def test_pid_allowlist_filter(spark, built):
     pids, _, _ = searcher.search(text, k=10, pids=allowed)
     assert set(pids).issubset(set(allowed))
     assert pids[0] == full_pids[2]
+
+
+def test_point_search_equals_batch_modes(spark, built):
+    """search() (driver-local) ≡ search_all gather ≡ scatter row for row on
+    the fresh index: regular and edge queries, k above the hit count,
+    allow-lists with an absent pid and a duplicate."""
+    _, _, _, queries_pdf, searcher = built
+    texts = list(queries_pdf["text"].iloc[:10]) + EDGE_QUERIES
+    assert_equivalent_views(spark, searcher, texts, extra_allowed=[10**6])
+
+
+def test_empty_allowlist_allows_nothing(spark, built):
+    _, _, _, queries_pdf, searcher = built
+    text = queries_pdf["text"].iloc[1]
+    assert searcher.search(text, k=10)[0]
+    assert searcher.search(text, k=10, pids=[]) == ([], [], [])
+
+
+def test_k_below_one_rejected_before_any_job(spark, built):
+    _, queries, _, queries_pdf, searcher = built
+    sc = spark.sparkContext
+    group = "test-k-below-one"
+    sc.setJobGroup(group, "k < 1")
+    try:
+        for k in (0, -1):
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                searcher.search(queries_pdf["text"].iloc[0], k=k)
+            for mode in ("gather", "scatter"):
+                with pytest.raises(ValueError, match="k must be >= 1"):
+                    searcher.search_all(queries, k=k, mode=mode)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_point_search_runs_no_job_and_nothing_stays_persisted(spark, built):
+    """A point search runs zero Spark jobs, and neither search nor
+    search_all leaves a persisted RDD behind, however often called."""
+    _, queries, _, queries_pdf, searcher = built
+    sc = spark.sparkContext
+    texts = list(queries_pdf["text"].iloc[:5]) + EDGE_QUERIES
+    persisted = len(sc._jsc.getPersistentRDDs())
+    group = "test-point-search-jobs"
+    sc.setJobGroup(group, "point searches")
+    try:
+        hits = [searcher.search(t, k=10) for t in texts]
+        hits.append(searcher.search(texts[0], k=3, pids=hits[0][0][1:]))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sum(1 for pids, _, _ in hits if pids) >= 5
+    for _ in range(2):
+        for mode in ("gather", "scatter"):
+            searcher.search_all(queries, k=10, mode=mode).df.collect()
+        for t in texts:
+            searcher.search(t, k=10)
+    assert len(sc._jsc.getPersistentRDDs()) == persisted
+
+
+def test_point_search_falls_back_without_file_reads(spark, built,
+                                                    monkeypatch):
+    """A catalog with no plain-file layout (read_arrow → None, as
+    IcebergIndexCatalog) serves search() through search_all: Spark jobs
+    run and the tuples are unchanged."""
+    _, _, _, queries_pdf, searcher = built
+    text = queries_pdf["text"].iloc[2]
+    local = searcher.search(text, k=10)
+    allowed = searcher.search(text, k=10, pids=local[0][::2])
+    monkeypatch.setattr(searcher.catalog, "read_arrow",
+                        lambda *a, **kw: None)
+    sc = spark.sparkContext
+    group = "test-point-search-fallback"
+    sc.setJobGroup(group, "fallback")
+    try:
+        assert searcher.search(text, k=10) == local
+        assert searcher.search(text, k=10, pids=local[0][::2]) == allowed
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_search_after_indexed_both_modes(spark, built):

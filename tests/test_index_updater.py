@@ -15,6 +15,7 @@ from colbert_spark.plans.indexer import Indexer
 from colbert_spark.plans.searcher import Searcher
 from colbert_spark.sources.catalog import IndexCatalog
 from colbert_spark.sources.datagen import gen_docs_pdf, gen_queries_pdf
+from tests.equivalence import EDGE_QUERIES, assert_equivalent_views
 
 
 @pytest.fixture()
@@ -51,6 +52,60 @@ def test_remove_then_readd_restores(spark, env):
     up2.add(docs.filter(F.col("pid").isin(victims)))
     after_readd = _rank(spark, cfg, queries)
     assert after_readd == before  # frozen stats ⇒ exact restoration
+
+
+#: brand-new terms for add(): their term_ids are xxhash64 values, and
+#: zzneg1's is negative (its bucket comes from pmod, not a plain remainder)
+NEW_TERM_DOCS = [
+    (1000, "zzneg1 zzneg1 t00000 t00004 zzbrandnew"),
+    (1001, "zzneg1 other words here t00007"),
+    (1002, "zzbrandnew t00004 t00004"),
+]
+
+
+def test_point_search_equals_batch_across_index_states(spark, env):
+    """search() ≡ search_all gather ≡ scatter, row for row, after remove,
+    add of brand-new terms, re-add and coalesce — each read by a freshly
+    opened Searcher (the fresh index: test_index_search)."""
+    cfg, docs, queries = env
+    texts = ([r["text"] for r in queries.collect()] + EDGE_QUERIES
+             + ["zzneg1 t00004", "zzbrandnew zzneg1 t00000"])
+
+    def check(extra_allowed=(10**6,)):
+        assert_equivalent_views(spark, Searcher("u1", spark, cfg), texts,
+                                extra_allowed=list(extra_allowed))
+
+    victims = sorted({r[1] for r in _rank(spark, cfg, queries)})[:3]
+    IndexUpdater("u1", spark, cfg).remove(victims)
+    check(extra_allowed=[10**6, *victims])  # removed pids stay out
+    IndexUpdater("u1", spark, cfg).add(
+        spark.createDataFrame(NEW_TERM_DOCS, "pid long, text string"))
+    cat = Searcher("u1", spark, cfg)
+    neg = cat.term_dict.filter(F.col("term") == "zzneg1").collect()
+    assert neg and neg[0]["term_id"] < 0
+    assert set(cat.search("zzneg1", k=5)[0]) == {1000, 1001}
+    check()
+    IndexUpdater("u1", spark, cfg).add(docs.filter(F.col("pid").isin(victims)))
+    check()
+    up = IndexUpdater("u1", spark, cfg)
+    builder.coalesce_index(up.catalog, up.config, up.avgdl)
+    check()
+
+
+def test_point_search_with_dataframe_tombstones_matches(spark, env,
+                                                        monkeypatch):
+    """Past _TOMBSTONE_GATHER_MAX the tombstones live only as a DataFrame;
+    search() then runs through search_all and still answers the same."""
+    cfg, docs, queries = env
+    texts = [r["text"] for r in queries.collect()][:4]
+    IndexUpdater("u1", spark, cfg).remove(list(range(100, 120)))
+    local = Searcher("u1", spark, cfg)
+    assert local.tombstones is not None
+    want = [local.search(t, k=10) for t in texts]
+    monkeypatch.setattr(Searcher, "_TOMBSTONE_GATHER_MAX", 5)
+    s = Searcher("u1", spark, cfg)
+    assert s.tombstones_df is not None
+    assert [s.search(t, k=10) for t in texts] == want
 
 
 def test_add_duplicate_pid_rejected(spark, env):
