@@ -1,10 +1,16 @@
-"""Delta-gap + varint posting-list codec (numpy-vectorized).
+"""Delta-gap posting-list codec with a per-block codec tag
+(numpy-vectorized).
 
 The lexical analog of the reference's residual codec
 (colbert/indexing/codecs/residual.py:167-276: bucketize + packbits on
-compress, LUT unpack on decompress). Here: sorted pids → first-differences
-(delta-gap) → LEB128 varint bytes; tfs → varint bytes. encode/decode are
-exact inverses (mirrors the compress/decompress inverse-pair test surface).
+compress, LUT unpack on decompress). Here every posting payload is
+TAGGED (CLAUDE.md r5d): sorted pids → varint(first pid) ++ the tagged
+auto codec over the gaps between pids; tfs and doclens → the tagged auto
+codec over the values. The tag byte picks, per block, the smaller of
+LEB128 varint and frame-of-reference bit-packing. encode/decode are
+exact inverses (mirrors the compress/decompress inverse-pair test
+surface), and the batched encoders write payloads bit-identical to the
+single-block ones.
 
 All hot paths are numpy array ops — no per-element Python in encode
 (decode uses a tight loop over the byte array via numpy cumulative tricks).
@@ -75,33 +81,6 @@ def varint_decode(data: bytes) -> np.ndarray:
     return np.bitwise_or.reduceat(parts, start_idx)
 
 
-def encode_pids(pids: np.ndarray) -> bytes:
-    """Sorted pid array → delta-gap varint bytes (first value absolute)."""
-    p = np.asarray(pids, dtype=np.int64)
-    if p.size == 0:
-        return b""
-    gaps = np.empty_like(p)
-    gaps[0] = p[0]
-    np.subtract(p[1:], p[:-1], out=gaps[1:])
-    if (gaps[1:] <= 0).any():
-        raise ValueError("pids must be strictly increasing")
-    return varint_encode(gaps.astype(np.uint64))
-
-
-def decode_pids(data: bytes) -> np.ndarray:
-    """Inverse of encode_pids → int64 sorted pid array."""
-    gaps = varint_decode(data).astype(np.int64)
-    return np.cumsum(gaps)
-
-
-def encode_tfs(tfs: np.ndarray) -> bytes:
-    return varint_encode(np.asarray(tfs, dtype=np.uint64))
-
-
-def decode_tfs(data: bytes) -> np.ndarray:
-    return varint_decode(data).astype(np.int64)
-
-
 # --- fixed-width bit-packing (FOR) — the SIMD-friendly alternative ------
 
 def bitpack_encode(values: np.ndarray) -> bytes:
@@ -114,9 +93,8 @@ def bitpack_encode(values: np.ndarray) -> bytes:
     Trade-off (measured, test_codec.py): flat FOR wins big on dense
     lists (head-term gaps 1-4 → 2-3 bits/value vs varint's 8) and loses
     on tailed gap distributions, where one outlier widens every lane —
-    the failure PFOR patches with exceptions. The index keeps varint as
-    its default payload codec; this is the SIMD-friendly alternative for
-    head-term blocks.
+    the failure PFOR patches with exceptions. The index picks between
+    the two per block (encode_u64_auto's tag).
 
     Header: 1 byte width (0-64), 8 bytes count (LE). width 0 encodes an
     all-zeros run in the header alone. Pure numpy (bit scatter via
@@ -156,20 +134,6 @@ def bitpack_decode(data: bytes) -> np.ndarray:
     return (bits << shifts[None, :]).sum(axis=1, dtype=np.uint64)
 
 
-def encode_pids_packed(pids: np.ndarray) -> bytes:
-    """Delta-gap + bit-pack pid codec (FOR over the gaps)."""
-    p = np.asarray(pids, dtype=np.uint64)
-    if p.size == 0:
-        return bitpack_encode(p)
-    gaps = np.concatenate(([p[0]], np.diff(p)))
-    return bitpack_encode(gaps)
-
-
-def decode_pids_packed(data: bytes) -> np.ndarray:
-    g = bitpack_decode(data)
-    return np.cumsum(g, dtype=np.uint64)
-
-
 # --- adaptive per-block codec (the PFOR rationale, realized) -------------
 #
 # Head-term blocks have dense small gaps where flat FOR stores 2-3 bits a
@@ -183,17 +147,6 @@ def decode_pids_packed(data: bytes) -> np.ndarray:
 
 TAG_VARINT = 0
 TAG_BITPACK = 1
-
-
-def _codec_sizes(v: np.ndarray) -> tuple[int, int]:
-    """(varint_bytes, bitpack_bytes) the two encodings WOULD produce."""
-    if v.size == 0:
-        return 0, 9
-    nbytes = np.maximum((_bitlengths(v) + 6) // 7, 1)
-    varint_bytes = int(nbytes.sum())
-    width = int(v.max()).bit_length()
-    bitpack_bytes = 9 + (v.size * width + 7) // 8
-    return varint_bytes, bitpack_bytes
 
 
 def encode_u64_auto(values: np.ndarray) -> bytes:
@@ -226,7 +179,7 @@ def decode_u64_auto(data: bytes) -> np.ndarray:
 
 def encode_pids_auto(pids: np.ndarray) -> bytes:
     """Sorted pids → varint(first_pid) ++ tagged auto codec over the
-    gaps BETWEEN pids (strictness as encode_pids).
+    gaps BETWEEN pids (pids must be strictly increasing).
 
     The absolute first pid is kept OUT of the FOR frame: it is O(corpus)
     while gaps are O(corpus/df), so folding it into the gap array would

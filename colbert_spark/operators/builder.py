@@ -9,10 +9,27 @@ index :346-376 / finalize :378-497):
   train    → term dictionary (term → term_id, df, cf, idf). Replaces
              k-means centroid training (A5): the "partitions" of the index
              are terms, not centroids.
-  index    → delta-gap varint posting BLOCKS with per-block max BM25 score
-             (block-max metadata), built per (term_id, salt) group with
-             applyInPandas; numpy inside, Arrow on the wire.
+  index    → delta-gap posting BLOCKS (tagged auto-codec payloads) with
+             per-block max BM25 score (block-max metadata); numpy inside,
+             Arrow on the wire.
   finalize → global sort-by-(bucket, term_id) write + manifest + metadata.
+
+One kernel, two feeds. Every block write — build, add, coalesce, merge —
+is one plan (_blockify): repartition on (term_id, salt), sort within
+partitions, then the numpy kernel _make_block_kernel once per partition
+(mapInPandas). Only its input differs:
+
+  flat feed    (term_id, salt, pid, tf, doclen) rows — build and add, and
+               coalesce/merge when the tombstones are too many to collect
+               (live_flat_postings anti-joins them);
+  hybrid feed  coalesce/merge (_hybrid_rows): single-salt terms' source
+               blocks still ENCODED, unioned with flat multi-salt
+               postings; the kernel decodes them and folds the
+               tombstones epoch-bounded.
+
+Purge rewrites blocks in place (_make_pid_purge_kernel) through the same
+block encoder (_encode_blocks). _make_block_builder is the per-group
+reference the tests pin the kernel against.
 
 Skew (north_rule; SURVEY.md §4.4): a head term ("the"/t00000) may hit >50%
 of docs — a single groupBy(term) group would be one straggler task. Every
@@ -36,13 +53,23 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from colbert_spark.functions import analysis, bm25
-from colbert_spark.functions.codec import encode_pids_auto as encode_pids, \
-    encode_tfs_auto as encode_tfs
+from colbert_spark.functions.codec import (
+    decode_pids_auto,
+    decode_tfs_auto,
+    encode_pids_auto,
+    encode_pids_auto_batch,
+    encode_tfs_auto,
+    encode_u64_auto_batch,
+)
 from colbert_spark.plans.config import ColBERTConfig
-from colbert_spark.sources.catalog import POSTINGS_SCHEMA
+from colbert_spark.sources.catalog import (
+    POSTINGS_SCHEMA,
+    collect_tombstones,
+    tombstone_bounds,
+)
 
 
 def tokenize(docs: DataFrame, config: ColBERTConfig,
@@ -88,10 +115,11 @@ def build_term_dict(token_df: DataFrame, num_docs: int) -> DataFrame:
 
 
 def _make_block_builder(block_size: int, avgdl: float, k1: float, b: float):
-    """applyInPandas kernel: one (term_id, salt) group → block rows.
+    """Per-group reference: one (term_id, salt) group → block rows.
 
     Receives (term_id, pid, tf, doclen, idf); emits POSTINGS_SCHEMA rows.
-    Pure numpy; no per-row Python.
+    Production writes go through _make_block_kernel; tests pin it against
+    this per-group form.
     """
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -121,7 +149,8 @@ def _make_block_builder(block_size: int, avgdl: float, k1: float, b: float):
         for i, start in enumerate(range(0, n, block_size)):
             sl = slice(start, min(start + block_size, n))
             bp, bt, bd = pids[sl], tfs[sl], dls[sl]
-            ep, et, ed = encode_pids(bp), encode_tfs(bt), encode_tfs(bd)
+            ep = encode_pids_auto(bp)
+            et, ed = encode_tfs_auto(bt), encode_tfs_auto(bd)
             rows.append(
                 (
                     term_id,
@@ -150,6 +179,25 @@ def _make_block_builder(block_size: int, avgdl: float, k1: float, b: float):
     return build
 
 
+def _n_salts(count: Column, config: ColBERTConfig) -> Column:
+    """ceil(count / max_group_postings), at least 1: the df-proportional
+    salt count that bounds every (term_id, salt) group."""
+    return F.greatest(
+        F.lit(1), F.ceil(count / F.lit(config.max_group_postings)),
+    ).cast("long").alias("n_salts")
+
+
+def _salted(rows: DataFrame, dict_slice: DataFrame, on: str = "term_id",
+            *extra) -> DataFrame:
+    """Flat feed of _blockify: each posting placed in salt
+    pmod(xxhash64(pid), n_salts) — a pid lands in exactly one group of its
+    term, so duplicate postings still meet in the kernel's guard."""
+    return rows.join(F.broadcast(dict_slice), on).select(
+        "term_id", "pid", "tf", "doclen",
+        F.pmod(F.xxhash64("pid"), F.col("n_salts")).alias("salt"), *extra,
+    )
+
+
 def build_postings(
     token_df: DataFrame,
     term_dict: DataFrame,
@@ -166,36 +214,49 @@ def build_postings(
     self-contained, so salted runs never merge. Returns blocks WITH a
     `bucket` column for partition-pruned storage.
     """
-    dict_slice = term_dict.select(
-        "term", "term_id",
-        F.greatest(
-            F.lit(1),
-            F.ceil(F.col("df") / F.lit(config.max_group_postings)),
-        ).cast("long").alias("n_salts"),
-    )
+    dict_slice = term_dict.select("term", "term_id",
+                                  _n_salts(F.col("df"), config))
     # idf is per-TERM — it re-attaches via a broadcast join AFTER the
-    # (term_id, salt) exchange (idf_table below), so the corpus-sized
+    # (term_id, salt) exchange (_blockify's idf_table), so the corpus-sized
     # shuffle carries 5 longs/row instead of 5 longs + a high-entropy
     # double (~17% fewer raw bytes, more compressed: idf doubles don't
     # zstd well). The post-shuffle broadcast join preserves the exchange's
-    # hashpartitioning, so the groupBy adds no second exchange
+    # hashpartitioning, so the kernel needs no second exchange
     # (plan-verified in PLANS.md).
-    slim = token_df.join(F.broadcast(dict_slice), "term").select(
-        "term_id", "pid", "tf", "doclen",
-        F.pmod(F.xxhash64("pid"), F.col("n_salts")).alias("salt"),
-    )
-    return _salted_blockify(slim, avgdl, config,
-                            idf_table=term_dict.select("term_id", "idf"))
+    return _blockify(_salted(token_df, dict_slice, "term"), avgdl, config,
+                     idf_table=term_dict.select("term_id", "idf"))
+
+
+def _encode_blocks(p, t, d, idf, b_starts, avgdl: float, k1: float,
+                   b: float) -> dict:
+    """Block columns first_pid .. enc_bytes of POSTINGS_SCHEMA for the
+    blocks starting at b_starts and tiling the pid-sorted (p, t, d): exact
+    per-posting BM25 (float64, _make_block_builder's op order) → block
+    max, and the three batched payload encoders. idf is per posting."""
+    tff = t.astype(np.float64)
+    dlf = d.astype(np.float64)
+    scores = idf * tff * (k1 + 1.0) / (tff + k1 * (1.0 - b + b * dlf / avgdl))
+    b_counts = np.diff(np.append(b_starts, p.size))
+    ep = encode_pids_auto_batch(p, b_starts, b_counts)
+    et = encode_u64_auto_batch(t.astype(np.uint64), b_starts, b_counts)
+    ed = encode_u64_auto_batch(d.astype(np.uint64), b_starts, b_counts)
+    return {
+        "first_pid": p[b_starts],
+        "last_pid": p[b_starts + b_counts - 1],
+        "num_postings": b_counts.astype(np.int32),
+        "max_block_score": np.maximum.reduceat(scores, b_starts),
+        "pids": ep,
+        "tfs": et,
+        "dls": ed,
+        "enc_bytes": np.fromiter(
+            (len(a) + len(x) + len(y) for a, x, y in zip(ep, et, ed)),
+            dtype=np.int32, count=len(ep)),
+    }
 
 
 def _make_region_builder(block_size: int, avgdl: float, k1: float,
                          b: float):
-    """Shared vectorized block-build core of the partition kernels
-    (_make_partition_block_kernel and the hybrid payload-feed kernel)."""
-    from colbert_spark.functions.codec import (
-        encode_pids_auto_batch,
-        encode_u64_auto_batch,
-    )
+    """Vectorized block-build core of _make_block_kernel."""
 
     def build_region(tid, salt, p, t, d, idf, group_starts):
         """Vectorized block build over a region of COMPLETE groups
@@ -214,159 +275,169 @@ def _make_region_builder(block_size: int, avgdl: float, k1: float,
             bad = int(np.flatnonzero(dup)[0]) + 1
             raise ValueError(
                 f"term {int(tid[bad])}: duplicate pids in segments")
-        tff = t.astype(np.float64)
-        dlf = d.astype(np.float64)
-        scores = idf * tff * (k1 + 1.0) / (tff + k1 * (1.0 - b + b * dlf / avgdl))
         group_counts = np.diff(np.append(group_starts, n))
         idx_in_group = np.arange(n) - np.repeat(group_starts, group_counts)
         b_starts = np.flatnonzero(idx_in_group % block_size == 0)
-        b_counts = np.diff(np.append(b_starts, n))
-        b_ends = b_starts + b_counts
-        salt_b = salt[b_starts].astype(np.int64)
         blk_i = idx_in_group[b_starts] // block_size
-        ep = encode_pids_auto_batch(p, b_starts, b_counts)
-        et = encode_u64_auto_batch(t.astype(np.uint64), b_starts, b_counts)
-        ed = encode_u64_auto_batch(d.astype(np.uint64), b_starts, b_counts)
         return pd.DataFrame({
             "term_id": tid[b_starts],
-            "block_id": (salt_b << 32) | blk_i,
-            "first_pid": p[b_starts],
-            "last_pid": p[b_ends - 1],
-            "num_postings": b_counts.astype(np.int32),
-            "max_block_score": np.maximum.reduceat(scores, b_starts),
-            "pids": ep,
-            "tfs": et,
-            "dls": ed,
-            "enc_bytes": np.fromiter(
-                (len(a) + len(x) + len(y)
-                 for a, x, y in zip(ep, et, ed)),
-                dtype=np.int32, count=len(ep)),
+            "block_id": (salt[b_starts].astype(np.int64) << 32) | blk_i,
+            **_encode_blocks(p, t, d, idf, b_starts, avgdl, k1, b),
         })
 
     return build_region
 
 
-def _make_partition_block_kernel(block_size: int, avgdl: float, k1: float,
-                                 b: float):
-    """mapInPandas kernel over partitions pre-shuffled on (term_id, salt)
-    and sorted within each partition by (term_id, salt, pid): walks group
-    boundaries with numpy and emits POSTINGS_SCHEMA rows.
+def _tombstoned(p: np.ndarray, epochs, tomb) -> np.ndarray:
+    """Mask of the postings the epoch-bounded tombstone fold drops: the
+    pid is tombstoned AND the posting's block epoch (block_id >> 32) is
+    below its before_epoch, so a re-added pid's newer postings survive.
+    tomb = (sorted pids, before_epochs) from collect_tombstones; epochs is
+    per posting or one scalar."""
+    t_pids, t_eps = tomb
+    if not t_pids.size:
+        return np.zeros(p.size, dtype=bool)
+    idx = np.searchsorted(t_pids, p)
+    idx[idx == t_pids.size] = 0
+    return (t_pids[idx] == p) & (epochs < t_eps[idx])
 
-    Same math, row-for-row, as _make_block_builder — but one Python/Arrow
-    round-trip per PARTITION BATCH instead of per (term_id, salt) group
-    (tail terms make groups tiny and numerous, so the per-group pandas
-    construction dominated the build's blockify stage before r6). The
-    trailing group of each Arrow batch can straddle the batch boundary;
-    it is carried forward and emitted when its last row has arrived.
-    Memory bound is unchanged: the carry is one group, and group size is
-    bounded by config.max_group_postings via the df-proportional salts.
+
+#: positions in _make_block_kernel's column lists
+#: (term_id, salt, pid, tf, doclen, idf, epoch)
+_TID, _SALT, _PID, _TF, _DL = range(5)
+
+
+def _make_block_kernel(block_size: int, avgdl: float, k1: float, b: float,
+                       tomb=None):
+    """mapInPandas kernel of _blockify: partitions shuffled on
+    (term_id, salt) and sorted within on (term_id, salt, pid), so each
+    group's rows are contiguous. Per Arrow batch it
+
+      1. expands still-ENCODED rows (hybrid feed: pid == -1, payload
+         columns set) into flat postings in place; flat rows pass through;
+      2. drops tombstoned postings, epoch-bounded, when `tomb` is given;
+      3. carries the trailing group, which may continue in the next batch;
+      4. sorts each complete region by (group, pid);
+      5. builds its blocks with one _make_region_builder call.
+
+    Output is byte-identical to _make_block_builder per group
+    (pytest-pinned). Memory bound: the carry is one group, and group size
+    is bounded by config.max_group_postings via the df-proportional salts.
     """
     build_region = _make_region_builder(block_size, avgdl, k1, b)
+    if tomb is not None and not tomb[0].size:
+        tomb = None
+
+    def expand(pdf: pd.DataFrame) -> list:
+        p = pdf["pid"].to_numpy().astype(np.int64, copy=False)
+        cols = [
+            pdf["term_id"].to_numpy(), pdf["salt"].to_numpy(), p,
+            pdf["tf"].to_numpy().astype(np.int64, copy=False),
+            pdf["doclen"].to_numpy().astype(np.int64, copy=False),
+            pdf["idf"].to_numpy(),
+            pdf["epoch"].to_numpy() if "epoch" in pdf
+            else np.zeros(len(pdf), dtype=np.int64),
+        ]
+        enc = np.flatnonzero(p < 0) if "pids" in pdf else ()
+        if not len(enc):
+            return cols
+        payloads = [pdf[c].to_numpy()[enc] for c in ("pids", "tfs", "dls")]
+        dec = [(decode_pids_auto(bytes(pb)), decode_tfs_auto(bytes(tb)),
+                decode_tfs_auto(bytes(db)))
+               for pb, tb, db in zip(*payloads)]
+        sizes = np.ones(len(pdf), dtype=np.int64)
+        sizes[enc] = [x[0].size for x in dec]
+        out = [np.repeat(c, sizes) for c in cols]
+        # positions of the decoded postings in the expanded arrays
+        se = sizes[enc]
+        pos = np.arange(se.sum()) + np.repeat(
+            (np.cumsum(sizes) - sizes)[enc] - (np.cumsum(se) - se), se)
+        for k in (_PID, _TF, _DL):
+            out[k][pos] = np.concatenate([x[k - _PID] for x in dec])
+        return out
+
+    def region(cols: list):
+        tid, salt, p, t, d, idf, epoch = cols
+        if tomb is not None:
+            keep = ~_tombstoned(p, epoch, tomb)
+            tid, salt, p, t, d, idf = (
+                c[keep] for c in (tid, salt, p, t, d, idf))
+        if not p.size:
+            return None
+        group = np.cumsum(np.concatenate(
+            ([0], (tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1]))))
+        order = np.lexsort((p, group))
+        starts = np.flatnonzero(np.diff(group, prepend=-1))
+        return build_region(tid[order], salt[order], p[order], t[order],
+                            d[order], idf[order], starts)
+
+    def concat(parts: list) -> list:
+        return [np.concatenate(col) for col in zip(*parts)]
 
     def run(batches):
-        carry: list[tuple] = []     # (pids, tfs, dls) slices of one group
-        carry_key = None
-        carry_idf = 0.0
-
-        def flush():
-            if carry_key is None:
-                return None
-            p = np.concatenate([c[0] for c in carry])
-            t = np.concatenate([c[1] for c in carry])
-            d = np.concatenate([c[2] for c in carry])
-            tid = np.full(p.size, carry_key[0], dtype=np.int64)
-            salt = np.full(p.size, carry_key[1], dtype=np.int64)
-            return build_region(tid, salt, p, t, d, carry_idf,
-                                np.array([0], dtype=np.int64))
-
+        carry: list = []   # column lists of the trailing, unfinished group
         for pdf in batches:
             if not len(pdf):
                 continue
-            tid = pdf["term_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            p_all = pdf["pid"].to_numpy().astype(np.int64, copy=False)
-            t_all = pdf["tf"].to_numpy().astype(np.int64, copy=False)
-            d_all = pdf["doclen"].to_numpy().astype(np.int64, copy=False)
-            idf_all = pdf["idf"].to_numpy()
+            cols = expand(pdf)
+            tid, salt = cols[_TID], cols[_SALT]
             bounds = np.flatnonzero(
                 (tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            parts: list[pd.DataFrame] = []
-            start = 0
-            if carry_key is not None:
-                if (int(tid[0]), int(salt[0])) == carry_key:
-                    if bounds.size == 0:  # whole batch continues the carry
-                        carry.append((p_all, t_all, d_all))
-                        continue
-                    start = int(bounds[0])
-                    carry.append((p_all[:start], t_all[:start],
-                                  d_all[:start]))
-                flushed = flush()
-                if flushed is not None:
-                    parts.append(flushed)
-                carry, carry_key = [], None
-            # complete groups inside this batch: [start, last_bound)
-            inner = bounds[bounds > start]
-            if inner.size:
-                e = int(inner[-1])
-                g_starts = np.concatenate(
-                    ([start], inner[:-1])).astype(np.int64) - start
-                parts.append(build_region(
-                    tid[start:e], salt[start:e], p_all[start:e],
-                    t_all[start:e], d_all[start:e], idf_all[start:e],
-                    g_starts))
-                start = e
-            # trailing partial group → carry
-            carry_key = (int(tid[start]), int(salt[start]))
-            carry_idf = float(idf_all[start])
-            carry = [(p_all[start:], t_all[start:], d_all[start:])]
-            if parts:
-                yield pd.concat(parts, ignore_index=True) \
-                    if len(parts) > 1 else parts[0]
-        last = flush()
-        if last is not None:
-            yield last
+            if bounds.size:
+                cut = int(bounds[-1])
+            elif carry and (tid[0], salt[0]) == (carry[0][_TID][0],
+                                                 carry[0][_SALT][0]):
+                carry.append(cols)  # the whole batch continues the carry
+                continue
+            else:
+                cut = 0
+            done = carry + [[c[:cut] for c in cols]] if cut else carry
+            carry = [[c[cut:] for c in cols]]
+            out = region(concat(done)) if done else None
+            if out is not None:
+                yield out
+        out = region(concat(carry)) if carry else None
+        if out is not None:
+            yield out
 
     return run
 
 
-def _salted_blockify(enriched: DataFrame, avgdl: float,
-                     config: ColBERTConfig,
-                     idf_table: DataFrame | None = None) -> DataFrame:
-    """(term_id, pid, tf, doclen[, idf], salt) → bounded-group posting
-    blocks.
+def _blockify(rows: DataFrame, avgdl: float, config: ColBERTConfig,
+              idf_table: DataFrame | None = None, tomb=None) -> DataFrame:
+    """Feed rows → bounded-group posting blocks with a `bucket` column.
 
-    Shared by the fresh build, compaction, merge and append: ONE
-    repartition on (term_id, salt), a partition-local sort on
-    (term_id, salt, pid), then the numpy block kernel once per partition
+    rows are (term_id, salt, pid, tf, doclen[, idf]) — the flat feed — or
+    the hybrid feed of _hybrid_rows, which adds (epoch, pids, tfs, dls).
+    ONE repartition on (term_id, salt), a partition-local sort on
+    (term_id, salt, pid), then _make_block_kernel once per partition
     (mapInPandas — no per-group pandas round-trips; groupBy.applyInPandas
     performs the identical shuffle+sort internally but pays the Python
-    boundary per group). Bucket column for partition-pruned storage.
-    When idf_table is given, `enriched` must NOT carry idf — it
-    broadcast-joins in AFTER the exchange (the join preserves the
+    boundary per group). When idf_table is given, `rows` must NOT carry
+    idf — it broadcast-joins in AFTER the exchange (the join preserves the
     exchange's partitioning — no second exchange) and the corpus-sized
-    shuffle never moves the per-term double.
+    shuffle never moves the per-term double. `tomb` (collect_tombstones)
+    folds inside the kernel; only the hybrid feed carries the epochs it
+    needs.
     """
-    kernel = _make_partition_block_kernel(config.block_size, avgdl,
-                                          config.k1, config.b)
+    kernel = _make_block_kernel(config.block_size, avgdl, config.k1,
+                                config.b, tomb)
     # narrow the exchanged row (guide: shuffle fewer bytes): tf/doclen are
     # bounded by doc_maxlen and salt by the epoch space — int32 cuts the
     # corpus-sized shuffle from 40 to 28 bytes/row raw (ANSI mode makes
     # any impossible overflow loud). term_id/pid stay long.
-    slim_cols = [
-        F.col("term_id"), F.col("pid"),
+    rep = rows.select(
+        "term_id", "pid",
         F.col("tf").cast("int").alias("tf"),
         F.col("doclen").cast("int").alias("doclen"),
         F.col("salt").cast("int").alias("salt"),
-    ]
-    if idf_table is None:
-        slim_cols.append(F.col("idf"))
-    rep = enriched.select(*slim_cols).repartition(
-        config.shuffle_partitions, "term_id", "salt")
+        *[c for c in ("idf", "epoch", "pids", "tfs", "dls")
+          if c in rows.columns],
+    ).repartition(config.shuffle_partitions, "term_id", "salt")
     if idf_table is not None:
         rep = rep.join(F.broadcast(idf_table), "term_id")
     blocks = (
-        rep.select("term_id", "salt", "pid", "tf", "doclen", "idf")
-        .sortWithinPartitions("term_id", "salt", "pid")
+        rep.sortWithinPartitions("term_id", "salt", "pid")
         .mapInPandas(kernel, schema=POSTINGS_SCHEMA)
     )
     return blocks.withColumn(
@@ -385,12 +456,6 @@ def decode_blocks_flat(blocks: DataFrame) -> DataFrame:
     embarrassingly parallel (each block is self-contained: no grouping,
     no skew). epoch = block_id >> 32 (the salt namespace) so callers can
     fold tombstones epoch-bounded. The compaction/merge decode input."""
-    import pandas as pd
-
-    from colbert_spark.functions.codec import (
-        decode_pids_auto as decode_pids,
-        decode_tfs_auto as decode_tfs,
-    )
 
     def decode_flat(batches):
         # per-block decodes land in flat lists and concatenate ONCE per
@@ -406,11 +471,11 @@ def decode_blocks_flat(blocks: DataFrame) -> DataFrame:
             for i, (pb, tb, db) in enumerate(zip(
                 pdf["pids"], pdf["tfs"], pdf["dls"]
             )):
-                p = decode_pids(bytes(pb))
+                p = decode_pids_auto(bytes(pb))
                 sizes[i] = p.size
                 pids_l.append(p)
-                tfs_l.append(decode_tfs(bytes(tb)))
-                dls_l.append(decode_tfs(bytes(db)))
+                tfs_l.append(decode_tfs_auto(bytes(tb)))
+                dls_l.append(decode_tfs_auto(bytes(db)))
             tid = np.repeat(pdf["term_id"].to_numpy(), sizes)
             # block epoch (salt namespace) — the tombstone fold is
             # epoch-bounded: a re-added pid's NEW postings survive
@@ -433,16 +498,13 @@ def decode_blocks_flat(blocks: DataFrame) -> DataFrame:
 def live_flat_postings(catalog, spark) -> DataFrame:
     """Flat LIVE postings of an index: decode every block and fold the
     index's tombstones with the epoch bound (a pid drops only from
-    blocks with epoch < before_epoch). Returns (term_id, pid, tf,
-    doclen) — the shared input of compaction and segment merging."""
+    blocks with epoch < before_epoch) by a distributed anti-join, which
+    handles tombstone sets of any size. Returns (term_id, pid, tf,
+    doclen) — the flat feed of compaction and segment merging."""
     flat = decode_blocks_flat(catalog.read(spark, "postings"))
-    if catalog.table_exists("tombstones"):
-        t = catalog.read(spark, "tombstones")
-        if "before_epoch" not in t.columns:
-            # pre-epoch table: exclude every epoch — coalescing once IS the
-            # documented migration path for old indexes
-            t = t.withColumn("before_epoch", F.lit(1 << 62))
-        tombs = t.select(F.col("pid").alias("t_pid"), "before_epoch")
+    tombs = tombstone_bounds(catalog, spark)
+    if tombs is not None:
+        tombs = tombs.withColumnRenamed("pid", "t_pid")
         flat = flat.join(
             tombs,
             (F.col("pid") == F.col("t_pid"))
@@ -452,174 +514,36 @@ def live_flat_postings(catalog, spark) -> DataFrame:
     return flat.drop("epoch")
 
 
-#: hybrid payload feed: tombstones ship to the blockify kernel as a
-#: driver-collected sorted array; past this many rows fall back to the
-#: flat-decode path (whose anti-join handles tombstone sets of any
-#: size). Mirrors the Searcher's _TOMBSTONE_GATHER_MAX discipline.
-_HYBRID_TOMB_MAX = 100_000
+def _hybrid_rows(blocks: DataFrame, dict_slice: DataFrame) -> DataFrame:
+    """Hybrid feed of _blockify for coalesce and merge: re-blockify source
+    blocks WITHOUT flattening the single-salt majority (guide §8: move
+    heavy bytes once, decide with small rows).
 
-
-def _collect_tombstones(catalogs, spark):
-    """(sorted pids, matching before_epochs) across the given catalogs,
-    or None when the union is too large for a task closure (caller falls
-    back to the flat-decode anti-join). Pid spaces of merged sources are
-    disjoint (guarded upstream), so one flat union is sound."""
-    parts = []
-    total = 0
-    for cat in catalogs:
-        if not cat.table_exists("tombstones"):
-            continue
-        t = cat.read(spark, "tombstones")
-        if "before_epoch" not in t.columns:
-            # pre-epoch table: exclude every epoch (documented migration)
-            t = t.withColumn("before_epoch", F.lit(1 << 62))
-        rows = (t.groupBy("pid")
-                .agg(F.max("before_epoch").alias("before_epoch"))
-                .limit(_HYBRID_TOMB_MAX + 1).collect())
-        total += len(rows)
-        if total > _HYBRID_TOMB_MAX:
-            return None
-        parts.append(rows)
-    pids = np.fromiter((r["pid"] for part in parts for r in part),
-                       dtype=np.int64)
-    eps = np.fromiter((r["before_epoch"] for part in parts for r in part),
-                      dtype=np.int64)
-    order = np.argsort(pids, kind="stable")
-    return pids[order], eps[order]
-
-
-def _make_hybrid_block_kernel(block_size: int, avgdl: float, k1: float,
-                              b: float, tomb):
-    """mapInPandas kernel of the hybrid payload feed (see
-    _payload_blockify): partitions are pre-shuffled on (term_id, salt)
-    and sorted within each partition by (term_id, salt) only — rows of a
-    group are contiguous but arrive as a mix of still-ENCODED source
-    blocks (single-salt terms; pid == -1, payload columns set) and flat
-    postings (multi-salt terms; payload columns null). Per group the
-    kernel decodes the payloads, applies the broadcast tombstone fold
-    epoch-bounded, sorts by pid and hands the region to the shared block
-    builder — whose sorted-adjacent duplicate guard and block math are
-    byte-identical to the flat path (pytest-pinned).
-    """
-    from colbert_spark.functions.codec import (
-        decode_pids_auto,
-        decode_tfs_auto,
+    The flat feed decodes every posting into a 28-byte row, crosses the
+    Python boundary twice (decode out, kernel in) and exchanges the flat
+    rows. Terms with n_salts == 1 — all but the hottest at any corpus
+    size — need no pid-level placement decision (every posting lands in
+    salt 0), so their blocks ship through the exchange STILL ENCODED
+    (~1-2 bytes/posting; pid = -1 marks them) and decode inside the
+    kernel. Only multi-salt terms' postings take the flat form. The
+    output of _blockify is byte-identical to the flat feed's
+    (pytest-pinned)."""
+    src = blocks.join(F.broadcast(dict_slice), "term_id")
+    single = src.filter(F.col("n_salts") == 1).select(
+        "term_id",
+        F.lit(0).alias("salt"),
+        F.lit(-1).cast("long").alias("pid"),
+        F.lit(-1).alias("tf"),
+        F.lit(-1).alias("doclen"),
+        F.shiftright("block_id", 32).alias("epoch"),
+        "pids", "tfs", "dls",
     )
-
-    build_region = _make_region_builder(block_size, avgdl, k1, b)
-    t_pids, t_eps = (tomb if tomb is not None
-                     else (np.empty(0, np.int64), np.empty(0, np.int64)))
-
-    def finish_group(parts):
-        """parts: list of (pids, tfs, dls, epochs) arrays → one pid-sorted
-        live (p, t, d) triple, or None when nothing survives."""
-        p = np.concatenate([x[0] for x in parts])
-        t = np.concatenate([x[1] for x in parts])
-        d = np.concatenate([x[2] for x in parts])
-        if t_pids.size:
-            ep = np.concatenate([x[3] for x in parts])
-            idx = np.searchsorted(t_pids, p)
-            idx[idx == t_pids.size] = 0
-            dead = (t_pids[idx] == p) & (ep < t_eps[idx])
-            if dead.any():
-                keep = ~dead
-                p, t, d = p[keep], t[keep], d[keep]
-        if not p.size:
-            return None
-        order = np.argsort(p, kind="stable")
-        return p[order], t[order], d[order]
-
-    def decode_rows(pdf, s, e):
-        """Rows [s, e) of one group → list of (p, t, d, epoch) parts."""
-        parts = []
-        pid_col = pdf["pid"].to_numpy()
-        enc = pdf["pids"]
-        flat_sel = np.flatnonzero(pid_col[s:e] >= 0) + s
-        if flat_sel.size:
-            parts.append((
-                pid_col[flat_sel],
-                pdf["tf"].to_numpy()[flat_sel].astype(np.int64),
-                pdf["doclen"].to_numpy()[flat_sel].astype(np.int64),
-                pdf["epoch"].to_numpy()[flat_sel].astype(np.int64),
-            ))
-        blk = pdf["block_id"].to_numpy()
-        tfs_col, dls_col = pdf["tfs"], pdf["dls"]
-        for i in range(s, e):
-            if pid_col[i] >= 0:
-                continue
-            p = decode_pids_auto(bytes(enc.iat[i]))
-            parts.append((
-                p,
-                decode_tfs_auto(bytes(tfs_col.iat[i])).astype(np.int64),
-                decode_tfs_auto(bytes(dls_col.iat[i])).astype(np.int64),
-                np.full(p.size, blk[i] >> 32, dtype=np.int64),
-            ))
-        return parts
-
-    def run(batches):
-        carry: list = []
-        carry_key = None
-        carry_idf = 0.0
-
-        def regionize(groups):
-            """groups: list of (key, idf, (p, t, d)) → one build_region
-            call over their concatenation."""
-            if not groups:
-                return None
-            sizes = np.fromiter((g[2][0].size for g in groups),
-                                dtype=np.int64, count=len(groups))
-            starts = np.concatenate(([0], np.cumsum(sizes)[:-1]))
-            tid = np.repeat(
-                np.fromiter((g[0][0] for g in groups), dtype=np.int64,
-                            count=len(groups)), sizes)
-            salt = np.repeat(
-                np.fromiter((g[0][1] for g in groups), dtype=np.int64,
-                            count=len(groups)), sizes)
-            idf = np.repeat(
-                np.fromiter((g[1] for g in groups), dtype=np.float64,
-                            count=len(groups)), sizes)
-            p = np.concatenate([g[2][0] for g in groups])
-            t = np.concatenate([g[2][1] for g in groups])
-            d = np.concatenate([g[2][2] for g in groups])
-            return build_region(tid, salt, p, t, d, idf, starts)
-
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            tid = pdf["term_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            idf_all = pdf["idf"].to_numpy()
-            bounds = np.flatnonzero(
-                (tid[1:] != tid[:-1]) | (salt[1:] != salt[:-1])) + 1
-            seg_starts = np.concatenate(([0], bounds))
-            seg_ends = np.concatenate((bounds, [n]))
-            done_groups = []
-            for s, e in zip(seg_starts, seg_ends):
-                key = (int(tid[s]), int(salt[s]))
-                parts = decode_rows(pdf, int(s), int(e))
-                if carry_key is not None and key == carry_key:
-                    carry.extend(parts)
-                    continue
-                if carry_key is not None:
-                    fin = finish_group(carry)
-                    if fin is not None:
-                        done_groups.append((carry_key, carry_idf, fin))
-                carry, carry_key, carry_idf = parts, key, float(idf_all[s])
-            # every segment except the trailing one is complete — but a
-            # segment only closes when the NEXT key arrives, so flush all
-            # groups closed in this batch (the trailing one stays carried)
-            out = regionize(done_groups)
-            if out is not None:
-                yield out
-        if carry_key is not None:
-            fin = finish_group(carry)
-            if fin is not None:
-                out = regionize([(carry_key, carry_idf, fin)])
-                if out is not None:
-                    yield out
-
-    return run
+    multi = _salted(
+        decode_blocks_flat(src.filter(F.col("n_salts") > 1)), dict_slice,
+        "term_id", "epoch",
+        *[F.lit(None).cast("binary").alias(c) for c in ("pids", "tfs", "dls")],
+    )
+    return single.unionByName(multi)
 
 
 def block_term_stats(blocks: DataFrame, tomb) -> DataFrame:
@@ -630,14 +554,7 @@ def block_term_stats(blocks: DataFrame, tomb) -> DataFrame:
     partials shuffle. Terms whose postings are all tombstoned drop
     (df > 0 filter), matching the flat path's anti-join-then-group
     semantics. `tomb` is the (sorted pids, before_epochs) pair from
-    _collect_tombstones."""
-    from colbert_spark.functions.codec import (
-        decode_pids_auto,
-        decode_tfs_auto,
-    )
-
-    t_pids, t_eps = (tomb if tomb is not None
-                     else (np.empty(0, np.int64), np.empty(0, np.int64)))
+    collect_tombstones."""
 
     def gen(batches):
         for pdf in batches:
@@ -649,14 +566,10 @@ def block_term_stats(blocks: DataFrame, tomb) -> DataFrame:
             cfs = np.empty(n, dtype=np.int64)
             tfs_col, pids_col = pdf["tfs"], pdf["pids"]
             for i in range(n):
-                t = decode_tfs_auto(bytes(tfs_col.iat[i])).astype(np.int64)
-                if t_pids.size:
+                t = decode_tfs_auto(bytes(tfs_col.iat[i]))
+                if tomb[0].size:
                     p = decode_pids_auto(bytes(pids_col.iat[i]))
-                    idx = np.searchsorted(t_pids, p)
-                    idx[idx == t_pids.size] = 0
-                    dead = (t_pids[idx] == p) & ((blk[i] >> 32) < t_eps[idx])
-                    if dead.any():
-                        t = t[~dead]
+                    t = t[~_tombstoned(p, blk[i] >> 32, tomb)]
                 dfs[i] = t.size
                 cfs[i] = t.sum()
             yield pd.DataFrame({"term_id": pdf["term_id"].to_numpy(),
@@ -671,63 +584,6 @@ def block_term_stats(blocks: DataFrame, tomb) -> DataFrame:
     )
 
 
-def _payload_blockify(blocks: DataFrame, dict_slice: DataFrame,
-                      idf_table: DataFrame, avgdl: float,
-                      config: ColBERTConfig, tomb) -> DataFrame:
-    """Re-blockify source blocks WITHOUT flattening the single-salt
-    majority (guide §8: move heavy bytes once, decide with small rows).
-
-    The flat path decodes every posting into a 28-byte row, crosses the
-    Python boundary twice (decode out, kernel in) and exchanges the flat
-    rows. Terms with n_salts == 1 — all but the hottest at any corpus
-    size — need no pid-level placement decision (every posting lands in
-    salt 0), so their blocks ship through the exchange STILL ENCODED
-    (~1-2 bytes/posting) and decode inside the kernel. Only multi-salt
-    terms' postings (placement = pmod(xxhash64(pid), n_salts)) take the
-    flat path. Tombstones fold inside the kernel from a driver-collected
-    sorted array (caller guarantees |tombstones| ≤ _HYBRID_TOMB_MAX).
-    Output is byte-identical to _salted_blockify over the flat decode
-    (pytest-pinned)."""
-    src = blocks.join(F.broadcast(dict_slice), "term_id")
-    nulls = [F.lit(None).cast("binary").alias(c)
-             for c in ("pids", "tfs", "dls")]
-    single = src.filter(F.col("n_salts") == 1).select(
-        "term_id",
-        F.lit(0).alias("salt"),
-        F.lit(-1).cast("long").alias("pid"),
-        F.lit(-1).alias("tf"),
-        F.lit(-1).alias("doclen"),
-        F.lit(-1).cast("long").alias("epoch"),
-        "block_id", "pids", "tfs", "dls",
-    )
-    multi_flat = decode_blocks_flat(
-        src.filter(F.col("n_salts") > 1)
-    ).join(F.broadcast(dict_slice), "term_id").select(
-        "term_id",
-        F.pmod(F.xxhash64("pid"), F.col("n_salts")).cast("int").alias("salt"),
-        "pid",
-        F.col("tf").cast("int").alias("tf"),
-        F.col("doclen").cast("int").alias("doclen"),
-        "epoch",
-        F.lit(-1).cast("long").alias("block_id"),
-        *nulls,
-    )
-    rep = single.unionByName(multi_flat).repartition(
-        config.shuffle_partitions, "term_id", "salt"
-    ).join(F.broadcast(idf_table), "term_id")
-    kernel = _make_hybrid_block_kernel(config.block_size, avgdl,
-                                       config.k1, config.b, tomb)
-    out = (
-        rep.select("term_id", "salt", "pid", "tf", "doclen", "epoch",
-                   "block_id", "pids", "tfs", "dls", "idf")
-        .sortWithinPartitions("term_id", "salt")
-        .mapInPandas(kernel, schema=POSTINGS_SCHEMA)
-    )
-    return out.withColumn(
-        "bucket", F.pmod(F.col("term_id"), F.lit(config.index_partitions))
-    )
-
-
 def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
     """Segment compaction (S13, colbert/utils/coalesce.py:9-111 analog +
     reference index_coalesce_test.py equivalence contract): decode every
@@ -737,16 +593,15 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
 
     Skew-safe by the SAME mechanism as the build: a merge keyed on
     term_id alone would put a head term's entire posting list (60% of a
-    10^12-doc corpus) in ONE pandas group. Instead:
-
-      1. decode blocks FLAT via mapInPandas — embarrassingly parallel,
-         each block self-contained, no grouping, no skew;
-      2. drop tombstones with a distributed anti-join (no driver
-         collect — tombstone sets of any size are fine);
-      3. re-blockify through the standard df-proportional salted kernel
-         (_salted_blockify), n_salts derived from the CURRENT per-term
-         posting counts (block metadata only — column-pruned, never
-         touches the binary columns), so appended segments count too.
+    10^12-doc corpus) in ONE pandas group. Instead the blocks re-blockify
+    through the build's kernel (_blockify) with n_salts derived from the
+    CURRENT per-term posting counts (block metadata only — column-pruned,
+    never touches the binary columns), so appended segments count too.
+    Its input is the hybrid feed (_hybrid_rows: single-salt terms' blocks
+    cross the exchange still encoded, tombstones fold inside the kernel
+    from a driver-collected array), or — past the tombstone collect bound
+    — the flat feed of live_flat_postings, whose distributed anti-join
+    handles tombstone sets of any size.
 
     Duplicate-pid detection survives salting: the salt is
     pmod(xxhash64(pid), n_salts), so both copies of a duplicated
@@ -764,35 +619,15 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
     counts = blocks.groupBy("term_id").agg(
         F.sum("num_postings").alias("n_post")
     )
-    dict_slice = (
-        catalog.read(ss, "term_dict").select("term_id", "idf")
-        .join(counts, "term_id")
-        .select(
-            "term_id",
-            F.greatest(
-                F.lit(1),
-                F.ceil(F.col("n_post") / F.lit(config.max_group_postings)),
-            ).cast("long").alias("n_salts"),
-        )
-    )
-
     idf_table = catalog.read(ss, "term_dict").select("term_id", "idf")
-    tomb = _collect_tombstones([catalog], ss)
+    dict_slice = idf_table.join(counts, "term_id").select(
+        "term_id", _n_salts(F.col("n_post"), config))
+    tomb = collect_tombstones([tombstone_bounds(catalog, ss)])
     if tomb is not None:
-        # hybrid payload feed: single-salt terms' blocks cross the
-        # exchange still encoded (_payload_blockify)
-        merged = _payload_blockify(blocks, dict_slice, idf_table,
-                                   avgdl, config, tomb)
+        rows = _hybrid_rows(blocks, dict_slice)
     else:
-        # tombstone set too large for a task closure — flat decode with
-        # the distributed anti-join (handles any size)
-        flat = live_flat_postings(catalog, ss)
-        enriched = flat.join(F.broadcast(dict_slice), "term_id").select(
-            "term_id", "pid", "tf", "doclen",
-            F.pmod(F.xxhash64("pid"), F.col("n_salts")).alias("salt"),
-        )
-        merged = _salted_blockify(enriched, avgdl, config,
-                                  idf_table=idf_table)
+        rows = _salted(live_flat_postings(catalog, ss), dict_slice)
+    merged = _blockify(rows, avgdl, config, idf_table=idf_table, tomb=tomb)
     catalog.replace(
         merged.repartition(config.index_partitions, "bucket")
         .sortWithinPartitions("term_id", "block_id"),
@@ -822,9 +657,10 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
 
 def _make_pid_purge_kernel(bc_pids, k1: float, b: float, avgdl: float):
     """mapInPandas kernel: drop the broadcast pid set from each posting
-    block IN PLACE (same term_id/block_id/bucket), recomputing
-    first/last/num/max_block_score/enc_bytes; blocks with no survivors
-    vanish; blocks the pid set never touches pass through byte-identical.
+    block IN PLACE (same term_id/block_id/bucket); blocks with no
+    survivors vanish; blocks the pid set never touches pass through
+    byte-identical; the rest re-encode through _encode_blocks, so their
+    block max is bit-identical to a rebuild's.
 
     bc_pids is a Spark broadcast of a SORTED int64 numpy array — the range
     reject (searchsorted against [first_pid, last_pid]) skips the decode
@@ -837,72 +673,57 @@ def _make_pid_purge_kernel(bc_pids, k1: float, b: float, avgdl: float):
                 "enc_bytes", "bucket"]
 
     def purge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from colbert_spark.functions.codec import (
-            decode_pids_auto as decode_pids,
-            decode_tfs_auto as decode_tfs,
-        )
-
         purge_arr = bc_pids.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            # vectorized range reject over the WHOLE batch: blocks whose
-            # [first,last] range contains no purged pid pass through as one
-            # pandas slice — the per-block python work is reserved for the
-            # (few) range-overlapping blocks. Wide-range tail-term blocks
-            # overlap any pid set, so the loop below still decodes them;
-            # their decode is proportional to their (tiny) df.
-            lo_all = np.searchsorted(purge_arr,
-                                     pdf["first_pid"].to_numpy(), side="left")
-            hi_all = np.searchsorted(purge_arr,
-                                     pdf["last_pid"].to_numpy(), side="right")
-            overlap = lo_all != hi_all
-            clean = pdf.loc[~overlap, out_cols]
-            if not overlap.any():
-                yield clean
-                continue
-            rows = []
-            sub = pdf.loc[overlap]
-            sub_lo, sub_hi = lo_all[overlap], hi_all[overlap]
-            for j, (_, r) in enumerate(sub.iterrows()):
-                p = decode_pids(bytes(r["pids"]))
-                mask = ~np.isin(p, purge_arr[sub_lo[j]:sub_hi[j]])
-                if mask.all():  # range overlapped but no pid matched
-                    rows.append(tuple(r[c] for c in out_cols))
-                    continue
-                if not mask.any():  # every posting purged → drop the block
-                    continue
-                tf = decode_tfs(bytes(r["tfs"]))[mask]
-                dl = decode_tfs(bytes(r["dls"]))[mask]
-                p2 = p[mask]
-                idf = float(r["idf"])
-                if not np.isfinite(idf):
+            # vectorized range reject over the WHOLE batch: only blocks
+            # whose [first,last] range contains a purged pid decode.
+            # Wide-range tail-term blocks overlap any pid set; their
+            # decode is proportional to their (tiny) df.
+            lo = np.searchsorted(purge_arr, pdf["first_pid"].to_numpy(),
+                                 side="left")
+            hi = np.searchsorted(purge_arr, pdf["last_pid"].to_numpy(),
+                                 side="right")
+            hit = np.flatnonzero(lo != hi)
+            pids = [decode_pids_auto(bytes(x))
+                    for x in pdf["pids"].to_numpy()[hit]]
+            sizes = np.fromiter((x.size for x in pids), dtype=np.int64,
+                                count=hit.size)
+            owner = np.repeat(np.arange(hit.size), sizes)
+            keep = ~np.isin(np.concatenate(pids or [np.empty(0, np.int64)]),
+                            purge_arr)
+            kept = np.bincount(owner[keep], minlength=hit.size)
+            clean = np.ones(len(pdf), dtype=bool)
+            clean[hit[kept < sizes]] = False    # range overlapped AND matched
+            parts = [pdf.loc[clean, out_cols]]
+            touched = (kept > 0) & (kept < sizes)
+            if touched.any():
+                sel = hit[touched]
+                idf = pdf["idf"].to_numpy()[sel]
+                if not np.isfinite(idf).all():
+                    bad = sel[~np.isfinite(idf)][0]
                     raise ValueError(
-                        f"term {int(r['term_id'])} missing from "
+                        f"term {int(pdf['term_id'].iat[bad])} missing from "
                         "term_dict during purge"
                     )
-                # identical float64 op order to _make_block_builder, so the
-                # surviving postings' block max is bit-identical to a rebuild
-                tff = tf.astype(np.float64)
-                dlf = dl.astype(np.float64)
-                scores = idf * tff * (k1 + 1.0) / (
-                    tff + k1 * (1.0 - b + b * dlf / avgdl)
-                )
-                ep, et, ed = encode_pids(p2), encode_tfs(tf), encode_tfs(dl)
-                rows.append((
-                    int(r["term_id"]), int(r["block_id"]),
-                    int(p2[0]), int(p2[-1]), int(p2.size),
-                    float(scores.max()), ep, et, ed,
-                    len(ep) + len(et) + len(ed),
-                    int(r["bucket"]),
-                ))
-            touched = pd.DataFrame(rows, columns=out_cols)
-            if len(clean) and len(touched):
-                yield pd.concat([clean, touched], ignore_index=True)
-            elif len(clean):
-                yield clean
-            elif len(touched):
-                yield touched
+                m = keep[touched[owner]]
+                p = np.concatenate([x for x, u in zip(pids, touched) if u])[m]
+                t, d = (np.concatenate([
+                    decode_tfs_auto(bytes(x)) for x in pdf[c].to_numpy()[sel]
+                ])[m] for c in ("tfs", "dls"))
+                counts = kept[touched]
+                parts.append(pd.DataFrame({
+                    "term_id": pdf["term_id"].to_numpy()[sel],
+                    "block_id": pdf["block_id"].to_numpy()[sel],
+                    **_encode_blocks(p, t, d, np.repeat(idf, counts),
+                                     np.cumsum(counts) - counts, avgdl, k1, b),
+                    "bucket": pdf["bucket"].to_numpy()[sel],
+                }))
+            parts = [x for x in parts if len(x)]
+            if parts:
+                yield pd.concat(parts, ignore_index=True) \
+                    if len(parts) > 1 else parts[0]
 
     return purge
 

@@ -168,9 +168,9 @@ class IndexUpdater:
                 "idf", bm25f.idf(F.lit(0), self.num_docs)
             ).alias("idf"),
         )
-        # reuse the build blockify (partition-sorted mapInPandas kernel),
-        # in this append's disjoint epoch namespace; idf rides inline
-        blocks = builder._salted_blockify(
+        # the build's block kernel, in this append's disjoint epoch
+        # namespace; idf rides inline
+        blocks = builder._blockify(
             enriched.withColumn("salt", F.lit(epoch).cast("long")),
             self.avgdl, cfg,
         )

@@ -22,18 +22,19 @@ Reference analog: the reference merges sharded RANKINGS
 merge — its single-machine index never shards. At 10^12 documents the
 build itself must shard; this is the fold step.
 
-Plan shape (r6 hybrid payload feed): the stats pass reads per-block
-(df, cf) partials from the tf payloads (builder.block_term_stats — one
-row per BLOCK shuffles, not per posting), and the re-blockify ships
-single-salt terms' blocks through the (term_id, salt) exchange STILL
-ENCODED (~1-2 bytes/posting) — only multi-salt (hot) terms' postings
-flatten to rows; tombstones fold inside the kernel epoch-bounded
-(builder._payload_blockify, byte-identical to the flat path by pytest).
-When the union of source tombstones exceeds the task-closure bound the
-original shape runs instead: per shard ONE flat block decode
-(builder.live_flat_postings — mapInPandas, no grouping, tombstones
-anti-joined) into the df-proportional salted re-blockify
-(builder._salted_blockify), one corpus-sized exchange of 5 longs/row.
+Plan shape: the postings re-blockify through the build's one kernel
+(builder._blockify) with df-proportional salts from the merged df. When
+the union of source tombstones fits a driver collect, its input is the
+hybrid feed (builder._hybrid_rows): single-salt terms' blocks cross the
+(term_id, salt) exchange STILL ENCODED (~1-2 bytes/posting), only
+multi-salt (hot) terms' postings flatten to rows, and the tombstones fold
+inside the kernel epoch-bounded; the stats pass reads per-block (df, cf)
+partials from the tf payloads (builder.block_term_stats — one row per
+BLOCK shuffles, not per posting). Past that bound the flat feed runs:
+per shard ONE flat block decode (builder.live_flat_postings —
+mapInPandas, no grouping, tombstones anti-joined), one corpus-sized
+exchange of 5 longs/row. Both feeds write byte-identical blocks
+(pytest-pinned).
 """
 
 from __future__ import annotations
@@ -49,7 +50,11 @@ from colbert_spark.functions import bm25
 from colbert_spark.operators import builder
 from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.plans.indexer import MANIFEST_SCHEMA
-from colbert_spark.sources.catalog import make_catalog
+from colbert_spark.sources.catalog import (
+    collect_tombstones,
+    make_catalog,
+    tombstone_bounds,
+)
 
 
 def _live_doc_stats(catalog, spark: SparkSession) -> DataFrame:
@@ -116,13 +121,10 @@ def merge_indexes(
         srcs.append(cat)
 
     t0 = time.monotonic()
-    # hybrid payload feed (r6): when the union of source tombstones fits
-    # a task closure, postings never flatten into per-row form — the
-    # stats pass reads per-block tf partials and the re-blockify ships
-    # single-salt terms' blocks through the exchange still encoded
-    # (builder._payload_blockify). Otherwise the original flat-decode
-    # path runs (its anti-join handles tombstone sets of any size).
-    tomb = builder._collect_tombstones(srcs, spark)
+    # hybrid feed when the union of source tombstones fits a driver
+    # collect; otherwise the flat decode (its anti-join handles tombstone
+    # sets of any size)
+    tomb = collect_tombstones([tombstone_bounds(c, spark) for c in srcs])
     flat = None
     if tomb is not None:
         blocks_all = reduce(
@@ -187,26 +189,14 @@ def merge_indexes(
     ).persist()
 
     dict_slice = term_dict.select(
-        "term_id",
-        F.greatest(
-            F.lit(1),
-            F.ceil(F.col("df") / F.lit(cfg.max_group_postings)),
-        ).cast("long").alias("n_salts"),
-    )
+        "term_id", builder._n_salts(F.col("df"), cfg))
     if tomb is not None:
-        merged = builder._payload_blockify(
-            blocks_all, dict_slice, term_dict.select("term_id", "idf"),
-            avgdl, cfg, tomb,
-        )
+        rows = builder._hybrid_rows(blocks_all, dict_slice)
     else:
-        enriched = flat.join(F.broadcast(dict_slice), "term_id").select(
-            "term_id", "pid", "tf", "doclen",
-            F.pmod(F.xxhash64("pid"), F.col("n_salts")).alias("salt"),
-        )
-        merged = builder._salted_blockify(
-            enriched, avgdl, cfg,
-            idf_table=term_dict.select("term_id", "idf"),
-        )
+        rows = builder._salted(flat, dict_slice)
+    merged = builder._blockify(rows, avgdl, cfg,
+                               idf_table=term_dict.select("term_id", "idf"),
+                               tomb=tomb)
     # overlap the three stats-table writes with the postings write (none
     # depends on the postings; their tasks back-fill the write's tail —
     # the Indexer's r6 finalize discipline). Manifest needs the written

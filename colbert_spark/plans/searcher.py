@@ -28,7 +28,7 @@ in-process (server.py:16-44):
 
 It falls back to search_all when the catalog has no plain-file layout
 (IcebergIndexCatalog.read_arrow is None) or when the tombstones are held
-only as a DataFrame (past _TOMBSTONE_GATHER_MAX rows).
+only as a DataFrame (past TOMBSTONE_COLLECT_MAX rows).
 
 The reference's k-dependent funnel knobs (ncells/threshold/ndocs,
 searcher.py:106-127) have no free parameters here: block-max pruning is
@@ -46,7 +46,11 @@ from pyspark.sql import DataFrame, SparkSession
 from colbert_spark.functions import analysis
 from colbert_spark.operators import wand
 from colbert_spark.plans.config import ColBERTConfig
-from colbert_spark.sources.catalog import make_catalog, posting_buckets
+from colbert_spark.sources.catalog import (
+    collect_tombstones,
+    make_catalog,
+    posting_buckets,
+)
 from colbert_spark.sources.ranking import Ranking
 
 
@@ -73,22 +77,15 @@ class Searcher:
         self.term_dict.count()  # materialize once
         self._load_tombstones()
 
-    #: past this many tombstones, the exclusion set no longer rides the
-    #: gather kernel's closure as a driver numpy array (per-task ship of a
-    #: multi-MB array + driver memory) — it stays a DataFrame and search
-    #: runs in scatter mode with a distributed anti-join instead
-    _TOMBSTONE_GATHER_MAX = 100_000
-
     def _load_tombstones(self) -> None:
         """Removed pids (IndexUpdater.remove analog) — excluded at decode,
         epoch-bounded: each row is (pid, before_epoch) and the pid is
         dropped only from blocks whose epoch < before_epoch (a re-added
         pid's newer postings score normally).
 
-        Small sets → driver numpy pair (gather kernel filters after
-        decode). Large sets → DataFrame only (forces scatter)."""
-        import numpy as np
-
+        Up to TOMBSTONE_COLLECT_MAX rows → driver numpy pair (the kernels
+        filter after decode). Larger sets → DataFrame only (forces
+        scatter, whose anti-join handles any size)."""
         from colbert_spark.plans.index_updater import load_tombstones
 
         self.tombstones = None          # (sorted pids, aligned befores)
@@ -97,15 +94,9 @@ class Searcher:
         if tomb is None:
             return
         tomb = tomb.select("pid", "before_epoch")
-        if tomb.limit(self._TOMBSTONE_GATHER_MAX + 1).count() \
-                > self._TOMBSTONE_GATHER_MAX:
+        self.tombstones = collect_tombstones([tomb])
+        if self.tombstones is None:
             self.tombstones_df = tomb
-            return
-        rows = tomb.collect()
-        pids = np.array([r["pid"] for r in rows], dtype=np.int64)
-        befores = np.array([r["before_epoch"] for r in rows], dtype=np.int64)
-        order = np.argsort(pids)
-        self.tombstones = (pids[order], befores[order])
 
     # -- query encoding (lexical analog of Searcher.encode) ----------------
     def _query_terms(self, queries: DataFrame) -> DataFrame:

@@ -32,6 +32,8 @@ import json
 import os
 from pathlib import Path
 
+import numpy as np
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 POSTINGS_SCHEMA = (
@@ -46,6 +48,50 @@ def posting_buckets(term_ids, index_partitions: int) -> list[int]:
     Python's % of a positive modulus is Spark's pmod, so negative
     (xxhash64) ids of appended terms land where the builder wrote them."""
     return sorted({int(t) % index_partitions for t in term_ids})
+
+
+#: past this many tombstone rows, readers keep the set as a DataFrame
+#: (distributed anti-join) instead of collecting it into a driver-side
+#: numpy pair that rides kernel closures
+TOMBSTONE_COLLECT_MAX = 100_000
+
+
+def tombstone_bounds(catalog, spark: SparkSession) -> DataFrame | None:
+    """(pid, before_epoch) of an index's tombstones, or None: the pid's
+    postings drop from blocks whose epoch (block_id >> 32) is below
+    before_epoch. A pre-epoch (pre-r5) table excludes every epoch —
+    coalescing once is the documented migration path, so the folds read
+    through here, while IndexUpdater and Searcher reject such a table
+    (index_updater.load_tombstones)."""
+    if not catalog.table_exists("tombstones"):
+        return None
+    t = catalog.read(spark, "tombstones")
+    if "before_epoch" not in t.columns:
+        t = t.withColumn("before_epoch", F.lit(1 << 62))
+    return t.select("pid", "before_epoch")
+
+
+def collect_tombstones(frames) -> tuple[np.ndarray, np.ndarray] | None:
+    """(sorted pids, aligned before_epochs) of the union of (pid,
+    before_epoch) frames (None entries skip), one bounded collect per
+    frame; None when the union passes TOMBSTONE_COLLECT_MAX rows. A pid
+    listed twice keeps its largest bound, as an anti-join would. Pid
+    spaces of merged sources are disjoint (guarded upstream), so one flat
+    union is sound."""
+    rows = []
+    for t in frames:
+        if t is None:
+            continue
+        rows += t.limit(TOMBSTONE_COLLECT_MAX + 1).collect()
+        if len(rows) > TOMBSTONE_COLLECT_MAX:
+            return None
+    pids = np.fromiter((r["pid"] for r in rows), np.int64, len(rows))
+    eps = np.fromiter((r["before_epoch"] for r in rows), np.int64, len(rows))
+    order = np.lexsort((eps, pids))
+    pids, eps = pids[order], eps[order]
+    last = np.ones(pids.size, dtype=bool)
+    last[:-1] = pids[1:] != pids[:-1]
+    return pids[last], eps[last]
 
 
 class IndexCatalog:

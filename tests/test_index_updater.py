@@ -13,6 +13,7 @@ from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.plans.index_updater import IndexUpdater
 from colbert_spark.plans.indexer import Indexer
 from colbert_spark.plans.searcher import Searcher
+from colbert_spark.sources import catalog as catalog_mod
 from colbert_spark.sources.catalog import IndexCatalog
 from colbert_spark.sources.datagen import gen_docs_pdf, gen_queries_pdf
 from tests.equivalence import EDGE_QUERIES, assert_equivalent_views
@@ -94,7 +95,7 @@ def test_point_search_equals_batch_across_index_states(spark, env):
 
 def test_point_search_with_dataframe_tombstones_matches(spark, env,
                                                         monkeypatch):
-    """Past _TOMBSTONE_GATHER_MAX the tombstones live only as a DataFrame;
+    """Past TOMBSTONE_COLLECT_MAX the tombstones live only as a DataFrame;
     search() then runs through search_all and still answers the same."""
     cfg, docs, queries = env
     texts = [r["text"] for r in queries.collect()][:4]
@@ -102,7 +103,7 @@ def test_point_search_with_dataframe_tombstones_matches(spark, env,
     local = Searcher("u1", spark, cfg)
     assert local.tombstones is not None
     want = [local.search(t, k=10) for t in texts]
-    monkeypatch.setattr(Searcher, "_TOMBSTONE_GATHER_MAX", 5)
+    monkeypatch.setattr(catalog_mod, "TOMBSTONE_COLLECT_MAX", 5)
     s = Searcher("u1", spark, cfg)
     assert s.tombstones_df is not None
     assert [s.search(t, k=10) for t in texts] == want
@@ -197,7 +198,7 @@ def test_readd_path_avoids_driver_collect(spark, env, monkeypatch):
 
 
 def test_large_tombstone_set_forces_scatter(spark, env, monkeypatch):
-    """Past _TOMBSTONE_GATHER_MAX the exclusion set must stay a DataFrame
+    """Past TOMBSTONE_COLLECT_MAX the exclusion set must stay a DataFrame
     (distributed anti-join) instead of riding the gather kernel's closure
     as a driver numpy array — and rankings must be identical."""
     cfg, docs, queries = env
@@ -211,7 +212,7 @@ def test_large_tombstone_set_forces_scatter(spark, env, monkeypatch):
                         .df.collect()))
     assert all(pid not in set(removed) for (_, pid, _, _) in expect)
 
-    monkeypatch.setattr(Searcher, "_TOMBSTONE_GATHER_MAX", 5)
+    monkeypatch.setattr(catalog_mod, "TOMBSTONE_COLLECT_MAX", 5)
     s = Searcher("u1", spark, cfg)
     assert s.tombstones is None and s.tombstones_df is not None
     r = s.search_all(queries, k=10, mode="gather")
@@ -352,6 +353,51 @@ def test_purge_bounded_file_subset(spark, env):
     for crc in post_dir.rglob(".*.crc"):
         paired = crc.parent / crc.name[1:-len(".crc")]
         assert paired.exists(), f"orphan checksum sidecar {crc}"
+
+
+def test_purge_rewritten_blocks_are_consistent(spark, env):
+    """A forced surgical purge rewrites blocks in place: every block of a
+    rewritten file decodes to pids outside the purge set, its metadata
+    matches the decoded payload, and its block max is exactly the BM25
+    formula over its survivors."""
+    import pathlib as _pl
+
+    import pandas as pd
+
+    from colbert_spark.functions import codec
+
+    cfg, docs, queries = env
+    cat = IndexCatalog(str(_pl.Path(cfg.index_root) / "u1"))
+    up = IndexUpdater("u1", spark, cfg)
+    sizes_before = {
+        (r["term_id"], r["block_id"]): r["num_postings"]
+        for r in cat.read(spark, "postings")
+        .select("term_id", "block_id", "num_postings").collect()
+    }
+    files_before = set(_postings_files(cat))
+    purged = {3, 50, 51, 120}
+    out = builder.purge_pids(cat, cfg, up.avgdl, sorted(purged))
+    assert out["files_rewritten"] > 0
+    new_files = set(_postings_files(cat)) - files_before
+    assert new_files
+    idf = dict(cat.read(spark, "term_dict").select("term_id", "idf")
+               .collect())
+    k1, b, avgdl = cfg.k1, cfg.b, up.avgdl
+    shrunk = 0
+    for f in new_files:
+        for r in pd.read_parquet(f).itertuples():
+            p = codec.decode_pids_auto(bytes(r.pids))
+            tf = codec.decode_tfs_auto(bytes(r.tfs)).astype(np.float64)
+            dl = codec.decode_tfs_auto(bytes(r.dls)).astype(np.float64)
+            assert not purged & set(p.tolist())
+            assert r.num_postings == p.size == tf.size == dl.size
+            assert (r.first_pid, r.last_pid) == (p[0], p[-1])
+            assert r.enc_bytes == len(r.pids) + len(r.tfs) + len(r.dls)
+            scores = idf[r.term_id] * tf * (k1 + 1.0) / (
+                tf + k1 * (1.0 - b + b * dl / avgdl))
+            assert r.max_block_score == scores.max()
+            shrunk += r.num_postings < sizes_before[(r.term_id, r.block_id)]
+    assert shrunk > 0  # the check covered re-encoded blocks, not only copies
 
 
 def test_purge_over_threshold_falls_back_to_coalesce(spark, env):

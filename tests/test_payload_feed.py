@@ -1,9 +1,10 @@
-"""The r6 hybrid payload feed (builder._payload_blockify +
+"""The r6 hybrid payload feed (builder._hybrid_rows +
 builder.block_term_stats) must be BYTE-IDENTICAL to the flat-decode
 path it replaces: same posting blocks (payload bytes included), same
 merged statistics — across removals, epoch re-adds, appends and
 multi-salt (hot) terms. The flat path is forced by monkeypatching
-builder._collect_tombstones to report "too large" (None)."""
+catalog.TOMBSTONE_COLLECT_MAX to 0, so collect_tombstones reports "too
+large" (None)."""
 
 from __future__ import annotations
 
@@ -16,6 +17,7 @@ from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.plans.index_updater import IndexUpdater
 from colbert_spark.plans.indexer import Indexer
 from colbert_spark.plans.merger import merge_indexes
+from colbert_spark.sources import catalog as catalog_mod
 from colbert_spark.sources.catalog import make_catalog
 from colbert_spark.sources.datagen import gen_docs_pdf
 
@@ -70,8 +72,7 @@ def test_hybrid_coalesce_byte_identical_to_flat(spark, tmp_path,
     _lifecycle(spark, cfg_h, "hyb", docs)
     hyb = _postings_rows(spark, cfg_h, "hyb")
 
-    monkeypatch.setattr(builder, "_collect_tombstones",
-                        lambda catalogs, s: None)
+    monkeypatch.setattr(catalog_mod, "TOMBSTONE_COLLECT_MAX", 0)
     cfg_f = _mk_cfg(tmp_path, "flat")
     _lifecycle(spark, cfg_f, "flat", docs)
     flat = _postings_rows(spark, cfg_f, "flat")
@@ -97,8 +98,7 @@ def test_hybrid_merge_byte_identical_to_flat(spark, tmp_path, monkeypatch):
         map(tuple,
             make_catalog(c_hyb).read(spark, "term_dict").collect()))
 
-    monkeypatch.setattr(builder, "_collect_tombstones",
-                        lambda catalogs, s: None)
+    monkeypatch.setattr(catalog_mod, "TOMBSTONE_COLLECT_MAX", 0)
     merge_indexes(spark, ["s_a", "s_b"], "m_flat", cfg)
     flat = _postings_rows(spark, cfg, "m_flat")
     c_flat = ColBERTConfig.from_existing(cfg)
