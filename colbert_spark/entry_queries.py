@@ -6226,10 +6226,9 @@ def q_search_page2_indexed(spark, sf_dir):
     """search_after over the REAL index: page 1 from the indexed
     Searcher, its rank-10 rows as cursors, page 2 via
     search_all(after=...) — exercising the cursor path through the
-    postings scan and wand kernels (gather disables the MaxScore
-    update-only skip under a cursor; scatter prunes before the rank
-    window). Must hash-match ranks 11-20 of the untouched deep BM25
-    oracle, rebased."""
+    postings scan and the scatter plan, which prunes at or above the
+    cursor before the rank window. Must hash-match ranks 11-20 of the
+    untouched deep BM25 oracle, rebased."""
     s = _indexed_searcher(spark, sf_dir)
     q = _query_df(spark)
     page1 = s.search_all(q, k=10).df

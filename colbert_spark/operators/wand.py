@@ -16,15 +16,14 @@ metadata:
      metadata + range check = the skip). Every surviving accumulator ends
      with its EXACT BM25 score, so the final ranking is exact.
 
-Two distributed layouts:
-  - gather  (`topk_gather`): shuffle each query's candidate blocks to one
-    group (groupBy qid → applyInPandas kernel). True skipping, lowest
-    latency per query; right when queries ≪ corpus.
-  - scatter (`topk_scatter`): score blocks in place where the index lives
+One kernel and one batch plan:
+  - `score_query_blocks`: the MaxScore kernel above, over ONE query's
+    blocks on the driver (Searcher.search). True skipping.
+  - `topk_scatter`: score blocks in place where the index lives
     (mapInPandas over term-bucketed blocks, no postings shuffle), then
-    groupBy(qid, pid).sum + window rank. No skipping but no block
-    duplication per query; right for huge query batches (search_all at
-    scale, where the same head term appears in thousands of queries).
+    groupBy(qid, pid).sum + window rank (Searcher.search_all). No
+    skipping, but each block is decoded once however many queries share
+    its term.
 Both return identical rankings (tested for equivalence).
 """
 
@@ -53,7 +52,6 @@ def _term_scores(tfs: np.ndarray, dls: np.ndarray, idf: float,
 
 def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
                        excluded: "tuple[np.ndarray, np.ndarray] | None" = None,
-                       after: "tuple[float, int] | None" = None,
                        allowed: "np.ndarray | None" = None,
                        ) -> tuple[np.ndarray, np.ndarray]:
     """MaxScore kernel for ONE query's blocks → (top pids, top scores).
@@ -66,16 +64,6 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
     tombstones. A pid is dropped only from blocks whose epoch
     (block_id >> 32) < its before_epoch, so a re-added pid's newer
     postings survive while its removed-era postings are excluded.
-
-    after: (after_score, after_pid) keyset cursor — return the top-k
-    strictly after it in (-score, pid) order (search_after pagination).
-    A cursor DISABLES the MaxScore update-only skip: the skip's
-    threshold comes from the k best accumulated candidates, but under a
-    cursor a high partial score may belong to a doc the cursor will
-    exclude, so that threshold can overestimate the true k-th ELIGIBLE
-    score and wrongly prune page-2 docs. Paginated queries therefore
-    score every candidate posting exactly (the filter applies to the
-    final rounded scores, matching the round-6-then-rank contract).
 
     allowed: sorted unique pid array — the allow-list (F3). Postings of
     other pids are dropped right after decode, like tombstones, so every
@@ -100,7 +88,7 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
             -np.inf if acc_pids.size < k
             else np.partition(acc_scores, acc_scores.size - k)[acc_scores.size - k]
         )
-        essential = after is not None or suffix_ub[i] >= theta
+        essential = suffix_ub[i] >= theta
         new_p, new_s = [acc_pids], [acc_scores]
         for fp, lp, bid, pb, tb, db in zip(
             g["first_pid"], g["last_pid"], g["block_id"], g["pids"],
@@ -146,51 +134,10 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
     if acc_pids.size == 0:
         return acc_pids, acc_scores
     rounded = np.round(acc_scores, SCORE_DECIMALS)
-    if after is not None:
-        a_s, a_p = after
-        keep = (rounded < a_s) | ((rounded == a_s) & (acc_pids > a_p))
-        acc_pids, rounded = acc_pids[keep], rounded[keep]
-        if acc_pids.size == 0:
-            return acc_pids, rounded
     kk = min(k, acc_pids.size)
     # total order (-score, pid), reference server.py:34
     top = np.lexsort((acc_pids, -rounded))[:kk]
     return acc_pids[top], rounded[top]
-
-
-def topk_gather(query_blocks: DataFrame, k: int, avgdl: float,
-                excluded: "tuple[np.ndarray, np.ndarray] | None" = None,
-                after: "dict[int, tuple[float, int]] | None" = None,
-                ) -> DataFrame:
-    """query_blocks: (qid, term_id, block_id, idf, first_pid, last_pid,
-    max_block_score, pids, tfs, dls) → ranking(qid, pid, rank, score).
-
-    One applyInPandas group per qid; the kernel does the skipping.
-    excluded: (sorted pids, aligned before_epochs) — epoch-aware
-    tombstones dropped after decode (see score_query_blocks).
-    after: {qid: (after_score, after_pid)} keyset cursors — a cursor-
-    bearing qid returns its next page (see score_query_blocks; cursors
-    are per-query-batch tiny, so the dict rides the task closure).
-    """
-    excluded = (
-        None if excluded is None or excluded[0].size == 0 else excluded
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["qid"].iloc[0])
-        pids, scores = score_query_blocks(
-            pdf, k, avgdl, excluded=excluded,
-            after=None if after is None else after.get(qid))
-        return pd.DataFrame(
-            {
-                "qid": qid,
-                "pid": pids,
-                "rank": np.arange(1, pids.size + 1, dtype=np.int32),
-                "score": scores,
-            }
-        )
-
-    return query_blocks.groupBy("qid").applyInPandas(kernel, schema=RANKING_SCHEMA)
 
 
 def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
@@ -289,7 +236,7 @@ def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
         # keyset cursor (search_after): prune everything at or above the
         # cursor BEFORE the rank window — page cost O(page), not O(depth).
         # Exact rounded scores are already in hand here, so no pruning
-        # soundness caveat applies (contrast the gather kernel).
+        # soundness caveat applies.
         cur = after.select("qid", "after_score", "after_pid")
         agg = agg.join(F.broadcast(cur), "qid").filter(
             (F.col("score") < F.col("after_score"))

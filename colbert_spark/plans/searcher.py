@@ -12,13 +12,12 @@ Where the reference loops queries serially through dense_search
     postings scan: bucket ∈ query buckets AND term_id ∈ query terms
       → partition pruning (bucket=) + row-group min/max pruning (term_id);
       only the query's posting blocks are ever read.
-    gather mode:  blocks ⋈ broadcast(qterms) → groupBy(qid) applyInPandas
-                  MaxScore kernel (block-max skipping) → exact top-k.
-    scatter mode: decode once per block, broadcast-join idf, relational agg.
+    wand.topk_scatter: decode each block once where it lives, broadcast-
+      join the query idfs, (qid, pid) sum → window rank → exact top-k.
 
-search (one query) runs the same pruned read and the same MaxScore kernel
-on the driver, with zero Spark jobs — as the reference serves search
-in-process (server.py:16-44):
+search (one query) runs the same pruned read on the driver and scores it
+with the MaxScore kernel (block-max skipping), with zero Spark jobs — as
+the reference serves search in-process (server.py:16-44):
 
     python_tokenize(text, query_maxlen), distinct
     → pyarrow term_dict read, term ∈ query terms     → (term_id, idf)
@@ -28,7 +27,9 @@ in-process (server.py:16-44):
 
 It falls back to search_all when the catalog has no plain-file layout
 (IcebergIndexCatalog.read_arrow is None) or when the tombstones are held
-only as a DataFrame (past TOMBSTONE_COLLECT_MAX rows).
+only as a DataFrame (past TOMBSTONE_COLLECT_MAX rows). These are two
+independent implementations of one ranking contract, each the other's
+test reference: the kernel answers search, the scatter plan search_all.
 
 The reference's k-dependent funnel knobs (ncells/threshold/ndocs,
 searcher.py:106-127) have no free parameters here: block-max pruning is
@@ -83,9 +84,9 @@ class Searcher:
         dropped only from blocks whose epoch < before_epoch (a re-added
         pid's newer postings score normally).
 
-        Up to TOMBSTONE_COLLECT_MAX rows → driver numpy pair (the kernels
-        filter after decode). Larger sets → DataFrame only (forces
-        scatter, whose anti-join handles any size)."""
+        Up to TOMBSTONE_COLLECT_MAX rows → driver numpy pair (the kernel
+        filters after decode). Larger sets → DataFrame only (search then
+        runs the scatter plan, whose anti-join handles any size)."""
         from colbert_spark.plans.index_updater import load_tombstones
 
         self.tombstones = None          # (sorted pids, aligned befores)
@@ -100,12 +101,10 @@ class Searcher:
 
     # -- query encoding (lexical analog of Searcher.encode) ----------------
     def _query_terms(self, queries: DataFrame) -> DataFrame:
-        """(qid, term_id, idf, df) for in-dictionary query terms. df rides
-        along so ONE collect of this (tiny) frame answers both the
-        auto-mode decision and the scan-pruning term list. A term repeated
-        in a query repeats here: search_all drops repeats after that
-        collect, which spares a shuffle (a query holds at most
-        query_maxlen tokens)."""
+        """(qid, term_id, idf) for in-dictionary query terms. A term
+        repeated in a query repeats here: search_all drops repeats after
+        its one collect of this (tiny) frame, which spares a shuffle (a
+        query holds at most query_maxlen tokens)."""
         qt = queries.select(
             "qid",
             F.explode(
@@ -113,8 +112,8 @@ class Searcher:
             ).alias("term"),
         )
         return qt.join(
-            self.term_dict.select("term", "term_id", "idf", "df"), "term"
-        ).select("qid", "term_id", "idf", "df")
+            self.term_dict.select("term", "term_id", "idf"), "term"
+        ).select("qid", "term_id", "idf")
 
     # beyond this many distinct query terms, an IN-list stops being a sane
     # pushdown predicate; switch to a broadcast semi-join (bucket pruning
@@ -131,33 +130,24 @@ class Searcher:
         )
         if len(tids) <= self._ISIN_LIMIT:
             return scan.filter(F.col("term_id").isin(tids))
+        # from pandas, a local relation: no Python task re-serializes it
         wanted = self.spark.createDataFrame(
-            [(int(t),) for t in tids], "term_id long"
-        )
+            pd.DataFrame({"term_id": tids}, dtype="int64"), "term_id long")
         return scan.join(F.broadcast(wanted), "term_id", "left_semi")
 
     # -- public API ---------------------------------------------------------
-    #: auto mode switches to scatter beyond these (query count, head-term df)
-    _AUTO_SCATTER_QUERIES = 64
-    _AUTO_SCATTER_DF = 1_000_000
-
     def search_all(
         self,
         queries: DataFrame | dict[int, str],
         k: int = 10,
-        mode: str = "auto",
         qid_to_pids: DataFrame | None = None,
         allow_small: bool = False,
         after: DataFrame | None = None,
     ) -> Ranking:
-        """Batch retrieval → Ranking. mode ∈ {auto, gather, scatter}.
-
-        gather ships each query's candidate blocks to one group (block-max
-        skipping, lowest latency) — but a head term's ENTIRE posting list
-        lands in every matching query's group, so at scale a hot term ×
-        many queries is a shuffle amplifier. auto therefore picks scatter
-        (decode-once, no per-query block duplication) for large batches or
-        when any query term's df is huge; gather otherwise.
+        """Batch retrieval → Ranking, through wand.topk_scatter: each
+        candidate block is decoded once however many queries share its
+        term, so a head term in thousands of queries is not copied per
+        query.
 
         qid_to_pids: optional (qid, pid) allow-list DataFrame (F3 semantics:
         restrict each query's search space before ranking). allow_small=True
@@ -170,11 +160,8 @@ class Searcher:
         cursor-bearing qids are searched (a cursor means "continue this
         query"; exhausted queries simply have no cursor), and each
         returns its next page strictly after the cursor in (-score, pid)
-        order, rank rebased 1..k. Scatter prunes at or above the cursor
-        BEFORE the rank window (O(page) cost); gather filters exact
-        rounded scores in the kernel with MaxScore's update-only skip
-        disabled (the cursor breaks that skip's threshold soundness —
-        see wand.score_query_blocks). Same row contract as
+        order, rank rebased 1..k. The plan prunes at or above the cursor
+        BEFORE the rank window (O(page) cost). Same row contract as
         brute.bm25_search_after (equivalence pytest-proven).
 
         k < 1 raises ValueError before any job runs.
@@ -185,71 +172,37 @@ class Searcher:
             queries = self.spark.createDataFrame(pd.DataFrame(
                 {"qid": list(queries), "text": list(queries.values())}
             ).astype({"qid": "int64", "text": "object"}), "qid long, text string")
-        after_rows = None
         if after is not None:
             after = after.select("qid", "after_score", "after_pid")
-            # cursors are per-query-batch tiny; one collect serves both the
-            # query restriction and the gather kernel's closure dict
-            after_rows = after.collect()
-            paging = self.spark.createDataFrame(
-                [(int(r["qid"]),) for r in after_rows], "qid long")
-            queries = queries.join(F.broadcast(paging), "qid", "left_semi")
+            # cursors are per-query-batch tiny
+            queries = queries.join(F.broadcast(after.select("qid")), "qid",
+                                   "left_semi")
         # the query terms are broadcast anyway, so they go back in as a
         # local relation rather than a cache that would outlive the call
         qrows = self._query_terms(queries).toPandas().drop_duplicates(
             ["qid", "term_id"], ignore_index=True)
-        tids = sorted(set(qrows["term_id"].tolist()))
-        if mode == "auto":
-            big = (qrows["qid"].nunique() > self._AUTO_SCATTER_QUERIES
-                   or (qrows["df"].max() if len(qrows) else 0)
-                   > self._AUTO_SCATTER_DF)
-            mode = "scatter" if big else "gather"
-        blocks = self._candidate_blocks(tids)
+        blocks = self._candidate_blocks(sorted(set(qrows["term_id"].tolist())))
         if blocks is None:
             empty = self.spark.createDataFrame([], wand.RANKING_SCHEMA)
-            return Ranking(empty, self._provenance(k, mode))
-        qterms = self.spark.createDataFrame(qrows)
-
-        tomb_df, tomb_small = None, True
-        if self.tombstones_df is not None:
-            # tombstone set too large for the gather closure — scatter's
-            # distributed anti-join is the only scale-safe exclusion
-            tomb_df, tomb_small, mode = self.tombstones_df, False, "scatter"
-        elif self.tombstones is not None and self.tombstones[0].size:
-            tomb_df = self.spark.createDataFrame(pd.DataFrame(
+            return Ranking(empty, self._provenance(k))
+        tomb_df, tomb_small = self.tombstones_df, False
+        if self.tombstones is not None and self.tombstones[0].size:
+            tomb_df, tomb_small = self.spark.createDataFrame(pd.DataFrame(
                 {"pid": self.tombstones[0], "before_epoch": self.tombstones[1]}
-            ))
-        if qid_to_pids is not None or mode == "scatter":
-            ranking = wand.topk_scatter(blocks, qterms, k, self.avgdl,
-                                        qid_to_pids=qid_to_pids,
-                                        tombstones=tomb_df,
-                                        allow_small=allow_small,
-                                        tombstones_small=tomb_small,
-                                        after=after)
-        else:
-            qblocks = blocks.join(F.broadcast(qterms), "term_id").select(
-                "qid", "term_id", "block_id", "idf", "first_pid", "last_pid",
-                "max_block_score", "pids", "tfs", "dls",
-            )
-            cursor_map = None
-            if after_rows is not None:
-                cursor_map = {
-                    int(r["qid"]): (float(r["after_score"]),
-                                    int(r["after_pid"]))
-                    for r in after_rows
-                }
-            ranking = wand.topk_gather(qblocks, k, self.avgdl,
-                                       excluded=self.tombstones,
-                                       after=cursor_map)
-        return Ranking(ranking, self._provenance(k, mode))
+            )), True
+        ranking = wand.topk_scatter(blocks, self.spark.createDataFrame(qrows),
+                                    k, self.avgdl, qid_to_pids=qid_to_pids,
+                                    tombstones=tomb_df,
+                                    allow_small=allow_small,
+                                    tombstones_small=tomb_small, after=after)
+        return Ranking(ranking, self._provenance(k))
 
     def search(self, text: str, k: int = 10,
                pids: list[int] | None = None) -> tuple[list, list, list]:
         """Single query → (pids, ranks, scores) exactly like searcher.py:131.
 
         Runs on the driver with zero Spark jobs (module docstring), and
-        returns row-for-row what search_all(mode="gather"/"scatter") does
-        for the same query. pids: optional allow-list; the ranking holds
+        returns row-for-row what search_all does for the same query. pids: optional allow-list; the ranking holds
         only these pids, and an empty list allows nothing (→ empty
         result). k < 1 raises ValueError before any I/O.
         """
@@ -316,12 +269,12 @@ class Searcher:
         return ([int(p) for p in top], list(range(1, top.size + 1)),
                 [float(s) for s in scores])
 
-    def _provenance(self, k: int, mode: str) -> dict:
+    def _provenance(self, k: int) -> dict:
         return {
             "engine": "colbert_spark",
             "index": str(self.catalog.root),
             "k": k,
-            "mode": mode,
+            "mode": "scatter",  # the one batch plan; kept for .meta shape
             "config": asdict(self.config),
         }
 

@@ -1,8 +1,9 @@
 """Point search ≡ batch search, row for row.
 
-`Searcher.search` answers one query on the driver; `search_all` answers a
-batch through Spark in gather or scatter mode. All three must return the
-same pids, ranks and exact scores for the same query, allow-list and k.
+`Searcher.search` answers one query on the driver with the MaxScore
+kernel; `search_all` answers a batch through Spark with the scatter plan.
+Both must return the same pids, ranks and exact scores for the same
+query, allow-list and k.
 """
 
 from __future__ import annotations
@@ -33,29 +34,21 @@ def assert_point_equals_batch(spark, searcher, texts: list[str], k: int,
                               allow: dict[int, list[int]] | None = None,
                               ) -> dict[int, tuple[list, list, list]]:
     """search(texts[q], k, pids=allow.get(q)) must equal qid q's rows of
-    search_all(mode="gather") and search_all(mode="scatter") over the
-    whole batch (with an allow-list both modes run the scatter plan, so
-    it runs once). allow: {qid: non-empty pid allow-list}. Returns the
-    point results by qid."""
+    search_all over the whole batch. allow: {qid: non-empty pid
+    allow-list}. Returns the point results by qid."""
     qmap = dict(enumerate(texts))
     qid_to_pids = None
     if allow:
         qid_to_pids = spark.createDataFrame(
             [(q, int(p)) for q, ps in allow.items() for p in ps],
             "qid long, pid long")
-    modes = ("scatter",) if allow else ("gather", "scatter")
-    batch = {
-        mode: _by_qid(searcher.search_all(qmap, k=k, mode=mode,
-                                          qid_to_pids=qid_to_pids)
-                      .df.collect())
-        for mode in modes
-    }
+    batch = _by_qid(searcher.search_all(qmap, k=k, qid_to_pids=qid_to_pids)
+                    .df.collect())
     point = {}
     for q, text in qmap.items():
         point[q] = searcher.search(text, k=k,
                                    pids=(allow or {}).get(q))
-        for mode, got in batch.items():
-            assert point[q] == got.get(q, ([], [], [])), (mode, k, text)
+        assert point[q] == batch.get(q, ([], [], [])), (k, text)
     return point
 
 

@@ -1,6 +1,7 @@
 """Indexer + Searcher end-to-end: the real (varint/block-max) engine must be
-rank-identical to the brute-force scorer AND the Python oracle; gather and
-scatter modes must agree; overwrite modes must follow indexer.py:60-82."""
+rank-identical to the brute-force scorer AND the Python oracle; point
+search must equal batch search; overwrite modes must follow
+indexer.py:60-82."""
 
 from __future__ import annotations
 
@@ -64,18 +65,36 @@ def test_gather_matches_oracle(spark, built):
             assert gs == pytest.approx(es, abs=1e-6)
 
 
-def test_scatter_equals_gather(spark, built):
-    _, queries, _, _, searcher = built
-    a = _todict(searcher.search_all(queries, k=10, mode="gather").df.collect())
-    b = _todict(searcher.search_all(queries, k=10, mode="scatter").df.collect())
-    assert a == b
-
-
 def test_index_engine_equals_brute(spark, built):
     docs, queries, _, _, searcher = built
     brute = _todict(bm25_topk(docs, queries, k=10).collect())
     eng = _todict(searcher.search_all(queries, k=10).df.collect())
     assert eng == brute
+
+
+def test_term_semi_join_equals_in_list(spark, built, monkeypatch):
+    """Past _ISIN_LIMIT distinct query terms the postings scan keeps its
+    term ids by a broadcast semi-join against a local relation instead
+    of an IN-list; the ranking is row-identical."""
+    _, queries, _, _, searcher = built
+    in_list = sorted(map(tuple, searcher.search_all(queries, k=10)
+                         .df.collect()))
+    monkeypatch.setattr(Searcher, "_ISIN_LIMIT", 1)
+    ranking = searcher.search_all(queries, k=10).df
+    plan = ranking._jdf.queryExecution().executedPlan().toString()
+    assert "LeftSemi" in plan and "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert sorted(map(tuple, ranking.collect())) == in_list
+
+
+def test_search_all_has_one_plan(spark, built):
+    """search_all has no mode= any more: passing one fails at the call
+    instead of being ignored, and the provenance still names the one plan
+    so .meta sidecars keep their shape."""
+    _, queries, _, _, searcher = built
+    with pytest.raises(TypeError, match="mode"):
+        searcher.search_all(queries, k=10, mode="gather")
+    assert searcher.search_all(queries, k=10).provenance["mode"] == "scatter"
 
 
 def test_single_query_api(spark, built):
@@ -99,7 +118,7 @@ def test_pid_allowlist_filter(spark, built):
 
 
 def test_point_search_equals_batch_modes(spark, built):
-    """search() (driver-local) ≡ search_all gather ≡ scatter row for row on
+    """search() (driver-local) ≡ search_all (scatter) row for row on
     the fresh index: regular and edge queries, k above the hit count,
     allow-lists with an absent pid and a duplicate."""
     _, _, _, queries_pdf, searcher = built
@@ -123,9 +142,8 @@ def test_k_below_one_rejected_before_any_job(spark, built):
         for k in (0, -1):
             with pytest.raises(ValueError, match="k must be >= 1"):
                 searcher.search(queries_pdf["text"].iloc[0], k=k)
-            for mode in ("gather", "scatter"):
-                with pytest.raises(ValueError, match="k must be >= 1"):
-                    searcher.search_all(queries, k=k, mode=mode)
+            with pytest.raises(ValueError, match="k must be >= 1"):
+                searcher.search_all(queries, k=k)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -148,8 +166,7 @@ def test_point_search_runs_no_job_and_nothing_stays_persisted(spark, built):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert sum(1 for pids, _, _ in hits if pids) >= 5
     for _ in range(2):
-        for mode in ("gather", "scatter"):
-            searcher.search_all(queries, k=10, mode=mode).df.collect()
+        searcher.search_all(queries, k=10).df.collect()
         for t in texts:
             searcher.search(t, k=10)
     assert len(sc._jsc.getPersistentRDDs()) == persisted
@@ -177,11 +194,11 @@ def test_point_search_falls_back_without_file_reads(spark, built,
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-def test_search_after_indexed_both_modes(spark, built):
+def test_search_after_indexed(spark, built):
     """Indexed keyset pagination: page 2 via a rank-5 cursor must equal
-    ranks 6-10 of the deep ranking rebased, in BOTH gather and scatter
-    modes, and match brute.bm25_search_after row-for-row. Queries
-    without a cursor are not searched (continue-only contract)."""
+    ranks 6-10 of the deep ranking rebased, and match
+    brute.bm25_search_after row-for-row. Queries without a cursor are
+    not searched (continue-only contract)."""
     import pyspark.sql.functions as F
 
     from colbert_spark.operators.brute import bm25_search_after
@@ -205,13 +222,12 @@ def test_search_after_indexed_both_modes(spark, built):
         if len(rows) >= 5 and q != dropped
         for i in range(min(5, len(rows) - 5)))
 
-    for mode in ("gather", "scatter"):
-        got = sorted(
-            (r.qid, r.rank, r.pid, r.score)
-            for r in searcher.search_all(queries, k=5, mode=mode,
-                                         after=cursors).df.collect())
-        assert got == want, mode
-        assert all(q != dropped for q, *_ in got)
+    got = sorted(
+        (r.qid, r.rank, r.pid, r.score)
+        for r in searcher.search_all(queries, k=5, after=cursors)
+        .df.collect())
+    assert got == want
+    assert all(q != dropped for q, *_ in got)
 
     brute_got = sorted(
         (r.qid, r.rank, r.pid, r.score)
@@ -231,22 +247,6 @@ def test_empty_query_and_oov(spark, built):
     _, _, _, _, searcher = built
     pids, ranks, scores = searcher.search("zzabsent qqmissing", k=5)
     assert pids == [] and ranks == [] and scores == []
-
-
-def test_auto_mode_selects_and_matches(spark, built):
-    _, queries, _, _, searcher = built
-    auto = _todict(searcher.search_all(queries, k=10, mode="auto").df.collect())
-    gather = _todict(searcher.search_all(queries, k=10, mode="gather").df.collect())
-    assert auto == gather
-    # huge batch heuristic: many queries → scatter (results identical anyway)
-    searcher2 = searcher
-    old = searcher2._AUTO_SCATTER_QUERIES
-    try:
-        searcher2._AUTO_SCATTER_QUERIES = 1
-        forced = _todict(searcher2.search_all(queries, k=10, mode="auto").df.collect())
-        assert forced == gather
-    finally:
-        searcher2._AUTO_SCATTER_QUERIES = old
 
 
 def test_degenerate_corpora(spark, tmp_path):

@@ -65,7 +65,7 @@ NEW_TERM_DOCS = [
 
 
 def test_point_search_equals_batch_across_index_states(spark, env):
-    """search() ≡ search_all gather ≡ scatter, row for row, after remove,
+    """search() ≡ search_all, row for row, after remove,
     add of brand-new terms, re-add and coalesce — each read by a freshly
     opened Searcher (the fresh index: test_index_search)."""
     cfg, docs, queries = env
@@ -199,25 +199,22 @@ def test_readd_path_avoids_driver_collect(spark, env, monkeypatch):
 
 def test_large_tombstone_set_forces_scatter(spark, env, monkeypatch):
     """Past TOMBSTONE_COLLECT_MAX the exclusion set must stay a DataFrame
-    (distributed anti-join) instead of riding the gather kernel's closure
-    as a driver numpy array — and rankings must be identical."""
+    (distributed anti-join, unhinted) instead of a driver numpy pair
+    broadcast as a local relation — and rankings must be identical."""
     cfg, docs, queries = env
     removed = list(range(100, 120))
     IndexUpdater("u1", spark, cfg).remove(removed)
 
     base = Searcher("u1", spark, cfg)
     assert base.tombstones is not None  # 20 < default threshold → numpy path
-    expect = sorted(map(tuple,
-                        base.search_all(queries, k=10, mode="gather")
-                        .df.collect()))
+    expect = sorted(map(tuple, base.search_all(queries, k=10).df.collect()))
     assert all(pid not in set(removed) for (_, pid, _, _) in expect)
 
     monkeypatch.setattr(catalog_mod, "TOMBSTONE_COLLECT_MAX", 5)
     s = Searcher("u1", spark, cfg)
     assert s.tombstones is None and s.tombstones_df is not None
-    r = s.search_all(queries, k=10, mode="gather")
-    assert r.provenance["mode"] == "scatter"  # guard overrode gather
-    assert sorted(map(tuple, r.df.collect())) == expect
+    assert sorted(map(tuple, s.search_all(queries, k=10).df.collect())) \
+        == expect
 
 
 # -- epoch re-add + eager purge surgery (r5) ---------------------------------

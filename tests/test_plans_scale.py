@@ -74,7 +74,7 @@ def test_scatter_partials_combine_before_shuffle(spark, built):
     cfg, _ = built
     searcher = Searcher("p1", spark, cfg)
     queries = spark.createDataFrame([(0, "t00000 t00042")], "qid long, text string")
-    ranking = searcher.search_all(queries, k=10, mode="scatter").df
+    ranking = searcher.search_all(queries, k=10).df
     plan = ranking._jdf.queryExecution().executedPlan().toString()
     before_exchange = plan.split("Exchange hashpartitioning(qid")[1:]
     assert before_exchange, "expected a (qid, pid) aggregation exchange"

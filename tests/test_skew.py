@@ -13,6 +13,7 @@ from colbert_spark.plans.indexer import Indexer
 from colbert_spark.plans.searcher import Searcher
 from colbert_spark.sources.catalog import IndexCatalog
 from colbert_spark.sources.datagen import HEAD_TERM, gen_docs_pdf, gen_queries_pdf
+from tests.equivalence import assert_point_equals_batch
 
 
 @pytest.fixture(scope="module")
@@ -84,25 +85,15 @@ def test_skewed_query_is_exact(spark, built):
                [(p, r) for p, r, _ in e], f"qid={qid}"
 
 
-def test_many_queries_sharing_head_term_scatter_equals_gather(spark, built):
+def test_many_queries_sharing_head_term_batch_equals_point(spark, built):
     """The shuffle-amplification scenario: many queries all containing the
-    head term (≥60% df). Scatter (decode-once) and gather (per-query
-    groups) must produce identical rankings — and auto mode must pick
-    scatter for a batch this large."""
+    head term (≥60% df). search_all (scatter, decode-once) and per-query
+    search() (driver MaxScore kernel) must produce identical rows."""
     cfg, _, _ = built
     searcher = Searcher("skew", spark, cfg)
-    queries = spark.createDataFrame(
-        [(q, f"{HEAD_TERM} t{q % 19:05d}") for q in range(100)],
-        "qid long, text string",
-    )
-    g = sorted(searcher.search_all(queries, k=10, mode="gather")
-               .flat_ranking())
-    s = sorted(searcher.search_all(queries, k=10, mode="scatter")
-               .flat_ranking())
-    assert g == s and len(g) > 0
-    auto = searcher.search_all(queries, k=10, mode="auto")
-    assert auto.provenance["mode"] == "scatter"  # 100 queries > threshold
-    assert sorted(auto.flat_ranking()) == g
+    texts = [f"{HEAD_TERM} t{q % 19:05d}" for q in range(100)]
+    point = assert_point_equals_batch(spark, searcher, texts, k=10)
+    assert all(len(pids) == 10 for pids, _, _ in point.values())
 
 
 def test_compaction_of_skewed_index_stays_bounded(spark, tmp_path):

@@ -133,7 +133,11 @@ def test_ledger_stays_bounded_over_many_batches(spark, tmp_path):
     per-batch driver cost."""
     cfg, docs, queries = _env(spark, tmp_path, "st4")
     cat = IndexCatalog(str(pathlib.Path(cfg.index_root) / "st4"))
-    empty = spark.createDataFrame([], "pid long, text string")
+    # an empty micro-batch has nothing to scan (Spark hands foreachBatch
+    # an empty local relation); a frame over a parallelized empty list
+    # would instead run Spark jobs for every emptiness probe
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                  "pid long, text string")
     for bid in range(1000):
         assert _apply_batch(cfg, "st4", empty, bid, "pid", "text",
                             stream_key="ck") is True

@@ -17,6 +17,26 @@ from colbert_spark.sources.datagen import gen_docs_pdf
 from colbert_spark.streaming.ingest import stream_index, windowed_event_counts
 
 
+def _drain_then_stop(q, n_rows: int, timeout_s: float) -> None:
+    """Wait until the query has read all n_rows of its backlog, then stop
+    it. A processing-time-timeout query (sessionize_stream) never ends
+    under availableNow: the timeout keeps asking for no-data batches, so
+    awaitTermination would only sit out its whole timeout and leave the
+    query running through every later test. Batch ids dedup the progress
+    reports, which overlap between polls."""
+    seen: dict[int, int] = {}
+    deadline = time.time() + timeout_s
+    try:
+        while sum(seen.values()) < n_rows and time.time() < deadline:
+            assert q.exception() is None, q.exception()
+            for p in q.recentProgress:
+                seen[p["batchId"]] = p["numInputRows"]
+            time.sleep(0.2)
+    finally:
+        q.stop()
+    assert sum(seen.values()) == n_rows, (seen, n_rows)
+
+
 def test_stream_index_appends_documents(spark, tmp_path):
     cfg = ColBERTConfig(index_root=str(tmp_path / "idx"), index_partitions=8,
                         shuffle_partitions=8)
@@ -99,7 +119,7 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
         .start()
     )
-    q.awaitTermination(180)
+    _drain_then_stop(q, ev.count(), 180)
     got = {
         (r["user_id"], r["session_id"]): (r["n_events"], r["sum_value"])
         for r in spark.sql("select * from sessions").collect()
@@ -258,7 +278,7 @@ def test_sessionize_stream_matches_batch_with_ties(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "tie_ckpt"))
         .start()
     )
-    q.awaitTermination(120)
+    _drain_then_stop(q, len(rows), 120)
     streamed = {
         (r["user_id"], r["session_id"]): (r["n_events"], r["sum_value"])
         for r in spark.sql("SELECT * FROM tie_sessions").collect()
