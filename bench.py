@@ -262,24 +262,10 @@ def main() -> None:
 
     timed("index_readd_epoch_100k", _readd_epoch, reps=1)
 
-    # r5: EAGER physical purge of the same 50 docs, FORCED through the
-    # block-targeted file surgery (fallback fraction 2.0) to track the
-    # raw surgery cost round-over-round. This is the documented WORST
-    # case: hash-scattered pids make wide tail-term block ranges flag
-    # every file (hit stats recorded) — the default policy (fraction >
-    # 0.8) would coalesce here; pid-local sets flag a bounded subset
-    # (pytest evidence).
-    import dataclasses as _dc
-
-    cfg_force = _dc.replace(cfg_big, purge_fallback_file_fraction=2.0)
-    surgery_stats = {}
-
+    # EAGER physical purge of the same 50 docs: remove + the full
+    # coalesce fold (the probe key keeps its historical name)
     def _purge_surgery():
-        up = IndexUpdater("bench100k", spark, cfg_force)
-        out = up.purge(_victim_ids)
-        surgery_stats["purge_files_rewritten"] = out["files_rewritten"]
-        surgery_stats["purge_files_total"] = out["files_total"]
-        surgery_stats["purge_hit_fraction"] = round(out["hit_fraction"], 3)
+        IndexUpdater("bench100k", spark, cfg_big).purge(_victim_ids)
 
     timed("index_purge_surgery_100k", _purge_surgery, reps=1)
 
@@ -288,6 +274,8 @@ def main() -> None:
     # distributed-build fold step's cost relative to a fresh 100k build
     # (expected: comparable to coalesce — one flat decode per shard +
     # one salted re-blockify, no tokenize).
+    import dataclasses as _dc
+
     from colbert_spark.plans.merger import merge_indexes
 
     for _half, _nm in ((0, "bench50k_a"), (1, "bench50k_b")):
@@ -316,7 +304,6 @@ def main() -> None:
         "num_docs": n_docs,
         "index_docs_per_sec": round(n_docs / timings["index_build"], 1),
         "index_docs_per_sec_100k": round(100_000 / timings["index_build_100k"], 1),
-        **surgery_stats,
         "method": "best-of-2 wall per probe (coalesce: 1); min = least-contended estimate on a noisy box",
     }))
     spark.stop()

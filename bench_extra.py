@@ -154,13 +154,9 @@ def main() -> None:
         _probe_index_build_100k()
         _victim_rows = big.limit(50).collect()
         _victim_ids = [r["pid"] for r in _victim_rows]
-        cfg_force = _dc.replace(cfg_big, purge_fallback_file_fraction=2.0)
         t0 = time.monotonic()
-        up = IndexUpdater("bench100k", spark, cfg_force)
-        out = up.purge(_victim_ids)
-        dt = time.monotonic() - t0
-        print(f"# purge stats: {out}", file=sys.stderr)
-        return dt
+        IndexUpdater("bench100k", spark, cfg_big).purge(_victim_ids)
+        return time.monotonic() - t0
 
     def _probe_merge_100k():
         big = _big()

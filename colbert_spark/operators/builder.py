@@ -27,9 +27,9 @@ partitions, then the numpy kernel _make_block_kernel once per partition
                postings; the kernel decodes them and folds the
                tombstones epoch-bounded.
 
-Purge rewrites blocks in place (_make_pid_purge_kernel) through the same
-block encoder (_encode_blocks). _make_block_builder is the per-group
-reference the tests pin the kernel against.
+Removal has one physical form too: tombstones, folded by coalesce_index
+(IndexUpdater.purge is remove + that fold). _make_block_builder is the
+per-group reference the tests pin the kernel against.
 
 Skew (north_rule; SURVEY.md §4.4): a head term ("the"/t00000) may hit >50%
 of docs — a single groupBy(term) group would be one straggler task. Every
@@ -48,8 +48,6 @@ loudly rather than silently merging two terms' postings.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -67,6 +65,7 @@ from colbert_spark.functions.codec import (
 from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.sources.catalog import (
     POSTINGS_SCHEMA,
+    active_tombstone_pids,
     collect_tombstones,
     tombstone_bounds,
 )
@@ -633,17 +632,11 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
         .sortWithinPartitions("term_id", "block_id"),
         "postings", partition_by=["bucket"],
     )
-    if catalog.table_exists("tombstones"):
-        # doc_stats must shrink with the postings: a compacted-away pid
-        # left in doc_stats makes IndexUpdater.add's clash check raise a
-        # false "already live" for a doc that is physically gone. Only
-        # ACTIVE tombstones (readded null) prune — a re-added pid's NEW
-        # postings just survived the fold, so its doc_stats row must too
-        t2 = catalog.read(ss, "tombstones")
-        gone = (
-            t2.filter(F.col("readded").isNull()) if "readded" in t2.columns
-            else t2
-        ).select("pid")
+    # doc_stats must shrink with the postings: a compacted-away pid left
+    # in doc_stats makes IndexUpdater.add's clash check raise a false
+    # "already live" for a doc that is physically gone
+    gone = active_tombstone_pids(catalog, ss)
+    if gone is not None:
         catalog.replace(
             catalog.read(ss, "doc_stats").join(gone, "pid", "left_anti"),
             "doc_stats",
@@ -654,165 +647,3 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
     # segment set (no-op on a snapshot-versioned catalog)
     catalog.refresh(ss)
 
-
-def _make_pid_purge_kernel(bc_pids, k1: float, b: float, avgdl: float):
-    """mapInPandas kernel: drop the broadcast pid set from each posting
-    block IN PLACE (same term_id/block_id/bucket); blocks with no
-    survivors vanish; blocks the pid set never touches pass through
-    byte-identical; the rest re-encode through _encode_blocks, so their
-    block max is bit-identical to a rebuild's.
-
-    bc_pids is a Spark broadcast of a SORTED int64 numpy array — the range
-    reject (searchsorted against [first_pid, last_pid]) skips the decode
-    for the majority of blocks that share a file with a hit block but do
-    not themselves intersect the pid set.
-    """
-
-    out_cols = ["term_id", "block_id", "first_pid", "last_pid",
-                "num_postings", "max_block_score", "pids", "tfs", "dls",
-                "enc_bytes", "bucket"]
-
-    def purge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        purge_arr = bc_pids.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # vectorized range reject over the WHOLE batch: only blocks
-            # whose [first,last] range contains a purged pid decode.
-            # Wide-range tail-term blocks overlap any pid set; their
-            # decode is proportional to their (tiny) df.
-            lo = np.searchsorted(purge_arr, pdf["first_pid"].to_numpy(),
-                                 side="left")
-            hi = np.searchsorted(purge_arr, pdf["last_pid"].to_numpy(),
-                                 side="right")
-            hit = np.flatnonzero(lo != hi)
-            pids = [decode_pids_auto(bytes(x))
-                    for x in pdf["pids"].to_numpy()[hit]]
-            sizes = np.fromiter((x.size for x in pids), dtype=np.int64,
-                                count=hit.size)
-            owner = np.repeat(np.arange(hit.size), sizes)
-            keep = ~np.isin(np.concatenate(pids or [np.empty(0, np.int64)]),
-                            purge_arr)
-            kept = np.bincount(owner[keep], minlength=hit.size)
-            clean = np.ones(len(pdf), dtype=bool)
-            clean[hit[kept < sizes]] = False    # range overlapped AND matched
-            parts = [pdf.loc[clean, out_cols]]
-            touched = (kept > 0) & (kept < sizes)
-            if touched.any():
-                sel = hit[touched]
-                idf = pdf["idf"].to_numpy()[sel]
-                if not np.isfinite(idf).all():
-                    bad = sel[~np.isfinite(idf)][0]
-                    raise ValueError(
-                        f"term {int(pdf['term_id'].iat[bad])} missing from "
-                        "term_dict during purge"
-                    )
-                m = keep[touched[owner]]
-                p = np.concatenate([x for x, u in zip(pids, touched) if u])[m]
-                t, d = (np.concatenate([
-                    decode_tfs_auto(bytes(x)) for x in pdf[c].to_numpy()[sel]
-                ])[m] for c in ("tfs", "dls"))
-                counts = kept[touched]
-                parts.append(pd.DataFrame({
-                    "term_id": pdf["term_id"].to_numpy()[sel],
-                    "block_id": pdf["block_id"].to_numpy()[sel],
-                    **_encode_blocks(p, t, d, np.repeat(idf, counts),
-                                     np.cumsum(counts) - counts, avgdl, k1, b),
-                    "bucket": pdf["bucket"].to_numpy()[sel],
-                }))
-            parts = [x for x in parts if len(x)]
-            if parts:
-                yield pd.concat(parts, ignore_index=True) \
-                    if len(parts) > 1 else parts[0]
-
-    return purge
-
-
-def purge_pids(catalog, config: ColBERTConfig, avgdl: float,
-               pids: list[int], max_file_fraction: float | None = None) -> dict:
-    """Physically remove a BOUNDED pid set's postings by rewriting ONLY the
-    parquet files that hold a block whose [first_pid, last_pid] range
-    intersects the set — the reference updater's patch-only-affected-chunks
-    semantics (colbert/index_updater.py:176-273) instead of the O(index)
-    decode+rewrite of coalesce_index. Returns
-    {"files_rewritten", "files_total", "pids"} as surgery evidence.
-
-    Scale shape: hit discovery is a column-pruned metadata scan (first_pid,
-    last_pid, input_file_name — the binary columns are never read) against
-    a broadcast pid table; only hit files are re-read, and within them the
-    kernel's range reject skips decode for non-hit blocks. The caller bounds
-    |pids| (ColBERTConfig.max_purge_pids) — past that, the broadcast array
-    and the metadata nested-loop probe stop being cheap and full compaction
-    wins (compaction-debt threshold, IndexUpdater.add).
-
-    Idempotent: pids absent from every block range → zero files touched —
-    which is also what makes it the streaming appender's crash-recovery
-    primitive (streaming/indexing._apply_batch re-delivery).
-
-    max_file_fraction: when set and the flagged-file fraction exceeds it,
-    NOTHING is rewritten and the result carries fallback_recommended=True
-    — the caller (IndexUpdater.add) should coalesce instead, since
-    rewriting ~every file without a shuffle costs about what the full
-    fold costs WITH its complete debt reset. Range precision is
-    data-dependent: wide tail-term blocks intersect almost any pid, so a
-    scattered pid set can flag every file even though the true hit blocks
-    are few (bench's index_readd_surgery_100k measures exactly this worst
-    case); pid-local sets (appended segments, time-ordered crawl pids)
-    flag a bounded subset. Leave None to force the surgery (streaming
-    crash rollback must always execute).
-    """
-    from pyspark.sql import SparkSession
-
-    ss = SparkSession.getActiveSession()
-    pid_list = sorted({int(p) for p in pids})
-    out = {"files_rewritten": 0, "files_total": 0, "pids": len(pid_list),
-           "hit_fraction": 0.0, "fallback_recommended": False}
-    if not pid_list or not catalog.table_exists("postings"):
-        return out
-    catalog.recover_pending_rewrite(ss)  # finish any crashed prior surgery
-    pid_df = ss.createDataFrame([(p,) for p in pid_list], "pid long")
-    meta = catalog.read(ss, "postings").select(
-        "first_pid", "last_pid", F.input_file_name().alias("src")
-    )
-    # ONE action answers both planner questions (hit files AND total
-    # file count): a left range-join flags hit rows, the per-src max
-    # folds map-side to one row per file. Row multiplicity from blocks
-    # matching several pids collapses in the partial aggregate; |pids|
-    # is caller-bounded (max_purge_pids).
-    file_rows = (
-        meta.join(
-            F.broadcast(pid_df),
-            (F.col("pid") >= F.col("first_pid"))
-            & (F.col("pid") <= F.col("last_pid")),
-            "left",
-        )
-        .groupBy("src")
-        .agg(F.max(F.col("pid").isNotNull().cast("int")).alias("hit"))
-        .collect()
-    )
-    hit_files = [r["src"] for r in file_rows if r["hit"]]
-    out["files_total"] = len(file_rows)
-    out["hit_fraction"] = (
-        len(hit_files) / out["files_total"] if out["files_total"] else 0.0
-    )
-    out["fallback_recommended"] = bool(
-        max_file_fraction is not None
-        and out["hit_fraction"] > max_file_fraction
-    )
-    if out["fallback_recommended"] or not hit_files:
-        return out
-    blocks = (
-        ss.read.option("basePath", catalog.path("postings"))
-        .parquet(*hit_files)
-        .withColumn("bucket", F.col("bucket").cast("int"))
-    )
-    idf_table = catalog.read(ss, "term_dict").select("term_id", "idf")
-    bc = ss.sparkContext.broadcast(np.array(pid_list, dtype=np.int64))
-    purged = blocks.join(F.broadcast(idf_table), "term_id", "left").mapInPandas(
-        _make_pid_purge_kernel(bc, config.k1, config.b, avgdl),
-        schema=POSTINGS_SCHEMA + ", bucket int",
-    )
-    catalog.rewrite_files(ss, "postings", hit_files, purged,
-                          partition_by=["bucket"])
-    out["files_rewritten"] = len(hit_files)
-    return out

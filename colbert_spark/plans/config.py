@@ -32,21 +32,6 @@ class ColBERTConfig:
     # constant at ANY corpus size (a 10^12-doc head term just gets more
     # salts). ~24 bytes/posting ⇒ default ≈ 25 MB per kernel invocation.
     max_group_postings: int = 1 << 20
-    # compaction-debt threshold for targeted re-add surgery: re-adding up
-    # to this many previously-removed pids patches only the posting files
-    # whose block ranges intersect them (builder.purge_pids — bounded
-    # metadata probe + bounded broadcast array); past it, the O(index)
-    # full coalesce is cheaper than |pids|-wide nested-loop metadata
-    # probing and the targeted path hands off to coalesce_index.
-    max_purge_pids: int = 1 << 20
-    # second fallback axis: when targeted-purge discovery flags MORE than
-    # this fraction of the postings files (block pid-ranges intersect the
-    # re-added pids — wide tail-term blocks make this data-dependent),
-    # the surgery would rewrite ~the whole table anyway, and a full
-    # coalesce buys a complete debt reset (tombstone fold + segment
-    # merge) for the same write volume. Surgery wins when pid locality
-    # keeps the flagged set small (appended segments, time-ordered pids).
-    purge_fallback_file_fraction: float = 0.8
     # cache the tokenized corpus between build phases. True trades memory/
     # local-disk bandwidth for 2 avoided recomputes — right for mid-size
     # corpora; False recomputes the (fully parallel) tokenize per phase —

@@ -24,9 +24,8 @@ remove(pids) → lazy: tombstone rows with before_epoch = next epoch.
 add(docs)    → append-only: new segments in a fresh epoch; re-added pids
                get their tombstone stamped readded=<epoch> (they are live
                again; the row keeps excluding their old postings).
-purge(pids)  → EAGER physical removal (block-targeted file surgery via
-               builder.purge_pids, with the compaction-debt fallback
-               policy) — the explicit maintenance complement of remove().
+purge(pids)  → EAGER physical removal: remove(pids), then coalesce_index
+               folds every tombstone out of the blocks and doc_stats.
 maintain()   → debt-driven compaction (appended/tombstone fractions).
 
 Build salts stay < _ADD_SALT_BASE = 2^20: n_salts = ceil(df /
@@ -73,13 +72,9 @@ class IndexUpdater:
         cfg.index_name = index
         self.config = cfg
         self.catalog = make_catalog(cfg)
-        self.catalog.recover_pending_rewrite(spark)
         self.meta = self.catalog.read_json("metadata.json")
         self.num_docs: int = self.meta["num_docs"]
         self.avgdl: float = self.meta["avg_doclen"]
-        #: surgery evidence from the last purge() call
-        #: ({"files_rewritten", "files_total", "hit_fraction", ...})
-        self.last_purge: dict | None = None
 
     # -- epoch counter -----------------------------------------------------
     def _next_epoch(self, consume: bool) -> int:
@@ -97,10 +92,14 @@ class IndexUpdater:
         """Lazy removal: tombstone rows excluding every epoch written so
         far (build blocks' epochs are < _ADD_SALT_BASE < before_epoch).
         Re-removing a re-added pid refreshes its bound so the newer
-        postings are excluded too. O(|pids|) — never touches postings."""
+        postings are excluded too. O(|pids|) — never touches postings;
+        an empty pid list returns before any job."""
+        pids = [int(p) for p in pids]
+        if not pids:
+            return
         before = self._next_epoch(consume=False)
         new = self.spark.createDataFrame(
-            [(int(p), before, None) for p in pids], TOMBSTONES_SCHEMA
+            [(p, before, None) for p in pids], TOMBSTONES_SCHEMA
         ).dropDuplicates(["pid"])
         old = load_tombstones(self.catalog, self.spark)
         if old is not None:
@@ -232,54 +231,18 @@ class IndexUpdater:
         self.catalog.refresh(self.spark)
 
     # -- eager physical removal -------------------------------------------
-    def purge(self, pids: list[int]) -> dict:
-        """EAGER physical removal of pids' postings: block-targeted file
-        surgery (builder.purge_pids — only files whose block pid-ranges
-        intersect are rewritten, journaled swap) with the compaction-debt
-        policy: past config.max_purge_pids pids, or when discovery flags
-        more than config.purge_fallback_file_fraction of the files (wide
-        tail-term ranges — the scattered-pid degenerate case), a full
-        coalesce folds ALL debt instead for the same write volume. Also
-        drops the pids from doc_stats and tombstones. Returns the surgery
-        metrics (fallback_recommended=True when the fold ran)."""
-        cfg = self.config
-        pid_list = sorted({int(p) for p in pids})
-        pid_df = self.spark.createDataFrame(
-            [(p,) for p in pid_list], "pid long"
-        )
-        if (len(pid_list) > cfg.max_purge_pids
-                or not self.catalog.supports_file_rewrite):
-            self.remove(pid_list)
-            builder.coalesce_index(self.catalog, cfg, self.avgdl)
-            self.last_purge = {
-                "files_rewritten": 0, "files_total": 0,
-                "pids": len(pid_list), "hit_fraction": 1.0,
-                "fallback_recommended": True,
-            }
-            return self.last_purge
-        out = builder.purge_pids(
-            self.catalog, cfg, self.avgdl, pid_list,
-            max_file_fraction=cfg.purge_fallback_file_fraction,
-        )
-        if out["fallback_recommended"]:
-            self.remove(pid_list)  # let the fold drop them physically
-            builder.coalesce_index(self.catalog, cfg, self.avgdl)
-        else:
-            stats = self.catalog.read(self.spark, "doc_stats")
-            self.catalog.replace(
-                stats.join(pid_df, "pid", "left_anti"), "doc_stats"
-            )
-            tombs = load_tombstones(self.catalog, self.spark)
-            if tombs is not None:
-                rest = tombs.join(pid_df, "pid", "left_anti") \
-                    .localCheckpoint(eager=True)
-                if rest.take(1):
-                    self.catalog.replace(rest, "tombstones")
-                else:
-                    self.catalog.delete_table("tombstones")
-            self.catalog.refresh(self.spark)
-        self.last_purge = out
-        return out
+    def purge(self, pids: list[int]) -> None:
+        """EAGER physical removal: remove(pids), then coalesce_index folds
+        every tombstone — the pids' postings leave the blocks, their
+        doc_stats rows go and the tombstones table is deleted. A crash
+        between the two steps leaves the remove view; the next purge or
+        coalesce finishes the fold. An empty pid list returns before any
+        job."""
+        pids = [int(p) for p in pids]
+        if not pids:
+            return
+        self.remove(pids)
+        builder.coalesce_index(self.catalog, self.config, self.avgdl)
 
     # -- maintenance -------------------------------------------------------
     def segment_debt(self) -> dict:

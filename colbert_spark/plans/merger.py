@@ -51,6 +51,7 @@ from colbert_spark.operators import builder
 from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.plans.indexer import MANIFEST_SCHEMA
 from colbert_spark.sources.catalog import (
+    active_tombstone_pids,
     collect_tombstones,
     make_catalog,
     tombstone_bounds,
@@ -60,14 +61,8 @@ from colbert_spark.sources.catalog import (
 def _live_doc_stats(catalog, spark: SparkSession) -> DataFrame:
     """(pid, doclen) minus actively-tombstoned pids (readded stays)."""
     d = catalog.read(spark, "doc_stats").select("pid", "doclen")
-    if catalog.table_exists("tombstones"):
-        t = catalog.read(spark, "tombstones")
-        gone = (
-            t.filter(F.col("readded").isNull()) if "readded" in t.columns
-            else t
-        ).select("pid")
-        d = d.join(gone, "pid", "left_anti")
-    return d
+    gone = active_tombstone_pids(catalog, spark)
+    return d if gone is None else d.join(gone, "pid", "left_anti")
 
 
 def merge_indexes(

@@ -67,10 +67,6 @@ class Searcher:
         base.index_name = index
         self.config = base
         self.catalog = make_catalog(base)
-        # a purge crash mid-surgery leaves old+new posting files coexisting
-        # (transient double-count); the redo journal makes completion
-        # deterministic, so finish it before reading anything
-        self.catalog.recover_pending_rewrite(spark)
         meta = self.catalog.read_json("metadata.json")
         self.num_docs: int = meta["num_docs"]
         self.avgdl: float = meta["avg_doclen"]

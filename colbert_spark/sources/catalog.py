@@ -71,6 +71,20 @@ def tombstone_bounds(catalog, spark: SparkSession) -> DataFrame | None:
     return t.select("pid", "before_epoch")
 
 
+def active_tombstone_pids(catalog, spark: SparkSession) -> DataFrame | None:
+    """(pid) of an index's ACTIVE tombstones, or None: rows not re-added
+    (readded IS NULL). These docs leave doc_stats when the tombstones
+    fold; a re-added pid's newer postings survive the fold, so its row
+    stays. A pre-epoch (pre-r5) table has no readded column, so every
+    row is active."""
+    if not catalog.table_exists("tombstones"):
+        return None
+    t = catalog.read(spark, "tombstones")
+    if "readded" in t.columns:
+        t = t.filter(F.col("readded").isNull())
+    return t.select("pid")
+
+
 def collect_tombstones(frames) -> tuple[np.ndarray, np.ndarray] | None:
     """(sorted pids, aligned before_epochs) of the union of (pid,
     before_epoch) frames (None entries skip), one bounded collect per
@@ -178,93 +192,6 @@ class IndexCatalog:
         (no-op for a real table catalog, which versions snapshots)."""
         spark.catalog.refreshByPath(str(self.root))
 
-    # --- targeted file rewrite (block-level index surgery) -----------------
-    #: parquet layout supports swapping individual data files; a snapshot
-    #: catalog (Iceberg) replaces this with row-level DELETE + append
-    supports_file_rewrite = True
-    _REWRITE_JOURNAL = "rewrite_pending.json"
-
-    @staticmethod
-    def _fs_path(f: str) -> Path:
-        """input_file_name() yields URIs (file:///…); deletion needs paths."""
-        from urllib.parse import urlparse
-
-        return Path(urlparse(f).path) if "://" in f else Path(f)
-
-    def rewrite_files(self, spark: SparkSession, table: str,
-                      old_files: list[str], new_df: DataFrame,
-                      partition_by: list[str] | None = None) -> None:
-        """Replace exactly `old_files` of `table` with the rows of `new_df`,
-        leaving every other data file untouched (the bounded-I/O primitive
-        behind builder.purge_pids — the analog of the reference updater
-        patching only affected chunks, colbert/index_updater.py:176-273).
-
-        Crash-safe via a redo journal: new files are staged first, then a
-        journal (staged paths + files-to-delete) is written atomically,
-        then moves+deletes execute. A crash mid-mutation leaves the journal,
-        and recover_pending_rewrite() re-executes the (idempotent) moves and
-        deletes — the only reader-visible window is old+new files coexisting
-        (transient double-count), strictly smaller than replace()'s
-        documented whole-table rename window. Local-fs rename here; on
-        HDFS/S3 the same sequence runs through the FileSystem API."""
-        staging = Path(self.path(f"_{table}_rewrite_staging"))
-        if staging.exists():
-            import shutil
-
-            shutil.rmtree(staging)  # abandoned pre-journal attempt
-        w = new_df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(staging))
-        self.write_json(self._REWRITE_JOURNAL, {
-            "table": table,
-            "delete": [str(self._fs_path(f)) for f in old_files],
-        })
-        self._redo_rewrite(spark)
-
-    def has_pending_rewrite(self) -> bool:
-        return (self.root / self._REWRITE_JOURNAL).exists()
-
-    def recover_pending_rewrite(self, spark: SparkSession) -> bool:
-        """Complete a crashed rewrite_files (no-op without a journal).
-        Called by IndexUpdater/Searcher/purge entry points; safe to race —
-        every step skips already-done work."""
-        if not self.has_pending_rewrite():
-            return False
-        self._redo_rewrite(spark)
-        return True
-
-    def _redo_rewrite(self, spark: SparkSession) -> None:
-        import shutil
-
-        j = self.read_json(self._REWRITE_JOURNAL)
-        table = j["table"]
-        staging = Path(self.path(f"_{table}_rewrite_staging"))
-        dest = Path(self.path(table))
-        if staging.exists():
-            # move staged part files in, preserving partition dirs; a redo
-            # finds already-moved sources gone and skips them
-            for f in sorted(staging.rglob("part-*")):
-                rel = f.relative_to(staging)
-                target = dest / rel
-                target.parent.mkdir(parents=True, exist_ok=True)
-                f.replace(target)
-        for f in j["delete"]:
-            p = Path(f)
-            if p.exists():
-                p.unlink()
-            # Hadoop's LocalFileSystem writes a .{name}.crc checksum sibling
-            # per data file; deleting only the data file strands the crc
-            # forever (measured ~620 orphans after one forced full-surgery
-            # purge), silently bloating every directory listing. HDFS/S3
-            # keep checksums internally, so this sibling exists on local fs
-            # only — unlink it alongside.
-            (p.parent / f".{p.name}.crc").unlink(missing_ok=True)
-        (self.root / self._REWRITE_JOURNAL).unlink(missing_ok=True)
-        if staging.exists():
-            shutil.rmtree(staging, ignore_errors=True)
-        self.refresh(spark)
-
     # --- json sidecars -----------------------------------------------------
     def write_json(self, name: str, obj: dict) -> None:
         """Atomic: write-then-rename, so a crash mid-write can never leave
@@ -302,7 +229,9 @@ class IcebergIndexCatalog(IndexCatalog):
     - compaction can additionally use the engine-native
       `CALL <catalog>.system.rewrite_data_files` (compact_files());
     - refresh() is a no-op — snapshot isolation replaces the
-      FileStatusCache workarounds.
+      FileStatusCache workarounds;
+    - removal is the same as on the parquet layout: tombstones, folded
+      by coalesce_index through replace(), so a fold is one snapshot.
 
     The sandbox has no Iceberg runtime jar, so this class is exercised
     only when one is on the classpath (tests skip otherwise, documented).
@@ -344,14 +273,6 @@ class IcebergIndexCatalog(IndexCatalog):
     def replace(self, df: DataFrame, table: str,
                 partition_by: list[str] | None = None) -> None:
         self.write(df, table, "overwrite", partition_by)
-
-    #: Iceberg has no stable file identity to swap from the outside; the
-    #: engine-native targeted purge is row-level DELETE (hit rows) + append
-    #: (rewritten rows) under snapshot isolation — unexercised here (no
-    #: runtime jar on this box), so builder.purge_pids falls back to the
-    #: snapshot-atomic full coalesce on this backend until a cluster run
-    #: validates the row-level path.
-    supports_file_rewrite = False
 
     def compact_files(self, table: str = "postings") -> None:
         """Engine-native file compaction (small-file merge; orthogonal to

@@ -26,10 +26,12 @@ per-stream ledger in the index sidecar (stream_append.json):
   bump after it. add() is itself multi-step (postings append → term_dict
   append → doc_stats replace), so a crash inside it can leave a PARTIAL
   append; on re-delivery the marker identifies exactly which batch may
-  be partial, and the appender rolls it back (builder.purge_pids on the
-  batch's pids — idempotent block surgery, a no-op when the crash
-  happened before the postings landed — plus a doc_stats prune) and
-  re-applies. No silent double-append, no spurious "already live".
+  be partial, and the appender rolls it back by tombstoning the batch's
+  pids (IndexUpdater.remove) and re-applies. add() consumes its epoch
+  before it writes postings, so the tombstone's bound excludes whatever
+  the crashed attempt appended, and it hides any doc_stats rows it left
+  from add's clash check; the retry appends in a fresh epoch. No silent
+  double-append, no spurious "already live".
 
 Concurrent streams against ONE index are unsupported: the ledger is a
 read-modify-write JSON sidecar with no lock (two writers can lose each
@@ -73,28 +75,19 @@ def _load_ledger(catalog) -> dict:
 
 def _rollback_partial(cfg: ColBERTConfig, index: str, batch_df: DataFrame,
                       id_col: str) -> None:
-    """Undo whatever a crashed add() left behind for this batch's pids:
-    purge their postings (block-targeted, idempotent — a no-op if the
-    postings append never landed) and drop their doc_stats rows. Leftover
-    df=0 term_dict rows from the crashed attempt are harmless (the retry's
-    new-term anti-join skips them; their idf is the same frozen-stats
-    value either way)."""
-    from colbert_spark.operators import builder
+    """Undo whatever a crashed add() left behind for this batch's pids by
+    tombstoning them: the bound lies past the crashed attempt's epoch, so
+    its postings (if any landed) are excluded and its doc_stats rows stop
+    counting as live. Leftover df=0 term_dict rows from the crashed
+    attempt are harmless (the retry's new-term anti-join skips them;
+    their idf is the same frozen-stats value either way)."""
     from colbert_spark.plans.index_updater import IndexUpdater
 
-    spark = batch_df.sparkSession
-    up = IndexUpdater(index, spark, cfg)
     pids = [
-        int(r[0])
-        for r in batch_df.select(F.col(id_col).cast("long")).distinct()
+        r[0] for r in batch_df.select(F.col(id_col).cast("long")).distinct()
         .collect()
     ]
-    builder.purge_pids(up.catalog, up.config, up.avgdl, pids)
-    if pids and up.catalog.table_exists("doc_stats"):
-        pid_df = spark.createDataFrame([(p,) for p in pids], "pid long")
-        stats = up.catalog.read(spark, "doc_stats")
-        up.catalog.replace(stats.join(pid_df, "pid", "left_anti"), "doc_stats")
-        up.catalog.refresh(spark)
+    IndexUpdater(index, batch_df.sparkSession, cfg).remove(pids)
 
 
 def _apply_batch(cfg: ColBERTConfig, index: str, batch_df: DataFrame,

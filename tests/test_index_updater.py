@@ -308,25 +308,49 @@ def test_readd_then_remove_again_excludes_new_postings(spark, env):
     assert _rank(spark, cfg, queries) == before
 
 
-def test_purge_pids_noop_when_absent(spark, env):
+def _catalog(cfg):
+    import pathlib
+    return IndexCatalog(str(pathlib.Path(cfg.index_root) / "u1"))
+
+
+def _doc_stats_pids(spark, cat):
+    return {r["pid"] for r in cat.read(spark, "doc_stats").select("pid")
+            .collect()}
+
+
+def test_remove_and_purge_of_nothing_run_no_jobs(spark, env):
+    """remove([]) and purge([]) return before any Spark job: no (empty)
+    tombstones table appears and no postings file is rewritten."""
     cfg, docs, queries = env
-    import pathlib as _pl
-    cat = IndexCatalog(str(_pl.Path(cfg.index_root) / "u1"))
+    cat = _catalog(cfg)
     up = IndexUpdater("u1", spark, cfg)
-    before = _postings_files(cat)
-    out = builder.purge_pids(cat, cfg, up.avgdl, [10_000_000])
-    assert out["files_rewritten"] == 0
-    assert _postings_files(cat) == before
+    files = _postings_files(cat)
+    sc = spark.sparkContext
+    group = "test-remove-purge-nothing"
+    sc.setJobGroup(group, "empty remove and purge")
+    try:
+        up.remove([])
+        up.purge([])
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not cat.table_exists("tombstones")
+    assert _postings_files(cat) == files
 
 
-def test_purge_bounded_file_subset(spark, env):
-    """Eager purge of an appended-segment pid rewrites ONLY the appended
-    files (pid 1000 lies outside every build-time block range)."""
+def test_purge_noop_when_absent(spark, env):
     cfg, docs, queries = env
-    import pathlib as _pl
-    cat = IndexCatalog(str(_pl.Path(cfg.index_root) / "u1"))
-    build_files = _postings_files(cat)
+    before = _rank(spark, cfg, queries)
+    IndexUpdater("u1", spark, cfg).purge([10_000_000])
+    assert _rank(spark, cfg, queries) == before
+    assert not _catalog(cfg).table_exists("tombstones")
 
+
+def test_purge_appended_segment_pid(spark, env):
+    """Eager purge of a pid that lives only in an appended segment: it
+    leaves search and doc_stats while its segment neighbour stays."""
+    cfg, docs, queries = env
+    cat = _catalog(cfg)
     new = spark.createDataFrame(
         [(1000, "zzseg one two t00003"), (1001, "zzseg three four")],
         "pid long, text string",
@@ -335,14 +359,10 @@ def test_purge_bounded_file_subset(spark, env):
     s = Searcher("u1", spark, cfg)
     assert set(s.search("zzseg", k=5)[0]) == {1000, 1001}
 
-    up = IndexUpdater("u1", spark, cfg)
-    out = up.purge([1000])
-    assert out["fallback_recommended"] is False
-    assert 1 <= out["files_rewritten"] < out["files_total"]
-    after_files = _postings_files(cat)
-    for f, sig in build_files.items():
-        assert after_files.get(f) == sig, f"build file {f} was touched"
+    IndexUpdater("u1", spark, cfg).purge([1000])
     assert Searcher("u1", spark, cfg).search("zzseg", k=5)[0] == [1001]
+    stats = _doc_stats_pids(spark, cat)
+    assert 1000 not in stats and 1001 in stats
     # the swap must not strand local-fs .crc checksum siblings of the
     # deleted files: every remaining crc pairs with a live data file
     import pathlib
@@ -353,118 +373,121 @@ def test_purge_bounded_file_subset(spark, env):
 
 
 def test_purge_rewritten_blocks_are_consistent(spark, env):
-    """A forced surgical purge rewrites blocks in place: every block of a
-    rewritten file decodes to pids outside the purge set, its metadata
-    matches the decoded payload, and its block max is exactly the BM25
-    formula over its survivors."""
-    import pathlib as _pl
-
-    import pandas as pd
-
+    """After a purge every block of the index decodes to pids outside the
+    purge set, its metadata matches the decoded payload, its block max is
+    exactly the BM25 formula over its survivors, and the index lost
+    exactly the purged pids' postings."""
     from colbert_spark.functions import codec
 
     cfg, docs, queries = env
-    cat = IndexCatalog(str(_pl.Path(cfg.index_root) / "u1"))
+    cat = _catalog(cfg)
     up = IndexUpdater("u1", spark, cfg)
-    sizes_before = {
-        (r["term_id"], r["block_id"]): r["num_postings"]
-        for r in cat.read(spark, "postings")
-        .select("term_id", "block_id", "num_postings").collect()
-    }
-    files_before = set(_postings_files(cat))
     purged = {3, 50, 51, 120}
-    out = builder.purge_pids(cat, cfg, up.avgdl, sorted(purged))
-    assert out["files_rewritten"] > 0
-    new_files = set(_postings_files(cat)) - files_before
-    assert new_files
+    cols = ["term_id", "num_postings", "first_pid", "last_pid",
+            "max_block_score", "pids", "tfs", "dls", "enc_bytes"]
+    rows = cat.read(spark, "postings").select(*cols).collect()
+    total_before = sum(r["num_postings"] for r in rows)
+    hit = sum(
+        int(np.isin(codec.decode_pids_auto(bytes(r["pids"])),
+                    sorted(purged)).sum())
+        for r in rows
+    )
+    assert hit > 0
+
+    up.purge(sorted(purged))
     idf = dict(cat.read(spark, "term_dict").select("term_id", "idf")
                .collect())
     k1, b, avgdl = cfg.k1, cfg.b, up.avgdl
-    shrunk = 0
-    for f in new_files:
-        for r in pd.read_parquet(f).itertuples():
-            p = codec.decode_pids_auto(bytes(r.pids))
-            tf = codec.decode_tfs_auto(bytes(r.tfs)).astype(np.float64)
-            dl = codec.decode_tfs_auto(bytes(r.dls)).astype(np.float64)
-            assert not purged & set(p.tolist())
-            assert r.num_postings == p.size == tf.size == dl.size
-            assert (r.first_pid, r.last_pid) == (p[0], p[-1])
-            assert r.enc_bytes == len(r.pids) + len(r.tfs) + len(r.dls)
-            scores = idf[r.term_id] * tf * (k1 + 1.0) / (
-                tf + k1 * (1.0 - b + b * dl / avgdl))
-            assert r.max_block_score == scores.max()
-            shrunk += r.num_postings < sizes_before[(r.term_id, r.block_id)]
-    assert shrunk > 0  # the check covered re-encoded blocks, not only copies
+    total = 0
+    for r in cat.read(spark, "postings").select(*cols).collect():
+        p = codec.decode_pids_auto(bytes(r["pids"]))
+        tf = codec.decode_tfs_auto(bytes(r["tfs"])).astype(np.float64)
+        dl = codec.decode_tfs_auto(bytes(r["dls"])).astype(np.float64)
+        assert not purged & set(p.tolist())
+        assert r["num_postings"] == p.size == tf.size == dl.size
+        assert (r["first_pid"], r["last_pid"]) == (p[0], p[-1])
+        assert r["enc_bytes"] == len(r["pids"]) + len(r["tfs"]) \
+            + len(r["dls"])
+        scores = idf[r["term_id"]] * tf * (k1 + 1.0) / (
+            tf + k1 * (1.0 - b + b * dl / avgdl))
+        assert r["max_block_score"] == scores.max()
+        total += r["num_postings"]
+    assert total == total_before - hit
 
 
 def test_purge_over_threshold_falls_back_to_coalesce(spark, env):
+    """purge of several pids, one of them in an appended segment, always
+    ends in the full coalesce: no appended blocks and no tombstones are
+    left, and the ranking is the remove view."""
     cfg, docs, queries = env
-    import dataclasses
-    small = dataclasses.replace(cfg, max_purge_pids=1)
+    cat = _catalog(cfg)
+    IndexUpdater("u1", spark, cfg).add(spark.createDataFrame(
+        [(1000, "zzseg t00003"), (1001, "zzseg t00004")],
+        "pid long, text string"))
     before = _rank(spark, cfg, queries)
-    victims = sorted({r[1] for r in before})[:3]
-    up = IndexUpdater("u1", spark, small)
-    out = up.purge(victims)
-    assert out["fallback_recommended"] is True
-    import pathlib
-    assert not pathlib.Path(
-        IndexCatalog(str(pathlib.Path(cfg.index_root) / "u1"))
-        .path("tombstones")).exists()
+    victims = sorted({r[1] for r in before})[:3] + [1000]
+    up = IndexUpdater("u1", spark, cfg)
+    assert up.segment_debt()["appended_blocks"] > 0
+    up.remove(victims)
+    remove_view = _rank(spark, cfg, queries)
+    IndexUpdater("u1", spark, cfg).purge(victims)
+    debt = IndexUpdater("u1", spark, cfg).segment_debt()
+    assert debt["appended_blocks"] == 0 and debt["tombstones"] == 0
+    assert not cat.table_exists("tombstones")
     after = _rank(spark, cfg, queries)
     assert not ({r[1] for r in after} & set(victims))
+    assert after == remove_view
+    assert Searcher("u1", spark, cfg).search("zzseg", k=5)[0] == [1001]
 
 
 def test_purge_scattered_pids_falls_back_to_full_fold(spark, env):
-    """Range precision is data-dependent: purging pids that sit inside
-    (nearly) every block range flags ~all files, and the policy takes the
-    full coalesce (complete debt reset for the same write volume) instead
-    of a whole-table no-shuffle rewrite."""
+    """purge is remove + coalesce_index. Victims that sit inside every
+    block range (low pids), removed and re-added first so both epochs
+    of their postings exist, leave the rankings and doc_stats; the
+    ranking is the remove view, and no tombstones table is left."""
     cfg, docs, queries = env
+    cat = _catalog(cfg)
     before = _rank(spark, cfg, queries)
-    victims = sorted({r[1] for r in before})[:3]  # low pids in every range
-    up = IndexUpdater("u1", spark, cfg)
-    out = up.purge(victims)
-    assert out["fallback_recommended"] is True
-    assert out["files_rewritten"] == 0  # surgery never ran
-    import pathlib
-    assert not pathlib.Path(
-        IndexCatalog(str(pathlib.Path(cfg.index_root) / "u1"))
-        .path("tombstones")).exists()
+    victims = sorted({r[1] for r in before})[:3]
+    IndexUpdater("u1", spark, cfg).remove(victims)
+    remove_view = _rank(spark, cfg, queries)
+    IndexUpdater("u1", spark, cfg).add(docs.filter(F.col("pid").isin(victims)))
+    assert _rank(spark, cfg, queries) == before
+
+    IndexUpdater("u1", spark, cfg).purge(victims)
     after = _rank(spark, cfg, queries)
     assert not ({r[1] for r in after} & set(victims))
+    assert after == remove_view
+    assert not (_doc_stats_pids(spark, cat) & set(victims))
+    assert not cat.table_exists("tombstones")
 
 
-def test_purge_crash_recovery_via_journal(spark, env, monkeypatch):
-    """A crash between the journal write and the file moves/deletes leaves
-    a redo journal; the next reader (Searcher) completes the surgery
-    deterministically before serving queries."""
-    import dataclasses
+def test_purge_crash_before_fold_serves_remove_view(spark, env,
+                                                    monkeypatch):
+    """A crash between purge's remove and its fold leaves the remove view:
+    a fresh Searcher serves it, and a second purge completes the fold
+    without changing the ranking."""
     cfg, docs, queries = env
-    # scattered low pids flag every file -> the default policy would
-    # coalesce; force the surgery so the journal machinery is exercised
-    cfg = dataclasses.replace(cfg, purge_fallback_file_fraction=2.0)
-    import pathlib as _pl
-    cat = IndexCatalog(str(_pl.Path(cfg.index_root) / "u1"))
+    cat = _catalog(cfg)
     before = _rank(spark, cfg, queries)
     victims = sorted({r[1] for r in before})[:2]
-    IndexUpdater("u1", spark, cfg).remove(victims)
-    after_remove = _rank(spark, cfg, queries)
 
-    # crash simulation: staging + journal land, mutation step never runs
-    real_redo = IndexCatalog._redo_rewrite
-    monkeypatch.setattr(IndexCatalog, "_redo_rewrite",
-                        lambda self, spark_: None)
-    up = IndexUpdater("u1", spark, cfg)
-    out = up.purge(victims)
-    assert out["fallback_recommended"] is False
-    monkeypatch.setattr(IndexCatalog, "_redo_rewrite", real_redo)
-    assert cat.has_pending_rewrite()
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the fold")
 
-    s = Searcher("u1", spark, cfg)  # recovery point
-    assert not cat.has_pending_rewrite()
-    # purged pids are physically gone == the tombstone-filtered view
-    assert sorted(map(tuple, s.search_all(queries, k=10).df.collect())) \
-        == after_remove
+    monkeypatch.setattr(builder, "coalesce_index", crash)
+    with pytest.raises(RuntimeError, match="before the fold"):
+        IndexUpdater("u1", spark, cfg).purge(victims)
+    monkeypatch.undo()
+    assert cat.table_exists("tombstones")
+    after_crash = _rank(spark, cfg, queries)
+    assert not ({r[1] for r in after_crash} & set(victims))
+    assert after_crash != before
+
+    IndexUpdater("u1", spark, cfg).purge(victims)
+    assert not cat.table_exists("tombstones")
+    assert not (_doc_stats_pids(spark, cat) & set(victims))
+    assert _rank(spark, cfg, queries) == after_crash
 
 
 def test_segment_debt_and_maintain(spark, env):

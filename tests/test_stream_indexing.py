@@ -151,9 +151,9 @@ def test_crash_inside_add_rolls_back_then_reapplies(spark, tmp_path,
                                                     monkeypatch):
     """The applied-but-unrecorded window: add() completes (or partially
     completes) but the ledger commit never happens. Re-delivery must find
-    the in-flight marker, roll the batch's pids back (purge_pids +
-    doc_stats prune) and re-apply — not double-append, not raise
-    'already live'."""
+    the in-flight marker, roll the batch's pids back (tombstone them
+    with IndexUpdater.remove) and re-apply — not double-append, not
+    raise 'already live'."""
     import pytest
     from colbert_spark.operators import builder
 
@@ -191,6 +191,59 @@ def test_crash_inside_add_rolls_back_then_reapplies(spark, tmp_path,
     builder.coalesce_index(up.catalog, up.config, up.avgdl)
     pids2, _, scores2 = Searcher("st5", spark, cfg).search("zzcrashterm", k=5)
     assert (pids2, scores2) == (pids, scores)
+
+
+def test_crash_mid_add_before_doc_stats_rolls_back_then_reapplies(
+        spark, tmp_path, monkeypatch):
+    """add() crashes after its postings append and before its doc_stats
+    replace, in a batch that re-adds a removed pid and adds a new one.
+    Re-delivery rolls back and re-applies: both pids are searchable, the
+    point rankings equal those of the same index state reached without
+    the crash, and coalesce_index passes its duplicate-pid guard with the
+    rankings unchanged."""
+    import pytest
+    from colbert_spark.operators import builder
+
+    cfg, docs, queries = _env(spark, tmp_path, "st8")
+    ref_cfg = _env(spark, tmp_path, "st8ref")[0]
+    cat = IndexCatalog(str(pathlib.Path(cfg.index_root) / "st8"))
+    readd = docs.filter(F.col("pid") == 7)
+    text7 = readd.first()["text"]
+    batch = readd.unionByName(spark.createDataFrame(
+        [(5000, "zzcrashterm alpha t00003")], "pid long, text string"))
+    texts = [r["text"] for r in queries.collect()] + [text7, "zzcrashterm"]
+    for name in ("st8", "st8ref"):
+        IndexUpdater(name, spark, cfg).remove([7])
+
+    real_replace = IndexCatalog.replace
+
+    def crashing_replace(self, df, table, partition_by=None):
+        if table == "doc_stats":
+            raise RuntimeError("crash before the doc_stats replace")
+        return real_replace(self, df, table, partition_by)
+
+    monkeypatch.setattr(IndexCatalog, "replace", crashing_replace)
+    with pytest.raises(RuntimeError, match="before the doc_stats replace"):
+        _apply_batch(cfg, "st8", batch, 0, "pid", "text", stream_key="ck")
+    assert cat.read_json("stream_append.json")["streams"]["ck"] == {
+        "hwm": -1, "inflight": 0}
+    monkeypatch.setattr(IndexCatalog, "replace", real_replace)
+    assert _apply_batch(cfg, "st8", batch, 0, "pid", "text",
+                        stream_key="ck") is True
+    assert _apply_batch(ref_cfg, "st8ref", batch, 0, "pid", "text",
+                        stream_key="ck") is True
+
+    def point(name):
+        s = Searcher(name, spark, cfg)
+        return [s.search(t, k=10) for t in texts]
+
+    got = point("st8")
+    assert got[-1][0] == [5000]
+    assert 7 in got[-2][0]
+    assert got == point("st8ref")
+    up = IndexUpdater("st8", spark, cfg)
+    builder.coalesce_index(up.catalog, up.config, up.avgdl)
+    assert point("st8") == got
 
 
 def test_inflight_marker_for_other_batch_fails_loud(spark, tmp_path):
