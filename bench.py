@@ -73,7 +73,7 @@ def main() -> None:
         timings[name] = round(min(walls), 3)
 
     cfg = ColBERTConfig(index_root="/tmp/colbert_spark_indexes",
-                        index_name="bench", shuffle_partitions=cpus)
+                        index_name="bench")
     timed("index_build",
           lambda: Indexer(cfg).index("bench", docs,
                                      overwrite="force_silent_overwrite"))
@@ -225,7 +225,7 @@ def main() -> None:
         F.pmod(F.xxhash64("url"), F.lit(1 << 62)).alias("pid"), "text"
     )
     cfg_big = ColBERTConfig(index_root="/tmp/colbert_spark_indexes",
-                            index_name="bench100k", shuffle_partitions=cpus)
+                            index_name="bench100k")
     timed("index_build_100k",
           lambda: Indexer(cfg_big).index("bench100k", big,
                                          overwrite="force_silent_overwrite"))

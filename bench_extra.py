@@ -57,9 +57,9 @@ def main() -> None:
     import dataclasses as _dc
 
     cfg = ColBERTConfig(index_root="/tmp/colbert_spark_indexes",
-                        index_name="bench", shuffle_partitions=cpus)
+                        index_name="bench")
     cfg_big = ColBERTConfig(index_root="/tmp/colbert_spark_indexes",
-                            index_name="bench100k", shuffle_partitions=cpus)
+                            index_name="bench100k")
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding")

@@ -417,7 +417,9 @@ def _blockify(rows: DataFrame, avgdl: float, config: ColBERTConfig,
     exchange's partitioning — no second exchange) and the corpus-sized
     shuffle never moves the per-term double. `tomb` (collect_tombstones)
     folds inside the kernel; only the hybrid feed carries the epochs it
-    needs.
+    needs. The exchange takes its task count from the session's
+    spark.sql.shuffle.partitions, not from the config; any count keeps
+    every group whole, so the blocks never depend on it.
     """
     kernel = _make_block_kernel(config.block_size, avgdl, config.k1,
                                 config.b, tomb)
@@ -432,7 +434,13 @@ def _blockify(rows: DataFrame, avgdl: float, config: ColBERTConfig,
         F.col("salt").cast("int").alias("salt"),
         *[c for c in ("idf", "epoch", "pids", "tfs", "dls")
           if c in rows.columns],
-    ).repartition(config.shuffle_partitions, "term_id", "salt")
+    ).repartition(
+        # an explicit count, so AQE never coalesces it: the kernel costs
+        # Python CPU per posting, not shuffle bytes, and a byte-sized
+        # coalesce ran the build's blocks in one task on one core
+        int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions")),
+        "term_id", "salt",
+    )
     if idf_table is not None:
         rep = rep.join(F.broadcast(idf_table), "term_id")
     blocks = (
@@ -628,7 +636,7 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
         rows = _salted(live_flat_postings(catalog, ss), dict_slice)
     merged = _blockify(rows, avgdl, config, idf_table=idf_table, tomb=tomb)
     catalog.replace(
-        merged.repartition(config.index_partitions, "bucket")
+        merged.repartition("bucket")
         .sortWithinPartitions("term_id", "block_id"),
         "postings", partition_by=["bucket"],
     )

@@ -25,7 +25,7 @@ class ColBERTConfig:
     b: float = 0.75
     # index layout
     block_size: int = 128          # postings per block (bounds UDF memory)
-    index_partitions: int = 32     # hash(term_id) partitions for segments
+    index_partitions: int = 32     # bucket count of the on-disk layout
     # skew control: a term with df > max_group_postings is built as
     # ceil(df / max_group_postings) parallel salted sub-groups, so group
     # size — and therefore task memory and stragglers — is bounded by this
@@ -44,8 +44,6 @@ class ColBERTConfig:
     # name of a configured Iceberg Spark catalog (spark.sql.catalog.<name>)
     # to store index tables as Iceberg tables (sources.catalog.make_catalog)
     iceberg_catalog: str = ""
-    # runtime
-    shuffle_partitions: int = 32
 
     def index_path(self) -> str:
         return str(Path(self.index_root) / self.index_name)

@@ -124,7 +124,10 @@ class IndexUpdater:
         cfg = self.config
         added = docs.select(F.col(id_col).alias("pid")).distinct()
         tombs = load_tombstones(self.catalog, self.spark)
-        live = self.catalog.read(self.spark, "doc_stats").select("pid")
+        # ONE read of doc_stats (each read runs a schema-inference job)
+        # serves the clash check here and the doc_stats replace below
+        stats = self.catalog.read(self.spark, "doc_stats")
+        live = stats.select("pid")
         # ONE driver action answers both planner questions (job-count
         # discipline — each action costs fixed scheduling latency): the
         # live-pid clash count AND whether any added pid re-adds a
@@ -179,8 +182,10 @@ class IndexUpdater:
         # append fans out into up to tasks×buckets tiny files — measured
         # 655 files for a 50-doc append at 32×32; an unbounded stream of
         # micro-batches would melt the namenode/listing path at scale.
+        # No partition count: AQE coalesces whole hash partitions, so a
+        # bucket never splits across tasks however few the tasks are.
         self.catalog.write(
-            blocks.repartition(cfg.index_partitions, "bucket")
+            blocks.repartition("bucket")
             .sortWithinPartitions("term_id", "block_id"),
             "postings", mode="append", partition_by=["bucket"],
         )
@@ -199,9 +204,7 @@ class IndexUpdater:
         )
         # doc_stats: drop any stale row for re-added pids, append the new
         # ones; catalog.replace keeps the swap atomic-ish and distributed
-        old_stats = self.catalog.read(self.spark, "doc_stats").join(
-            added, "pid", "left_anti"
-        )
+        old_stats = stats.join(added, "pid", "left_anti")
         merged_stats = old_stats.unionByName(builder.doc_stats(token_df))
         # the three finalize mutations touch independent tables — overlap
         # their fixed per-job scheduling latencies in one pool (the

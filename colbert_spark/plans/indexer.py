@@ -231,7 +231,7 @@ class Indexer:
                 mode = "append" if done else "overwrite"
                 futures.append(pool.submit(
                     cat.write,
-                    blocks.repartition(cfg.index_partitions, "bucket")
+                    blocks.repartition("bucket")
                     .sortWithinPartitions("term_id", "block_id"),
                     "postings", mode, ["bucket"],
                 ))

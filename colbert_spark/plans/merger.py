@@ -209,7 +209,7 @@ def merge_indexes(
             pool.submit(dest.write, stats_df, "corpus_stats"),
             pool.submit(
                 dest.write,
-                merged.repartition(cfg.index_partitions, "bucket")
+                merged.repartition("bucket")
                 .sortWithinPartitions("term_id", "block_id"),
                 "postings", "overwrite", ["bucket"],
             ),

@@ -46,7 +46,7 @@ if not os.path.exists(path + "/_SUCCESS"):
 corpus = spark.read.parquet(path).select(
     F.pmod(F.xxhash64("url"), F.lit(1 << 62)).alias("pid"), "text")
 
-cfg = ColBERTConfig(index_root="/tmp/colbert_scaling_idx", shuffle_partitions=max(cpus, 8))
+cfg = ColBERTConfig(index_root="/tmp/colbert_scaling_idx")
 t0 = time.monotonic()
 Indexer(cfg).index(f"scale_{{cpus}}", corpus, overwrite="force_silent_overwrite")
 dt = time.monotonic() - t0

@@ -140,7 +140,7 @@ def test_iceberg_full_index_lifecycle(tmp_path):
         )
         cfg = ColBERTConfig(index_root=str(tmp_path / "idx"),
                             index_name="ic1", iceberg_catalog="lake",
-                            index_partitions=4, shuffle_partitions=4)
+                            index_partitions=4)
         # delete() before any table exists must hit the namespace guard
         make_catalog(cfg).delete()
         Indexer(cfg).index("ic1", docs, overwrite=True)

@@ -27,7 +27,6 @@ def cfg(tmp_path_factory):
         block_size=32,            # small blocks → exercise multi-block paths
         index_partitions=8,
         max_group_postings=50,   # head term (df≈200) gets 4+ salts
-        shuffle_partitions=8,
     )
 
 
@@ -260,7 +259,7 @@ def test_degenerate_corpora(spark, tmp_path):
     from colbert_spark.plans.searcher import Searcher
 
     cfg = ColBERTConfig(index_root=str(tmp_path / "idx"),
-                        index_partitions=8, shuffle_partitions=4)
+                        index_partitions=8)
     empty = spark.createDataFrame([], "pid long, text string")
     with _pytest.raises(ValueError, match="empty collection"):
         Indexer(cfg).index("empty", empty, overwrite=True)
@@ -280,7 +279,7 @@ def test_duplicate_pids_rejected(spark, tmp_path):
     from colbert_spark.plans.indexer import Indexer
 
     cfg = ColBERTConfig(index_root=str(tmp_path / "idx"),
-                        index_partitions=8, shuffle_partitions=4)
+                        index_partitions=8)
     dups = spark.createDataFrame(
         [(1, "a b c"), (1, "d e f"), (2, "g h i")], "pid long, text string")
     with _pytest.raises(ValueError, match="pids must be unique"):

@@ -23,7 +23,7 @@ from tests.equivalence import EDGE_QUERIES, assert_equivalent_views
 def env(spark, tmp_path):
     cfg = ColBERTConfig(
         index_root=str(tmp_path), block_size=32, index_partitions=8,
-        max_group_postings=50, shuffle_partitions=8,
+        max_group_postings=50,
     )
     docs_pdf = gen_docs_pdf(np.arange(200))
     docs_pdf["pid"] = np.arange(200)
@@ -256,9 +256,11 @@ def test_readd_is_pure_append_zero_files_touched(spark, env):
 
 
 def test_add_writes_at_most_one_file_per_bucket(spark, env):
-    """Small-files guard: one append lands AT MOST index_partitions new
-    posting files (each bucket co-located into one task before the
-    partitionBy write, mirroring the build layout). The unaligned layout
+    """Small-files guard: one append adds AT MOST one posting file to each
+    bucket= dir (each bucket co-located into one task before the
+    partitionBy write, mirroring the build layout), so at most
+    index_partitions files in all. A write whose tasks split a bucket
+    fails the per-dir check even under the total bound. The unaligned layout
     this regresses — hash-by-term_id tasks each spanning ~every mod-based
     bucket — wrote up to tasks×buckets tiny files per micro-batch
     (measured 655 for a 50-doc append at 32×32), which no object-store
@@ -279,6 +281,13 @@ def test_add_writes_at_most_one_file_per_bucket(spark, env):
     assert 0 < len(new_files) <= cfg.index_partitions, (
         f"append fanned out into {len(new_files)} files "
         f"(> index_partitions={cfg.index_partitions})")
+    per_bucket: dict[str, int] = {}
+    for f in new_files:
+        bucket_dir = _pl.Path(f).parent.name
+        assert bucket_dir.startswith("bucket="), f
+        per_bucket[bucket_dir] = per_bucket.get(bucket_dir, 0) + 1
+    split = {b: n for b, n in per_bucket.items() if n > 1}
+    assert not split, f"append split buckets across files: {split}"
     # and the appended docs are actually searchable through the new layout
     s = Searcher("u1", spark, cfg)
     pids, _, _ = s.search("t00000 t00004 t00007", k=50)

@@ -20,7 +20,7 @@ from colbert_spark.sources.datagen import gen_docs_pdf, gen_queries_pdf
 def env(spark, tmp_path):
     cfg = ColBERTConfig(
         index_root=str(tmp_path), block_size=32, index_partitions=8,
-        max_group_postings=50, shuffle_partitions=8,
+        max_group_postings=50,
     )
     docs_pdf = gen_docs_pdf(np.arange(200))
     docs_pdf["pid"] = np.arange(200)

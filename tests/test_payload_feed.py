@@ -4,7 +4,8 @@ path it replaces: same posting blocks (payload bytes included), same
 merged statistics — across removals, epoch re-adds, appends and
 multi-salt (hot) terms. The flat path is forced by monkeypatching
 catalog.TOMBSTONE_COLLECT_MAX to 0, so collect_tombstones reports "too
-large" (None)."""
+large" (None). The same digest pins the layout against the session's
+shuffle task count."""
 
 from __future__ import annotations
 
@@ -27,7 +28,7 @@ def _mk_cfg(tmp_path, name):
     # head terms of a 200-doc fixture; block_size=16 → many blocks
     return ColBERTConfig(
         index_root=str(tmp_path), index_name=name, block_size=16,
-        index_partitions=8, max_group_postings=50, shuffle_partitions=8,
+        index_partitions=8, max_group_postings=50,
     )
 
 
@@ -126,3 +127,40 @@ def test_hybrid_fixture_exercises_multi_salt(spark, tmp_path):
         .count()
     )
     assert n_multi > 0
+
+
+def test_postings_invariant_to_shuffle_task_count(spark, tmp_path):
+    """No engine exchange takes its count from the config, so the
+    session's spark.sql.shuffle.partitions decides how many tasks run —
+    and must decide nothing else. Build, add (new pids plus a re-add) and coalesce
+    the fixture at 1 and at 8 shuffle partitions; AQE coalescing is off
+    so 8 really means 8 tasks per exchange. Every state's postings,
+    payload bytes included, must match."""
+    docs = _docs(spark)
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    saved = {k: spark.conf.get(k) for k in keys}
+    states = {}
+    try:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
+                       "false")
+        for n in (1, 8):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            name = f"tasks{n}"
+            cfg = _mk_cfg(tmp_path, name)
+            Indexer(cfg).index(name, docs.filter(F.col("pid") < 150),
+                               overwrite=True)
+            build = _postings_rows(spark, cfg, name)
+            up = IndexUpdater(name, spark, cfg)
+            up.remove([3, 7])
+            up.add(docs.filter((F.col("pid") >= 150) | (F.col("pid") == 3)))
+            add = _postings_rows(spark, cfg, name)
+            builder.coalesce_index(up.catalog, up.config, up.avgdl)
+            states[n] = (build, add, _postings_rows(spark, cfg, name))
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert all(len(rows) > 0 for rows in states[1])
+    assert states[1][0] == states[8][0], "build differs"
+    assert states[1][1] == states[8][1], "add differs"
+    assert states[1][2] == states[8][2], "coalesce differs"

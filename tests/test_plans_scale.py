@@ -23,7 +23,7 @@ from colbert_spark.sources.datagen import gen_docs_pdf, gen_queries_pdf
 def built(spark, tmp_path_factory):
     cfg = ColBERTConfig(
         index_root=str(tmp_path_factory.mktemp("idx")),
-        index_partitions=8, shuffle_partitions=8,
+        index_partitions=8,
     )
     docs_pdf = gen_docs_pdf(np.arange(150))
     docs_pdf["pid"] = np.arange(150)

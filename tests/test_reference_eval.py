@@ -26,7 +26,6 @@ def setup(spark, tmp_path_factory):
     cfg = ColBERTConfig(
         index_root=str(tmp_path_factory.mktemp("idx")),
         index_partitions=16, max_group_postings=200,
-        shuffle_partitions=16,
     )
     docs_pdf = gen_docs_pdf(np.arange(N_DOCS))
     docs_pdf["pid"] = np.arange(N_DOCS)
@@ -73,7 +72,6 @@ def test_rank_identity_at_10k_docs(spark, tmp_path_factory):
     cfg = ColBERTConfig(
         index_root=str(tmp_path_factory.mktemp("idx10k")),
         index_partitions=16, max_group_postings=500,
-        shuffle_partitions=16,
     )
     docs_pdf = gen_docs_pdf(np.arange(10_000))
     docs_pdf["pid"] = np.arange(10_000)

@@ -26,7 +26,6 @@ def env(spark, tmp_path_factory):
         block_size=32,
         index_partitions=8,
         max_group_postings=50,
-        shuffle_partitions=8,
     )
     docs_pdf = gen_docs_pdf(np.arange(200))
     docs_pdf["pid"] = np.arange(200)

@@ -16,7 +16,7 @@ from colbert_spark.sources.datagen import gen_docs_pdf
 @pytest.fixture(scope="module")
 def searcher(spark, tmp_path_factory):
     cfg = ColBERTConfig(index_root=str(tmp_path_factory.mktemp("idx")),
-                        index_partitions=4, shuffle_partitions=8)
+                        index_partitions=4)
     docs_pdf = gen_docs_pdf(np.arange(150))
     docs_pdf["pid"] = np.arange(150)
     docs = spark.createDataFrame(docs_pdf[["pid", "text"]])

@@ -21,7 +21,6 @@ def built(spark, tmp_path_factory):
     cfg = ColBERTConfig(
         index_root=str(tmp_path_factory.mktemp("idx")),
         index_partitions=8, max_group_postings=64, block_size=32,
-        shuffle_partitions=8,
     )
     docs_pdf = gen_docs_pdf(np.arange(400))
     docs_pdf["pid"] = np.arange(400)
@@ -107,7 +106,7 @@ def test_compaction_of_skewed_index_stays_bounded(spark, tmp_path):
 
     cfg = ColBERTConfig(
         index_root=str(tmp_path), index_partitions=8,
-        max_group_postings=64, block_size=32, shuffle_partitions=8,
+        max_group_postings=64, block_size=32,
     )
     docs_pdf = gen_docs_pdf(np.arange(400))
     docs_pdf["pid"] = np.arange(400)

@@ -106,8 +106,7 @@ def test_unicode_and_degenerate_docs(spark, tmp_path):
          (3, "plain english words here"), (4, "数据 处理 引擎")],
         "pid long, text string",
     )
-    cfg = ColBERTConfig(index_root=str(tmp_path), index_partitions=4,
-                        shuffle_partitions=4)
+    cfg = ColBERTConfig(index_root=str(tmp_path), index_partitions=4)
     Indexer(cfg).index("uni", docs, overwrite=True)
     s = Searcher("uni", spark, cfg)
     pids, _, _ = s.search("english words", k=5)

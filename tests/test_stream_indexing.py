@@ -21,7 +21,7 @@ from colbert_spark.streaming.indexing import _apply_batch, stream_index_append
 def _env(spark, tmp_path, name):
     cfg = ColBERTConfig(
         index_root=str(tmp_path), index_name=name, block_size=32,
-        index_partitions=8, max_group_postings=50, shuffle_partitions=8,
+        index_partitions=8, max_group_postings=50,
     )
     docs_pdf = gen_docs_pdf(np.arange(150))
     docs_pdf["pid"] = np.arange(150)

@@ -38,8 +38,7 @@ def _drain_then_stop(q, n_rows: int, timeout_s: float) -> None:
 
 
 def test_stream_index_appends_documents(spark, tmp_path):
-    cfg = ColBERTConfig(index_root=str(tmp_path / "idx"), index_partitions=8,
-                        shuffle_partitions=8)
+    cfg = ColBERTConfig(index_root=str(tmp_path / "idx"), index_partitions=8)
     docs_pdf = gen_docs_pdf(np.arange(100))
     docs_pdf["pid"] = np.arange(100)
     base = spark.createDataFrame(docs_pdf[["pid", "text"]])

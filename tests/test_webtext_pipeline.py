@@ -69,7 +69,7 @@ def test_crawl_to_search_pipeline(spark, tmp_path):
     assert pids == list(range(n_curated))  # dense, 0-based, no gaps
 
     cfg = ColBERTConfig(index_root=str(tmp_path), index_name="webtext",
-                        index_partitions=8, shuffle_partitions=8)
+                        index_partitions=8)
     Indexer(cfg).index("webtext", corpus, overwrite=True)
     queries = generate_queries(spark, 10)
     got = sorted(map(tuple, Searcher("webtext", spark, cfg)
@@ -80,7 +80,7 @@ def test_crawl_to_search_pipeline(spark, tmp_path):
     # (pid, text) table gives identical rankings — the pipeline stages
     # added nothing behind the scenes
     cfg2 = ColBERTConfig(index_root=str(tmp_path), index_name="direct",
-                         index_partitions=8, shuffle_partitions=8)
+                         index_partitions=8)
     Indexer(cfg2).index("direct", corpus, overwrite=True)
     direct = sorted(map(tuple, Searcher("direct", spark, cfg2)
                         .search_all(queries, k=10).df.collect()))
