@@ -32,11 +32,6 @@ class ColBERTConfig:
     # constant at ANY corpus size (a 10^12-doc head term just gets more
     # salts). ~24 bytes/posting ⇒ default ≈ 25 MB per kernel invocation.
     max_group_postings: int = 1 << 20
-    # cache the tokenized corpus between build phases. True trades memory/
-    # local-disk bandwidth for 2 avoided recomputes — right for mid-size
-    # corpora; False recomputes the (fully parallel) tokenize per phase —
-    # right when the token table dwarfs executor storage (web scale).
-    cache_tokens: bool = True
     # paths
     index_root: str = "/tmp/colbert_spark_indexes"
     index_name: str = "default"

@@ -157,78 +157,91 @@ class IndexUpdater:
         if id_col != "pid":
             token_df = token_df.withColumnRenamed(id_col, "pid")
 
-        term_dict = self.catalog.read(self.spark, "term_dict")
-        # frozen idf for known terms; brand-new terms get idf at df=0 under
-        # the frozen N (max idf — consistent with "stats not retrained")
-        from colbert_spark.functions import bm25 as bm25f
+        # three actions read the batch's tokens (postings append, new_terms,
+        # doc_stats): tokenize once
+        token_df = token_df.persist()
+        try:
+            term_dict = self.catalog.read(self.spark, "term_dict")
+            # frozen idf for known terms; brand-new terms get idf at df=0
+            # under the frozen N (max idf — consistent with "stats not
+            # retrained")
+            from colbert_spark.functions import bm25 as bm25f
 
-        known = term_dict.select("term", "term_id", "idf")
-        enriched = token_df.join(F.broadcast(known), "term", "left").select(
-            F.coalesce("term_id", F.xxhash64("term")).alias("term_id"),
-            "pid", "tf", "doclen",
-            F.coalesce(
-                "idf", bm25f.idf(F.lit(0), self.num_docs)
-            ).alias("idf"),
-        )
-        # the build's block kernel, in this append's disjoint epoch
-        # namespace; idf rides inline
-        blocks = builder._blockify(
-            enriched.withColumn("salt", F.lit(epoch).cast("long")),
-            self.avgdl, cfg,
-        )
-        # co-locate each bucket into one task before the partitionBy write
-        # (mirrors the build write, indexer.py). Without this, hash-by-
-        # term_id tasks each span ~every mod-based bucket and a single
-        # append fans out into up to tasks×buckets tiny files — measured
-        # 655 files for a 50-doc append at 32×32; an unbounded stream of
-        # micro-batches would melt the namenode/listing path at scale.
-        # No partition count: AQE coalesces whole hash partitions, so a
-        # bucket never splits across tasks however few the tasks are.
-        self.catalog.write(
-            blocks.repartition("bucket")
-            .sortWithinPartitions("term_id", "block_id"),
-            "postings", mode="append", partition_by=["bucket"],
-        )
-        # brand-new terms must enter the dictionary or they're unsearchable;
-        # their idf stays the frozen-stats df=0 value used for their blocks
-        new_terms = (
-            token_df.select("term").distinct()
-            .join(term_dict.select("term"), "term", "left_anti")
-            .select(
-                "term",
-                F.xxhash64("term").alias("term_id"),
-                F.lit(0).cast("long").alias("df"),
-                F.lit(0).cast("long").alias("cf"),
-                bm25f.idf(F.lit(0), self.num_docs).alias("idf"),
+            known = term_dict.select("term", "term_id", "idf")
+            enriched = token_df.join(
+                F.broadcast(known), "term", "left"
+            ).select(
+                F.coalesce("term_id", F.xxhash64("term")).alias("term_id"),
+                "pid", "tf", "doclen",
+                F.coalesce(
+                    "idf", bm25f.idf(F.lit(0), self.num_docs)
+                ).alias("idf"),
             )
-        )
-        # doc_stats: drop any stale row for re-added pids, append the new
-        # ones; catalog.replace keeps the swap atomic-ish and distributed
-        old_stats = stats.join(added, "pid", "left_anti")
-        merged_stats = old_stats.unionByName(builder.doc_stats(token_df))
-        # the three finalize mutations touch independent tables — overlap
-        # their fixed per-job scheduling latencies in one pool (the
-        # Indexer's finalize discipline)
-        from concurrent.futures import ThreadPoolExecutor
+            # the build's block kernel, in this append's disjoint epoch
+            # namespace; idf rides inline
+            blocks = builder._blockify(
+                enriched.withColumn("salt", F.lit(epoch).cast("long")),
+                self.avgdl, cfg,
+            )
+            # co-locate each bucket into one task before the partitionBy
+            # write (mirrors the build write, indexer.py). Without this,
+            # hash-by-term_id tasks each span ~every mod-based bucket and a
+            # single append fans out into up to tasks×buckets tiny files —
+            # measured 655 files for a 50-doc append at 32×32; an unbounded
+            # stream of micro-batches would melt the namenode/listing path
+            # at scale. No partition count: AQE coalesces whole hash
+            # partitions, so a bucket never splits across tasks however few
+            # the tasks are.
+            self.catalog.write(
+                blocks.repartition("bucket")
+                .sortWithinPartitions("term_id", "block_id"),
+                "postings", mode="append", partition_by=["bucket"],
+            )
+            # brand-new terms must enter the dictionary or they're
+            # unsearchable; their idf stays the frozen-stats df=0 value used
+            # for their blocks
+            new_terms = (
+                token_df.select("term").distinct()
+                .join(term_dict.select("term"), "term", "left_anti")
+                .select(
+                    "term",
+                    F.xxhash64("term").alias("term_id"),
+                    F.lit(0).cast("long").alias("df"),
+                    F.lit(0).cast("long").alias("cf"),
+                    bm25f.idf(F.lit(0), self.num_docs).alias("idf"),
+                )
+            )
+            # doc_stats: drop any stale row for re-added pids, append the
+            # new ones; catalog.replace keeps the swap atomic-ish and
+            # distributed
+            old_stats = stats.join(added, "pid", "left_anti")
+            merged_stats = old_stats.unionByName(builder.doc_stats(token_df))
+            # the three finalize mutations touch independent tables —
+            # overlap their fixed per-job scheduling latencies in one pool
+            # (the Indexer's commit discipline)
+            from concurrent.futures import ThreadPoolExecutor
 
-        jobs = [
-            lambda: self.catalog.write(new_terms, "term_dict", mode="append"),
-            lambda: self.catalog.replace(merged_stats, "doc_stats"),
-        ]
-        # stamp re-added pids live again (their tombstone row keeps
-        # excluding the OLD postings — epoch bound — while this epoch's
-        # postings score normally); n_readd came from the clash action
-        if tombs is not None and n_readd:
-            readded = (
-                tombs.join(added, "pid", "left_semi")
-                .withColumn("readded", F.lit(epoch))
-            )
-            rest = tombs.join(added, "pid", "left_anti")
-            jobs.append(lambda: self.catalog.replace(
-                rest.unionByName(readded), "tombstones"))
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            for fut in [pool.submit(j) for j in jobs]:
-                fut.result()
+            jobs = [
+                lambda: self.catalog.write(new_terms, "term_dict",
+                                           mode="append"),
+                lambda: self.catalog.replace(merged_stats, "doc_stats"),
+            ]
+            # stamp re-added pids live again (their tombstone row keeps
+            # excluding the OLD postings — epoch bound — while this epoch's
+            # postings score normally); n_readd came from the clash action
+            if tombs is not None and n_readd:
+                readded = (
+                    tombs.join(added, "pid", "left_semi")
+                    .withColumn("readded", F.lit(epoch))
+                )
+                rest = tombs.join(added, "pid", "left_anti")
+                jobs.append(lambda: self.catalog.replace(
+                    rest.unionByName(readded), "tombstones"))
+            with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+                for fut in [pool.submit(j) for j in jobs]:
+                    fut.result()
+        finally:
+            token_df.unpersist()
         # parquet layout mutated files behind Spark's back — drop any cached
         # listings so same-session readers see the swapped tables
         self.catalog.refresh(self.spark)

@@ -13,14 +13,17 @@ five overwrite modes (colbert/indexer.py:60-82):
 
 Build phases mirror CollectionIndexer.run (collection_indexer.py:61-78):
 setup (plan.json) → train (term dict + corpus stats) → index (salted block
-build) → finalize (manifest + metadata.json). Per-bucket manifest rows
-carry lineage + metrics (north_rule): input fingerprint, block/posting
-counts, encoded bytes, wall time.
+build) → commit (`write_index`: the tables, then the manifest, then
+metadata.json last; collection_indexer.py:378-497). `merge_indexes` ends
+through the same `write_index`. Per-bucket manifest rows carry lineage +
+metrics (north_rule): content fingerprint, block/posting counts, encoded
+bytes, wall time.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict
 
 import pyspark.sql.functions as F
@@ -36,19 +39,77 @@ MANIFEST_SCHEMA = (
 )
 
 
-class Indexer:
-    #: per-bucket observe() pivots 4 aggregates per bucket into the write
-    #: job; past this many buckets the expression blow-up costs more than
-    #: the column-pruned read-back pass it replaces. r6: measured on the
-    #: 100k/32-bucket build — the 128-expression CollectMetrics is
-    #: evaluated interpreted per block row and cost ~0.6 s vs the
-    #: read-back job's ~0.1 s (its scan touches only 4 footer-backed int
-    #: columns), and the gap widens with both blocks and buckets, so
-    #: observe stays only where it is genuinely cheaper: single-digit
-    #: bucket counts (small/test indexes, where one more Spark job is
-    #: relatively expensive).
-    _OBSERVE_MAX_BUCKETS = 8
+def write_index(cat, spark: SparkSession, *, term_dict: DataFrame,
+                doc_stats: DataFrame, blocks: DataFrame, buckets: list[int],
+                kept_rows: list[tuple], meta: dict, t0: float,
+                json_names: tuple[str, ...] = ("metadata.json",)) -> None:
+    """Commit a built index: term_dict, doc_stats, corpus_stats and the
+    postings of `buckets` (appended when `kept_rows` carries manifest
+    rows of earlier buckets, else overwritten), then the manifest, then
+    `meta` as each of `json_names` — metadata.json last: the index is
+    complete only once it exists. corpus_stats comes from `meta`.
 
+    The three stats tables do not depend on the postings, so they are
+    submitted from driver threads beside the postings write and their
+    tasks back-fill its tail. Manifest rows of `buckets` come from one
+    column-pruned read-back of the written postings (never the binary
+    payload columns). bit_xor of xxhash64 is order-independent and
+    overflow-free; the build is deterministic, so the fingerprint doubles
+    as an input-drift detector for resume. A bucket with no blocks, or
+    an index with no postings (nothing to read back), gets an "empty"
+    row."""
+    stats_df = spark.createDataFrame(
+        [(meta["num_docs"], meta["avg_doclen"], meta["num_terms"],
+          meta["num_postings"])],
+        "num_docs long, avg_doclen double, num_terms long, num_postings long",
+    )
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futures = [
+            pool.submit(cat.write, term_dict, "term_dict"),
+            pool.submit(cat.write, doc_stats, "doc_stats"),
+            pool.submit(cat.write, stats_df, "corpus_stats"),
+        ]
+        if buckets:
+            futures.append(pool.submit(
+                cat.write,
+                blocks.repartition("bucket")
+                .sortWithinPartitions("term_id", "block_id"),
+                "postings", "append" if kept_rows else "overwrite",
+                ["bucket"],
+            ))
+        for fut in futures:
+            fut.result()
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    written = {}
+    if buckets and meta["num_postings"] > 0:
+        written = {
+            r[0]: tuple(r[1:])
+            for r in cat.read(spark, "postings")
+            .filter(F.col("bucket").isin(buckets))
+            .groupBy("bucket")
+            .agg(
+                F.bit_xor(F.xxhash64("term_id", "block_id", "first_pid",
+                                     "num_postings")).cast("string"),
+                F.count(F.lit(1)),
+                F.sum("num_postings"),
+                F.sum("enc_bytes"),
+            )
+            .collect()
+        }
+    rows = kept_rows + [
+        (b, *written.get(b, ("empty", 0, 0, 0)), wall_ms, "ok")
+        for b in buckets
+    ]
+    cat.write(spark.createDataFrame(rows, MANIFEST_SCHEMA), "manifest")
+    meta = {**meta, "buckets_built_this_run": buckets, "wall_ms": wall_ms}
+    for name in json_names:
+        cat.write_json(name, meta)
+    # drop listings captured mid-build so post-build readers see the
+    # final file set (matters for append-mode resume in one session)
+    cat.refresh(spark)
+
+
+class Indexer:
     def __init__(self, config: ColBERTConfig | None = None):
         self.config = ColBERTConfig.from_existing(config)
 
@@ -92,9 +153,7 @@ class Indexer:
         # scheduling latency regardless of cluster size, which is exactly
         # what erodes N→4N scaling efficiency. Stats are folded into as few
         # actions as possible.
-        token_df = builder.tokenize(collection, cfg)
-        if cfg.cache_tokens:
-            token_df = token_df.persist()
+        token_df = builder.tokenize(collection, cfg).persist()
         # doc stats straight from the source (map-only), not via token_df —
         # no shuffle, and it doesn't force an early token materialization
         from colbert_spark.functions.analysis import doclen as _doclen
@@ -160,172 +219,36 @@ class Indexer:
         )
 
         # ---- resume: which buckets still need building? -------------------
-        all_buckets = set(range(cfg.index_partitions))
-        done: set[int] = set()
+        # ONE collect of the ok manifest rows: their buckets are done, and
+        # the rows themselves are kept in the manifest written below
+        kept_rows: list[tuple] = []
         if overwrite == "resume" and cat.table_exists("manifest"):
-            done = {
-                r["bucket"]
+            kept_rows = [
+                tuple(r)
                 for r in cat.read(spark, "manifest")
                 .filter(F.col("status") == "ok")
                 .collect()
-            }
-        todo = sorted(all_buckets - done)
+            ]
+        done = {r[0] for r in kept_rows}
+        todo = sorted(set(range(cfg.index_partitions)) - done)
 
         # ---- index: salted posting-block build ---------------------------
         blocks = builder.build_postings(token_df, term_dict, avgdl, cfg)
         if done:
             blocks = blocks.filter(F.col("bucket").isin(todo))
 
-        # per-bucket lineage metrics ride the write itself (observe() →
-        # CollectMetrics inside the write job): no second pass over the
-        # written index. bit_xor of xxhash64 is order-independent and
-        # overflow-free; the build is deterministic, so the content
-        # fingerprint doubles as an input-drift detector for resume.
-        # Pivoted per-bucket aggregates scale with index_partitions, so
-        # beyond _OBSERVE_MAX_BUCKETS fall back to one column-pruned
-        # read-back pass (never touches the binary posting columns).
-        obs = None
-        # Observation.get asserts if the write executed zero tasks (a
-        # corpus that tokenizes to nothing) — skip observe and emit
-        # all-empty manifest rows instead. A resume against a COMPLETE
-        # manifest (todo == []) must also skip: observe() rejects an empty
-        # aggregate list, and there is nothing to write anyway — the re-run
-        # is a no-op that just refreshes metadata.json.
-        if num_postings > 0 and todo and len(todo) <= self._OBSERVE_MAX_BUCKETS:
-            from pyspark.sql import Observation
-
-            obs = Observation("bucket_metrics")
-            h = F.xxhash64("term_id", "block_id", "first_pid", "num_postings")
-            aggs = []
-            for bkt in todo:
-                cond = F.col("bucket") == bkt
-                aggs += [
-                    F.count(F.when(cond, 1)).alias(f"nb_{bkt}"),
-                    F.sum(F.when(cond, F.col("num_postings"))).alias(f"np_{bkt}"),
-                    F.sum(F.when(cond, F.col("enc_bytes"))).alias(f"bw_{bkt}"),
-                    F.bit_xor(F.when(cond, h)).alias(f"fp_{bkt}"),
-                ]
-            blocks = blocks.observe(obs, *aggs)
-
-        # ---- postings write, with the three stats-table writes overlapped
-        # (term_dict / doc_stats / corpus_stats depend only on the cached
-        # stats inputs, not on the postings — submitting them from driver
-        # threads lets their tasks back-fill the postings write's task
-        # tail, guide-style concurrent jobs). The manifest still waits for
-        # the postings write (its metrics come from it), and metadata.json
-        # stays last — the index is "complete" only once it exists, so the
-        # crash-visibility contract is unchanged.
-        from concurrent.futures import ThreadPoolExecutor
-
-        stats_df = spark.createDataFrame(
-            [(num_docs, avgdl, int(n_terms), int(num_postings))],
-            "num_docs long, avg_doclen double, num_terms long, num_postings long",
-        )
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            futures = [
-                pool.submit(cat.write, term_dict, "term_dict"),
-                pool.submit(cat.write, doc_stats_df, "doc_stats"),
-                pool.submit(cat.write, stats_df, "corpus_stats"),
-            ]
-            if todo:
-                mode = "append" if done else "overwrite"
-                futures.append(pool.submit(
-                    cat.write,
-                    blocks.repartition("bucket")
-                    .sortWithinPartitions("term_id", "block_id"),
-                    "postings", mode, ["bucket"],
-                ))
-            for fut in futures:
-                fut.result()
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        # manifest: every bucket gets a row (resume contract). Rows for
-        # buckets built THIS run come from the write's observed metrics;
-        # previously-built buckets keep their original manifest rows
-        # (collected BEFORE the manifest dir is overwritten — tiny table).
-        old_rows: list[tuple] = []
-        if done:
-            old_rows = [
-                tuple(r)
-                for r in cat.read(spark, "manifest")
-                .filter(F.col("status") == "ok")
-                .filter(F.col("bucket").isin(sorted(done)))
-                .select("bucket", "input_fingerprint", "num_blocks",
-                        "num_postings", "bytes_written", "wall_ms", "status")
-                .collect()
-            ]
-        if not todo:
-            new_rows = []
-        elif num_postings == 0:
-            # nothing was written; the postings dir has no parquet footers
-            # to read back either
-            new_rows = [
-                (int(bkt), "empty", 0, 0, 0, wall_ms, "ok") for bkt in todo
-            ]
-        elif obs is not None:
-            vals = obs.get
-            new_rows = [
-                (
-                    int(bkt),
-                    ("empty" if vals[f"fp_{bkt}"] is None
-                     else str(vals[f"fp_{bkt}"])),
-                    int(vals[f"nb_{bkt}"] or 0),
-                    int(vals[f"np_{bkt}"] or 0),
-                    int(vals[f"bw_{bkt}"] or 0),
-                    wall_ms,
-                    "ok",
-                )
-                for bkt in todo
-            ]
-        else:
-            # fallback: one column-pruned read-back over this run's buckets
-            per_bucket = {
-                r["bucket"]: r
-                for r in cat.read(spark, "postings")
-                .filter(F.col("bucket").isin(todo))
-                .groupBy("bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("num_blocks"),
-                    F.sum("num_postings").alias("num_postings"),
-                    F.sum("enc_bytes").alias("bytes_written"),
-                    F.bit_xor(
-                        F.xxhash64("term_id", "block_id", "first_pid",
-                                   "num_postings")
-                    ).alias("fp"),
-                )
-                .collect()
-            }
-            new_rows = [
-                (
-                    int(bkt),
-                    (str(per_bucket[bkt]["fp"]) if bkt in per_bucket
-                     else "empty"),
-                    int(per_bucket[bkt]["num_blocks"]) if bkt in per_bucket else 0,
-                    int(per_bucket[bkt]["num_postings"]) if bkt in per_bucket else 0,
-                    int(per_bucket[bkt]["bytes_written"]) if bkt in per_bucket else 0,
-                    wall_ms,
-                    "ok",
-                )
-                for bkt in todo
-            ]
-        manifest = spark.createDataFrame(old_rows + new_rows, MANIFEST_SCHEMA)
-        cat.write(manifest, "manifest")
-        cat.write_json(
-            "metadata.json",
-            {
+        write_index(
+            cat, spark, term_dict=term_dict, doc_stats=doc_stats_df,
+            blocks=blocks, buckets=todo, kept_rows=kept_rows, t0=t0,
+            meta={
                 "config": asdict(cfg),
                 "num_docs": num_docs,
                 "avg_doclen": avgdl,
                 "num_terms": int(n_terms),
                 "num_postings": int(num_postings),
-                "buckets_built_this_run": todo,
-                "wall_ms": wall_ms,
             },
         )
-        if cfg.cache_tokens:
-            token_df.unpersist()
+        token_df.unpersist()
         doc_stats_df.unpersist()
         term_agg_df.unpersist()
-        # drop listings captured mid-build so post-build readers see the
-        # final file set (matters for append-mode resume in one session)
-        cat.refresh(spark)
         return str(cat.root)

@@ -34,7 +34,8 @@ BLOCK shuffles, not per posting). Past that bound the flat feed runs:
 per shard ONE flat block decode (builder.live_flat_postings —
 mapInPandas, no grouping, tombstones anti-joined), one corpus-sized
 exchange of 5 longs/row. Both feeds write byte-identical blocks
-(pytest-pinned).
+(pytest-pinned). The merged index commits through the Indexer's
+`write_index` (tables, manifest, then plan.json and metadata.json).
 """
 
 from __future__ import annotations
@@ -49,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from colbert_spark.functions import bm25
 from colbert_spark.operators import builder
 from colbert_spark.plans.config import ColBERTConfig
-from colbert_spark.plans.indexer import MANIFEST_SCHEMA
+from colbert_spark.plans.indexer import write_index
 from colbert_spark.sources.catalog import (
     active_tombstone_pids,
     collect_tombstones,
@@ -130,14 +131,11 @@ def merge_indexes(
         )
         tagg = builder.block_term_stats(blocks_all, tomb).persist()
     else:
+        # the flat decode feeds BOTH the stats pass and the re-blockify
         flat = reduce(
             DataFrame.unionByName,
             [builder.live_flat_postings(cat, spark) for cat in srcs],
-        )
-        if cfg.cache_tokens:
-            # the flat decode feeds BOTH the stats pass and the
-            # re-blockify — same persist knob as the Indexer's token cache
-            flat = flat.persist()
+        ).persist()
         tagg = flat.groupBy("term_id").agg(
             F.count(F.lit(1)).alias("df"),
             F.sum("tf").alias("cf"),
@@ -192,81 +190,22 @@ def merge_indexes(
     merged = builder._blockify(rows, avgdl, cfg,
                                idf_table=term_dict.select("term_id", "idf"),
                                tomb=tomb)
-    # overlap the three stats-table writes with the postings write (none
-    # depends on the postings; their tasks back-fill the write's tail —
-    # the Indexer's r6 finalize discipline). Manifest needs the written
-    # postings and metadata.json stays last.
-    from concurrent.futures import ThreadPoolExecutor
-
-    stats_df = spark.createDataFrame(
-        [(num_docs, avgdl, n_terms, num_postings)],
-        "num_docs long, avg_doclen double, num_terms long, num_postings long",
+    write_index(
+        dest, spark, term_dict=term_dict, doc_stats=doc_stats_df,
+        blocks=merged, buckets=list(range(cfg.index_partitions)),
+        kept_rows=[], t0=t0, json_names=("plan.json", "metadata.json"),
+        meta={
+            "config": asdict(cfg),
+            "num_docs": num_docs,
+            "avg_doclen": avgdl,
+            "num_terms": n_terms,
+            "num_postings": num_postings,
+            "merged_from": list(source_names),
+        },
     )
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futures = [
-            pool.submit(dest.write, term_dict, "term_dict"),
-            pool.submit(dest.write, doc_stats_df, "doc_stats"),
-            pool.submit(dest.write, stats_df, "corpus_stats"),
-            pool.submit(
-                dest.write,
-                merged.repartition("bucket")
-                .sortWithinPartitions("term_id", "block_id"),
-                "postings", "overwrite", ["bucket"],
-            ),
-        ]
-        for fut in futures:
-            fut.result()
-
-    # finalize: manifest via one column-pruned read-back (never touches
-    # the binary posting columns), small tables in one overlapped pool
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    per_bucket = {
-        r["bucket"]: r
-        for r in dest.read(spark, "postings")
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("num_blocks"),
-            F.sum("num_postings").alias("num_postings"),
-            F.sum("enc_bytes").alias("bytes_written"),
-            F.bit_xor(
-                F.xxhash64("term_id", "block_id", "first_pid",
-                           "num_postings")
-            ).alias("fp"),
-        )
-        .collect()
-    } if num_postings > 0 else {}
-    manifest = spark.createDataFrame(
-        [
-            (
-                int(bkt),
-                (str(per_bucket[bkt]["fp"]) if bkt in per_bucket else "empty"),
-                int(per_bucket[bkt]["num_blocks"]) if bkt in per_bucket else 0,
-                int(per_bucket[bkt]["num_postings"]) if bkt in per_bucket else 0,
-                int(per_bucket[bkt]["bytes_written"]) if bkt in per_bucket else 0,
-                wall_ms,
-                "ok",
-            )
-            for bkt in range(cfg.index_partitions)
-        ],
-        MANIFEST_SCHEMA,
-    )
-    dest.write(manifest, "manifest")
-    meta = {
-        "config": asdict(cfg),
-        "num_docs": num_docs,
-        "avg_doclen": avgdl,
-        "num_terms": n_terms,
-        "num_postings": num_postings,
-        "buckets_built_this_run": list(range(cfg.index_partitions)),
-        "wall_ms": wall_ms,
-        "merged_from": list(source_names),
-    }
-    dest.write_json("plan.json", meta)
-    dest.write_json("metadata.json", meta)
-    if flat is not None and cfg.cache_tokens:
+    if flat is not None:
         flat.unpersist()
     doc_stats_df.unpersist()
     tagg.unpersist()
     term_dict.unpersist()
-    dest.refresh(spark)
     return str(dest.root)

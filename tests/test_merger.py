@@ -4,7 +4,11 @@ stats), tombstones in sources fold away, and the guards fail loud."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import numpy as np
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pytest
 import pyspark.sql.functions as F
 
@@ -13,6 +17,7 @@ from colbert_spark.plans.index_updater import IndexUpdater
 from colbert_spark.plans.indexer import Indexer
 from colbert_spark.plans.merger import merge_indexes
 from colbert_spark.plans.searcher import Searcher
+from colbert_spark.sources.catalog import make_catalog
 from colbert_spark.sources.datagen import gen_docs_pdf, gen_queries_pdf
 
 
@@ -36,9 +41,25 @@ def _rank(spark, cfg, name, queries):
     )
 
 
+def _catalog(cfg, name):
+    c = ColBERTConfig.from_existing(cfg)
+    c.index_name = name
+    return make_catalog(c)
+
+
+def _manifest(spark, cfg, name):
+    """Manifest rows, every column but wall_ms, sorted by bucket."""
+    return sorted(
+        tuple(r) for r in
+        _catalog(cfg, name).read(spark, "manifest").drop("wall_ms").collect()
+    )
+
+
 def test_merge_equals_full_corpus_build(spark, env):
     """Shard stats provably differ from global stats (half the docs),
-    yet the merged index ranks exactly like a one-shot full build."""
+    yet the merged index ranks exactly like a one-shot full build and
+    commits the same manifest, whose block, posting and byte counts are
+    those of each written bucket (counted here with pyarrow)."""
     cfg, docs, queries = env
     Indexer(cfg).index("even", docs.filter(F.col("pid") % 2 == 0),
                        overwrite=True)
@@ -49,13 +70,25 @@ def test_merge_equals_full_corpus_build(spark, env):
     assert _rank(spark, cfg, "merged", queries) == \
         _rank(spark, cfg, "full", queries)
     # merged metadata carries the recomputed global stats
-    from colbert_spark.sources.catalog import make_catalog
-
-    c = ColBERTConfig.from_existing(cfg)
-    c.index_name = "merged"
-    meta = make_catalog(c).read_json("metadata.json")
+    meta = _catalog(cfg, "merged").read_json("metadata.json")
     assert meta["num_docs"] == 200
     assert meta["merged_from"] == ["even", "odd"]
+    full = _manifest(spark, cfg, "full")
+    assert _manifest(spark, cfg, "merged") == full
+    assert [r[0] for r in full] == list(range(8))
+    for name in ("full", "merged"):
+        postings = Path(_catalog(cfg, name).path("postings"))
+        for bucket, fp, blocks, n_post, n_bytes, status in \
+                _manifest(spark, cfg, name):
+            t = ds.dataset(postings / f"bucket={bucket}",
+                           format="parquet").to_table(
+                columns=["num_postings", "enc_bytes"])
+            assert t.num_rows > 0 and fp != "empty" and status == "ok"
+            assert (blocks, n_post, n_bytes) == (
+                t.num_rows,
+                pc.sum(t["num_postings"]).as_py(),
+                pc.sum(t["enc_bytes"]).as_py(),
+            ), (name, bucket)
 
 
 def test_merge_folds_source_tombstones(spark, env):
