@@ -14,18 +14,17 @@ index :346-376 / finalize :378-497):
              Arrow on the wire.
   finalize → global sort-by-(bucket, term_id) write + manifest + metadata.
 
-One kernel, two feeds. Every block write — build, add, coalesce, merge —
-is one plan (_blockify): repartition on (term_id, salt), sort within
-partitions, then the numpy kernel _make_block_kernel once per partition
-(mapInPandas). Only its input differs:
+One kernel, one feed per caller. Every block write — build, add,
+coalesce, merge — is one plan (_blockify): repartition on (term_id,
+salt), sort within partitions, then the numpy kernel _make_block_kernel
+once per partition (mapInPandas). Only its input differs:
 
-  flat feed    (term_id, salt, pid, tf, doclen) rows — build and add, and
-               coalesce/merge when the tombstones are too many to collect
-               (live_flat_postings anti-joins them);
-  hybrid feed  coalesce/merge (_hybrid_rows): single-salt terms' source
-               blocks still ENCODED, unioned with flat multi-salt
+  flat feed    (term_id, salt, pid, tf, doclen) rows — build and add;
+  hybrid feed  coalesce and merge (_hybrid_rows): single-salt terms'
+               source blocks still ENCODED, unioned with flat multi-salt
                postings; the kernel decodes them and folds the
-               tombstones epoch-bounded.
+               driver-held tombstone pair (catalog.collect_tombstones)
+               with catalog.tombstoned.
 
 Removal has one physical form too: tombstones, folded by coalesce_index
 (IndexUpdater.purge is remove + that fold). _make_block_builder is the
@@ -68,6 +67,7 @@ from colbert_spark.sources.catalog import (
     active_tombstone_pids,
     collect_tombstones,
     tombstone_bounds,
+    tombstoned,
 )
 
 
@@ -287,20 +287,6 @@ def _make_region_builder(block_size: int, avgdl: float, k1: float,
     return build_region
 
 
-def _tombstoned(p: np.ndarray, epochs, tomb) -> np.ndarray:
-    """Mask of the postings the epoch-bounded tombstone fold drops: the
-    pid is tombstoned AND the posting's block epoch (block_id >> 32) is
-    below its before_epoch, so a re-added pid's newer postings survive.
-    tomb = (sorted pids, before_epochs) from collect_tombstones; epochs is
-    per posting or one scalar."""
-    t_pids, t_eps = tomb
-    if not t_pids.size:
-        return np.zeros(p.size, dtype=bool)
-    idx = np.searchsorted(t_pids, p)
-    idx[idx == t_pids.size] = 0
-    return (t_pids[idx] == p) & (epochs < t_eps[idx])
-
-
 #: positions in _make_block_kernel's column lists
 #: (term_id, salt, pid, tf, doclen, idf, epoch)
 _TID, _SALT, _PID, _TF, _DL = range(5)
@@ -358,7 +344,7 @@ def _make_block_kernel(block_size: int, avgdl: float, k1: float, b: float,
     def region(cols: list):
         tid, salt, p, t, d, idf, epoch = cols
         if tomb is not None:
-            keep = ~_tombstoned(p, epoch, tomb)
+            keep = ~tombstoned(p, epoch, tomb)
             tid, salt, p, t, d, idf = (
                 c[keep] for c in (tid, salt, p, t, d, idf))
         if not p.size:
@@ -462,7 +448,8 @@ def decode_blocks_flat(blocks: DataFrame) -> DataFrame:
     """blocks → flat (term_id, pid, tf, doclen, epoch) via mapInPandas —
     embarrassingly parallel (each block is self-contained: no grouping,
     no skew). epoch = block_id >> 32 (the salt namespace) so callers can
-    fold tombstones epoch-bounded. The compaction/merge decode input."""
+    fold tombstones epoch-bounded. The multi-salt half of the hybrid feed
+    (_hybrid_rows)."""
 
     def decode_flat(batches):
         # per-block decodes land in flat lists and concatenate ONCE per
@@ -502,39 +489,20 @@ def decode_blocks_flat(blocks: DataFrame) -> DataFrame:
         )
 
 
-def live_flat_postings(catalog, spark) -> DataFrame:
-    """Flat LIVE postings of an index: decode every block and fold the
-    index's tombstones with the epoch bound (a pid drops only from
-    blocks with epoch < before_epoch) by a distributed anti-join, which
-    handles tombstone sets of any size. Returns (term_id, pid, tf,
-    doclen) — the flat feed of compaction and segment merging."""
-    flat = decode_blocks_flat(catalog.read(spark, "postings"))
-    tombs = tombstone_bounds(catalog, spark)
-    if tombs is not None:
-        tombs = tombs.withColumnRenamed("pid", "t_pid")
-        flat = flat.join(
-            tombs,
-            (F.col("pid") == F.col("t_pid"))
-            & (F.col("epoch") < F.col("before_epoch")),
-            "left_anti",
-        )
-    return flat.drop("epoch")
-
-
 def _hybrid_rows(blocks: DataFrame, dict_slice: DataFrame) -> DataFrame:
     """Hybrid feed of _blockify for coalesce and merge: re-blockify source
     blocks WITHOUT flattening the single-salt majority (guide §8: move
     heavy bytes once, decide with small rows).
 
-    The flat feed decodes every posting into a 28-byte row, crosses the
+    Flattening decodes every posting into a 28-byte row, crosses the
     Python boundary twice (decode out, kernel in) and exchanges the flat
     rows. Terms with n_salts == 1 — all but the hottest at any corpus
     size — need no pid-level placement decision (every posting lands in
     salt 0), so their blocks ship through the exchange STILL ENCODED
     (~1-2 bytes/posting; pid = -1 marks them) and decode inside the
     kernel. Only multi-salt terms' postings take the flat form. The
-    output of _blockify is byte-identical to the flat feed's
-    (pytest-pinned)."""
+    output of _blockify is byte-identical to blockifying the decoded,
+    tombstone-filtered postings flat (pytest-pinned)."""
     src = blocks.join(F.broadcast(dict_slice), "term_id")
     single = src.filter(F.col("n_salts") == 1).select(
         "term_id",
@@ -559,8 +527,7 @@ def block_term_stats(blocks: DataFrame, tomb) -> DataFrame:
     each block's tf payload (plus pids only when tombstones exist, for
     the epoch-bounded fold) and emits ONE row per block; only those tiny
     partials shuffle. Terms whose postings are all tombstoned drop
-    (df > 0 filter), matching the flat path's anti-join-then-group
-    semantics. `tomb` is the (sorted pids, before_epochs) pair from
+    (df > 0 filter). `tomb` is the (sorted pids, before_epochs) pair from
     collect_tombstones."""
 
     def gen(batches):
@@ -576,7 +543,7 @@ def block_term_stats(blocks: DataFrame, tomb) -> DataFrame:
                 t = decode_tfs_auto(bytes(tfs_col.iat[i]))
                 if tomb[0].size:
                     p = decode_pids_auto(bytes(pids_col.iat[i]))
-                    t = t[~_tombstoned(p, blk[i] >> 32, tomb)]
+                    t = t[~tombstoned(p, blk[i] >> 32, tomb)]
                 dfs[i] = t.size
                 cfs[i] = t.sum()
             yield pd.DataFrame({"term_id": pdf["term_id"].to_numpy(),
@@ -605,10 +572,8 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
     CURRENT per-term posting counts (block metadata only — column-pruned,
     never touches the binary columns), so appended segments count too.
     Its input is the hybrid feed (_hybrid_rows: single-salt terms' blocks
-    cross the exchange still encoded, tombstones fold inside the kernel
-    from a driver-collected array), or — past the tombstone collect bound
-    — the flat feed of live_flat_postings, whose distributed anti-join
-    handles tombstone sets of any size.
+    cross the exchange still encoded), and the tombstones fold inside the
+    kernel from the driver-collected pair.
 
     Duplicate-pid detection survives salting: the salt is
     pmod(xxhash64(pid), n_salts), so both copies of a duplicated
@@ -630,11 +595,8 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
     dict_slice = idf_table.join(counts, "term_id").select(
         "term_id", _n_salts(F.col("n_post"), config))
     tomb = collect_tombstones([tombstone_bounds(catalog, ss)])
-    if tomb is not None:
-        rows = _hybrid_rows(blocks, dict_slice)
-    else:
-        rows = _salted(live_flat_postings(catalog, ss), dict_slice)
-    merged = _blockify(rows, avgdl, config, idf_table=idf_table, tomb=tomb)
+    merged = _blockify(_hybrid_rows(blocks, dict_slice), avgdl, config,
+                       idf_table=idf_table, tomb=tomb)
     catalog.replace(
         merged.repartition("bucket")
         .sortWithinPartitions("term_id", "block_id"),

@@ -24,7 +24,9 @@ One kernel and one batch plan:
     groupBy(qid, pid).sum + window rank (Searcher.search_all). No
     skipping, but each block is decoded once however many queries share
     its term.
-Both return identical rankings (tested for equivalence).
+Both return identical rankings (tested for equivalence), and both drop
+tombstoned postings right after decode with catalog.tombstoned, from the
+driver-held (pid, before_epoch) pair of catalog.collect_tombstones.
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from colbert_spark.functions.bm25 import B, K1, SCORE_DECIMALS
 from colbert_spark.functions.codec import decode_pids_auto as decode_pids, \
     decode_tfs_auto as decode_tfs
+from colbert_spark.sources.catalog import tombstoned
 
 RANKING_SCHEMA = "qid long, pid long, rank int, score double"
 
@@ -61,9 +64,10 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
     terms that cannot touch any accumulated candidate are never decoded.
 
     excluded: (sorted pid array, aligned before_epoch array) — epoch-aware
-    tombstones. A pid is dropped only from blocks whose epoch
-    (block_id >> 32) < its before_epoch, so a re-added pid's newer
-    postings survive while its removed-era postings are excluded.
+    tombstones, applied by catalog.tombstoned. A pid is dropped only from
+    blocks whose epoch (block_id >> 32) < its before_epoch, so a re-added
+    pid's newer postings survive while its removed-era postings are
+    excluded.
 
     allowed: sorted unique pid array — the allow-list (F3). Postings of
     other pids are dropped right after decode, like tombstones, so every
@@ -104,14 +108,10 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
             scores = _term_scores(decode_tfs(bytes(tb)), decode_tfs(bytes(db)),
                                   idf, avgdl)
             if excluded is not None:
-                ex_pids, ex_before = excluded
-                # only tombstones whose bound covers THIS block's epoch
-                active = ex_pids[ex_before > (int(bid) >> 32)]
-                if active.size:
-                    keep = ~np.isin(pids, active, assume_unique=False)
-                    pids, scores = pids[keep], scores[keep]
-                    if pids.size == 0:
-                        continue
+                keep = ~tombstoned(pids, int(bid) >> 32, excluded)
+                pids, scores = pids[keep], scores[keep]
+                if pids.size == 0:
+                    continue
             if allowed is not None:
                 keep = np.isin(pids, allowed, assume_unique=True)
                 pids, scores = pids[keep], scores[keep]
@@ -142,9 +142,8 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
 
 def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
                  avgdl: float, qid_to_pids: DataFrame | None = None,
-                 tombstones: DataFrame | None = None,
+                 tombstones: "tuple[np.ndarray, np.ndarray] | None" = None,
                  allow_small: bool = False,
-                 tombstones_small: bool = True,
                  after: DataFrame | None = None) -> DataFrame:
     """Score blocks in place (no per-query gather), then relational top-k.
 
@@ -155,22 +154,23 @@ def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
     partials s = idf·core. Catalyst's map-side combine collapses the
     (qid, pid) partial sums before the one shuffle; window rank caps at k.
 
-    allow_small / tombstones_small: the caller's assertion that the
-    allow-list / tombstone set fits a broadcast. When False the joins are
-    left unhinted — an allow-list can be O(corpus) (e.g. a language
-    filter), and a forced broadcast of it is a driver/executor OOM; AQE
-    still converts to a runtime broadcast join when the set turns out
-    small.
+    tombstones: the (sorted pids, aligned before_epochs) pair of
+    catalog.collect_tombstones; the kernel drops the postings it excludes
+    (catalog.tombstoned, epoch-bounded) right after decode, as
+    score_query_blocks does.
+
+    allow_small: the caller's assertion that the allow-list fits a
+    broadcast. When False the join is left unhinted — an allow-list can
+    be O(corpus) (e.g. a language filter), and a forced broadcast of it
+    is a driver/executor OOM; AQE still converts to a runtime broadcast
+    join when the set turns out small.
     """
-
-    def _maybe_bcast(df: DataFrame, small: bool):
-        return F.broadcast(df) if small else df
-
-    with_epoch = tombstones is not None
+    if tombstones is not None and not tombstones[0].size:
+        tombstones = None
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            tids, pids, cores, epochs = [], [], [], []
+            tids, pids, cores = [], [], []
             for tid, bid, pb, tb, db in zip(
                 pdf["term_id"], pdf["block_id"], pdf["pids"], pdf["tfs"],
                 pdf["dls"]
@@ -178,40 +178,21 @@ def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
                 p = decode_pids(bytes(pb))
                 c = _term_scores(decode_tfs(bytes(tb)), decode_tfs(bytes(db)),
                                  1.0, avgdl)
+                if tombstones is not None:
+                    keep = ~tombstoned(p, int(bid) >> 32, tombstones)
+                    p, c = p[keep], c[keep]
                 tids.append(np.full(p.size, tid, dtype=np.int64))
                 pids.append(p)
                 cores.append(c)
-                if with_epoch:
-                    epochs.append(
-                        np.full(p.size, int(bid) >> 32, dtype=np.int64)
-                    )
             if tids:
-                cols = {
+                yield pd.DataFrame({
                     "term_id": np.concatenate(tids),
                     "pid": np.concatenate(pids),
                     "core": np.concatenate(cores),
-                }
-                if with_epoch:
-                    cols["epoch"] = np.concatenate(epochs)
-                yield pd.DataFrame(cols)
+                })
 
-    schema = "term_id long, pid long, core double" + (
-        ", epoch long" if with_epoch else ""
-    )
     partials = blocks.select("term_id", "block_id", "pids", "tfs", "dls") \
-        .mapInPandas(kernel, schema=schema)
-    if tombstones is not None:
-        # epoch-bounded exclusion: drop (pid, epoch < before_epoch) rows —
-        # a re-added pid's newer postings survive
-        t = tombstones.select(
-            F.col("pid").alias("t_pid"), "before_epoch"
-        )
-        partials = partials.join(
-            _maybe_bcast(t, tombstones_small),
-            (F.col("pid") == F.col("t_pid"))
-            & (F.col("epoch") < F.col("before_epoch")),
-            "left_anti",
-        ).drop("epoch")
+        .mapInPandas(kernel, schema="term_id long, pid long, core double")
     scored = partials.join(F.broadcast(qterms), "term_id").select(
         "qid", "pid", (F.col("idf") * F.col("core")).alias("s")
     )
@@ -226,7 +207,8 @@ def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
         restricted_qids = F.broadcast(allow.select("qid").distinct())
         restricted = scored.join(
             restricted_qids, "qid", "left_semi"
-        ).join(_maybe_bcast(allow, allow_small), ["qid", "pid"], "left_semi")
+        ).join(F.broadcast(allow) if allow_small else allow, ["qid", "pid"],
+               "left_semi")
         unrestricted = scored.join(restricted_qids, "qid", "left_anti")
         scored = restricted.unionByName(unrestricted)
     agg = scored.groupBy("qid", "pid").agg(

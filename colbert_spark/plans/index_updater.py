@@ -106,9 +106,9 @@ class IndexUpdater:
             merged = old.join(new, "pid", "left_anti").unionByName(new)
         else:
             merged = new
-        # replace() avoids read-from/write-to-same-path; tombstone tables
-        # can be large — never collected to the driver (Searcher applies a
-        # size guard too)
+        # replace() avoids read-from/write-to-same-path; the merge stays in
+        # Spark — only readers and folds collect the table
+        # (catalog.collect_tombstones)
         self.catalog.replace(merged, "tombstones")
         self.catalog.refresh(self.spark)
 

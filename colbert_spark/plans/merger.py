@@ -23,19 +23,18 @@ merge — its single-machine index never shards. At 10^12 documents the
 build itself must shard; this is the fold step.
 
 Plan shape: the postings re-blockify through the build's one kernel
-(builder._blockify) with df-proportional salts from the merged df. When
-the union of source tombstones fits a driver collect, its input is the
-hybrid feed (builder._hybrid_rows): single-salt terms' blocks cross the
-(term_id, salt) exchange STILL ENCODED (~1-2 bytes/posting), only
-multi-salt (hot) terms' postings flatten to rows, and the tombstones fold
-inside the kernel epoch-bounded; the stats pass reads per-block (df, cf)
-partials from the tf payloads (builder.block_term_stats — one row per
-BLOCK shuffles, not per posting). Past that bound the flat feed runs:
-per shard ONE flat block decode (builder.live_flat_postings —
-mapInPandas, no grouping, tombstones anti-joined), one corpus-sized
-exchange of 5 longs/row. Both feeds write byte-identical blocks
-(pytest-pinned). The merged index commits through the Indexer's
-`write_index` (tables, manifest, then plan.json and metadata.json).
+(builder._blockify) with df-proportional salts from the merged df. Its
+input is the hybrid feed (builder._hybrid_rows): single-salt terms'
+blocks cross the (term_id, salt) exchange STILL ENCODED (~1-2
+bytes/posting) and only multi-salt (hot) terms' postings flatten to rows.
+The union of source tombstones is one driver-held (pid, before_epoch)
+pair (catalog.collect_tombstones); both the kernel and the stats pass
+fold it epoch-bounded. The stats pass reads per-block (df, cf) partials
+from the tf payloads (builder.block_term_stats — one row per BLOCK
+shuffles, not per posting). The merged index equals a fresh build of
+the live union, payload bytes included (pytest-pinned), and commits
+through the Indexer's `write_index` (tables, manifest, then plan.json
+and metadata.json).
 """
 
 from __future__ import annotations
@@ -117,29 +116,14 @@ def merge_indexes(
         srcs.append(cat)
 
     t0 = time.monotonic()
-    # hybrid feed when the union of source tombstones fits a driver
-    # collect; otherwise the flat decode (its anti-join handles tombstone
-    # sets of any size)
     tomb = collect_tombstones([tombstone_bounds(c, spark) for c in srcs])
-    flat = None
-    if tomb is not None:
-        blocks_all = reduce(
-            DataFrame.unionByName,
-            [cat.read(spark, "postings")
-             .select("term_id", "block_id", "pids", "tfs", "dls")
-             for cat in srcs],
-        )
-        tagg = builder.block_term_stats(blocks_all, tomb).persist()
-    else:
-        # the flat decode feeds BOTH the stats pass and the re-blockify
-        flat = reduce(
-            DataFrame.unionByName,
-            [builder.live_flat_postings(cat, spark) for cat in srcs],
-        ).persist()
-        tagg = flat.groupBy("term_id").agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sum("tf").alias("cf"),
-        ).persist()
+    blocks_all = reduce(
+        DataFrame.unionByName,
+        [cat.read(spark, "postings")
+         .select("term_id", "block_id", "pids", "tfs", "dls")
+         for cat in srcs],
+    )
+    tagg = builder.block_term_stats(blocks_all, tomb).persist()
     doc_stats_df = reduce(
         DataFrame.unionByName, [_live_doc_stats(c, spark) for c in srcs]
     ).persist()
@@ -183,11 +167,8 @@ def merge_indexes(
 
     dict_slice = term_dict.select(
         "term_id", builder._n_salts(F.col("df"), cfg))
-    if tomb is not None:
-        rows = builder._hybrid_rows(blocks_all, dict_slice)
-    else:
-        rows = builder._salted(flat, dict_slice)
-    merged = builder._blockify(rows, avgdl, cfg,
+    merged = builder._blockify(builder._hybrid_rows(blocks_all, dict_slice),
+                               avgdl, cfg,
                                idf_table=term_dict.select("term_id", "idf"),
                                tomb=tomb)
     write_index(
@@ -203,8 +184,6 @@ def merge_indexes(
             "merged_from": list(source_names),
         },
     )
-    if flat is not None:
-        flat.unpersist()
     doc_stats_df.unpersist()
     tagg.unpersist()
     term_dict.unpersist()

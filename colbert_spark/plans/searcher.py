@@ -25,11 +25,12 @@ the reference serves search in-process (server.py:16-44):
                              AND term_id ∈ query term ids
     → wand.score_query_blocks(tombstones, allow-list mask) → exact top-k.
 
-It falls back to search_all when the catalog has no plain-file layout
-(IcebergIndexCatalog.read_arrow is None) or when the tombstones are held
-only as a DataFrame (past TOMBSTONE_COLLECT_MAX rows). These are two
+It falls back to search_all only when the catalog has no plain-file
+layout (IcebergIndexCatalog.read_arrow is None). These are two
 independent implementations of one ranking contract, each the other's
 test reference: the kernel answers search, the scatter plan search_all.
+Both apply the same tombstones: the (pid, before_epoch) pair collected
+to the driver once at open (catalog.collect_tombstones).
 
 The reference's k-dependent funnel knobs (ncells/threshold/ndocs,
 searcher.py:106-127) have no free parameters here: block-max pruning is
@@ -47,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from colbert_spark.functions import analysis
 from colbert_spark.operators import wand
 from colbert_spark.plans.config import ColBERTConfig
+from colbert_spark.plans.index_updater import load_tombstones
 from colbert_spark.sources.catalog import (
     collect_tombstones,
     make_catalog,
@@ -72,28 +74,12 @@ class Searcher:
         self.avgdl: float = meta["avg_doclen"]
         self.term_dict = self.catalog.read(spark, "term_dict").persist()
         self.term_dict.count()  # materialize once
-        self._load_tombstones()
-
-    def _load_tombstones(self) -> None:
-        """Removed pids (IndexUpdater.remove analog) — excluded at decode,
-        epoch-bounded: each row is (pid, before_epoch) and the pid is
-        dropped only from blocks whose epoch < before_epoch (a re-added
-        pid's newer postings score normally).
-
-        Up to TOMBSTONE_COLLECT_MAX rows → driver numpy pair (the kernel
-        filters after decode). Larger sets → DataFrame only (search then
-        runs the scatter plan, whose anti-join handles any size)."""
-        from colbert_spark.plans.index_updater import load_tombstones
-
-        self.tombstones = None          # (sorted pids, aligned befores)
-        self.tombstones_df = None       # (pid, before_epoch)
-        tomb = load_tombstones(self.catalog, self.spark)
-        if tomb is None:
-            return
-        tomb = tomb.select("pid", "before_epoch")
-        self.tombstones = collect_tombstones([tomb])
-        if self.tombstones is None:
-            self.tombstones_df = tomb
+        # removed pids (IndexUpdater.remove analog) as (sorted pids,
+        # aligned before_epochs): both kernels drop a pid only from blocks
+        # whose epoch < its before_epoch, so a re-added pid's newer
+        # postings score normally
+        self.tombstones = collect_tombstones(
+            [load_tombstones(self.catalog, spark)])
 
     # -- query encoding (lexical analog of Searcher.encode) ----------------
     def _query_terms(self, queries: DataFrame) -> DataFrame:
@@ -181,16 +167,10 @@ class Searcher:
         if blocks is None:
             empty = self.spark.createDataFrame([], wand.RANKING_SCHEMA)
             return Ranking(empty, self._provenance(k))
-        tomb_df, tomb_small = self.tombstones_df, False
-        if self.tombstones is not None and self.tombstones[0].size:
-            tomb_df, tomb_small = self.spark.createDataFrame(pd.DataFrame(
-                {"pid": self.tombstones[0], "before_epoch": self.tombstones[1]}
-            )), True
         ranking = wand.topk_scatter(blocks, self.spark.createDataFrame(qrows),
                                     k, self.avgdl, qid_to_pids=qid_to_pids,
-                                    tombstones=tomb_df,
-                                    allow_small=allow_small,
-                                    tombstones_small=tomb_small, after=after)
+                                    tombstones=self.tombstones,
+                                    allow_small=allow_small, after=after)
         return Ranking(ranking, self._provenance(k))
 
     def search(self, text: str, k: int = 10,
@@ -205,10 +185,9 @@ class Searcher:
         _check_k(k)
         if pids is not None and len(pids) == 0:
             return [], [], []
-        if self.tombstones_df is None:
-            hits = self._search_local(text, k, pids)
-            if hits is not None:
-                return hits
+        hits = self._search_local(text, k, pids)
+        if hits is not None:
+            return hits
         q = self.spark.createDataFrame([(0, text)], "qid long, text string")
         allow = None
         if pids is not None:

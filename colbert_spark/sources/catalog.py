@@ -50,12 +50,6 @@ def posting_buckets(term_ids, index_partitions: int) -> list[int]:
     return sorted({int(t) % index_partitions for t in term_ids})
 
 
-#: past this many tombstone rows, readers keep the set as a DataFrame
-#: (distributed anti-join) instead of collecting it into a driver-side
-#: numpy pair that rides kernel closures
-TOMBSTONE_COLLECT_MAX = 100_000
-
-
 def tombstone_bounds(catalog, spark: SparkSession) -> DataFrame | None:
     """(pid, before_epoch) of an index's tombstones, or None: the pid's
     postings drop from blocks whose epoch (block_id >> 32) is below
@@ -85,27 +79,37 @@ def active_tombstone_pids(catalog, spark: SparkSession) -> DataFrame | None:
     return t.select("pid")
 
 
-def collect_tombstones(frames) -> tuple[np.ndarray, np.ndarray] | None:
+def collect_tombstones(frames) -> tuple[np.ndarray, np.ndarray]:
     """(sorted pids, aligned before_epochs) of the union of (pid,
-    before_epoch) frames (None entries skip), one bounded collect per
-    frame; None when the union passes TOMBSTONE_COLLECT_MAX rows. A pid
-    listed twice keeps its largest bound, as an anti-join would. Pid
+    before_epoch) frames (None entries skip), one columnar collect per
+    frame — the one tombstone form every reader and fold applies
+    (`tombstoned`). A pid listed twice keeps its largest bound. Pid
     spaces of merged sources are disjoint (guarded upstream), so one flat
     union is sound."""
-    rows = []
+    pids = eps = np.empty(0, dtype=np.int64)
     for t in frames:
-        if t is None:
-            continue
-        rows += t.limit(TOMBSTONE_COLLECT_MAX + 1).collect()
-        if len(rows) > TOMBSTONE_COLLECT_MAX:
-            return None
-    pids = np.fromiter((r["pid"] for r in rows), np.int64, len(rows))
-    eps = np.fromiter((r["before_epoch"] for r in rows), np.int64, len(rows))
+        if t is not None:
+            pdf = t.select("pid", "before_epoch").toPandas()
+            pids = np.append(pids, pdf["pid"].to_numpy(np.int64))
+            eps = np.append(eps, pdf["before_epoch"].to_numpy(np.int64))
     order = np.lexsort((eps, pids))
     pids, eps = pids[order], eps[order]
     last = np.ones(pids.size, dtype=bool)
     last[:-1] = pids[1:] != pids[:-1]
     return pids[last], eps[last]
+
+
+def tombstoned(p: np.ndarray, epochs, tomb) -> np.ndarray:
+    """Mask of the postings a tombstone set drops: the pid is tombstoned
+    AND the posting's block epoch (block_id >> 32) is below its
+    before_epoch, so a re-added pid's newer postings survive. tomb is the
+    collect_tombstones pair; epochs is per posting or one scalar."""
+    t_pids, t_eps = tomb
+    if not t_pids.size:
+        return np.zeros(p.size, dtype=bool)
+    idx = np.searchsorted(t_pids, p)
+    idx[idx == t_pids.size] = 0
+    return (t_pids[idx] == p) & (epochs < t_eps[idx])
 
 
 class IndexCatalog:

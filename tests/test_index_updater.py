@@ -13,7 +13,6 @@ from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.plans.index_updater import IndexUpdater
 from colbert_spark.plans.indexer import Indexer
 from colbert_spark.plans.searcher import Searcher
-from colbert_spark.sources import catalog as catalog_mod
 from colbert_spark.sources.catalog import IndexCatalog
 from colbert_spark.sources.datagen import gen_docs_pdf, gen_queries_pdf
 from tests.equivalence import EDGE_QUERIES, assert_equivalent_views
@@ -93,20 +92,33 @@ def test_point_search_equals_batch_across_index_states(spark, env):
     check()
 
 
-def test_point_search_with_dataframe_tombstones_matches(spark, env,
-                                                        monkeypatch):
-    """Past TOMBSTONE_COLLECT_MAX the tombstones live only as a DataFrame;
-    search() then runs through search_all and still answers the same."""
+def test_tombstones_past_old_collect_bound_stay_driver_local(spark, env):
+    """Tombstones have one driver-held form at any size. 150k more
+    tombstones of absent pids (past the 100k rows where a DataFrame form
+    used to take over and send search() through Spark) change no
+    ranking, and search() still runs no Spark job."""
     cfg, docs, queries = env
     texts = [r["text"] for r in queries.collect()][:4]
-    IndexUpdater("u1", spark, cfg).remove(list(range(100, 120)))
-    local = Searcher("u1", spark, cfg)
-    assert local.tombstones is not None
-    want = [local.search(t, k=10) for t in texts]
-    monkeypatch.setattr(catalog_mod, "TOMBSTONE_COLLECT_MAX", 5)
+    removed = list(range(100, 120))
+    IndexUpdater("u1", spark, cfg).remove(removed)
     s = Searcher("u1", spark, cfg)
-    assert s.tombstones_df is not None
-    assert [s.search(t, k=10) for t in texts] == want
+    want = [s.search(t, k=10) for t in texts]
+    want_all = sorted(map(tuple, s.search_all(queries, k=10).df.collect()))
+    assert all(pid not in set(removed) for (_, pid, _, _) in want_all)
+
+    IndexUpdater("u1", spark, cfg).remove(range(10**6, 10**6 + 150_000))
+    s = Searcher("u1", spark, cfg)
+    assert s.tombstones[0].size == 150_020
+    sc = spark.sparkContext
+    group = "test-large-tombstones-point-search"
+    sc.setJobGroup(group, "point searches past the old bound")
+    try:
+        assert [s.search(t, k=10) for t in texts] == want
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(map(tuple, s.search_all(queries, k=10).df.collect())) \
+        == want_all
 
 
 def test_add_duplicate_pid_rejected(spark, env):
@@ -195,26 +207,6 @@ def test_readd_path_avoids_driver_collect(spark, env, monkeypatch):
     IndexUpdater("u1", spark, cfg).add(docs.filter(F.col("pid").isin(victims)))
     monkeypatch.undo()
     assert _rank(spark, cfg, queries) == before
-
-
-def test_large_tombstone_set_forces_scatter(spark, env, monkeypatch):
-    """Past TOMBSTONE_COLLECT_MAX the exclusion set must stay a DataFrame
-    (distributed anti-join, unhinted) instead of a driver numpy pair
-    broadcast as a local relation — and rankings must be identical."""
-    cfg, docs, queries = env
-    removed = list(range(100, 120))
-    IndexUpdater("u1", spark, cfg).remove(removed)
-
-    base = Searcher("u1", spark, cfg)
-    assert base.tombstones is not None  # 20 < default threshold → numpy path
-    expect = sorted(map(tuple, base.search_all(queries, k=10).df.collect()))
-    assert all(pid not in set(removed) for (_, pid, _, _) in expect)
-
-    monkeypatch.setattr(catalog_mod, "TOMBSTONE_COLLECT_MAX", 5)
-    s = Searcher("u1", spark, cfg)
-    assert s.tombstones is None and s.tombstones_df is not None
-    assert sorted(map(tuple, s.search_all(queries, k=10).df.collect())) \
-        == expect
 
 
 # -- epoch re-add + eager purge surgery (r5) ---------------------------------

@@ -47,6 +47,17 @@ def _catalog(cfg, name):
     return make_catalog(c)
 
 
+def _postings_rows(spark, catalog):
+    """Every postings row, payload bytes included, sorted."""
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+              for v in r)
+        for r in catalog.read(spark, "postings").select(
+            "term_id", "block_id", "first_pid", "last_pid", "num_postings",
+            "max_block_score", "pids", "tfs", "dls", "enc_bytes").collect()
+    )
+
+
 def _manifest(spark, cfg, name):
     """Manifest rows, every column but wall_ms, sorted by bucket."""
     return sorted(
@@ -106,6 +117,13 @@ def test_merge_folds_source_tombstones(spark, env):
     merge_indexes(spark, ["even", "odd"], "merged2", cfg)
     assert _rank(spark, cfg, "merged2", queries) == \
         _rank(spark, cfg, "full_minus", queries)
+    # the merge recomputes every statistic from the live union, so its
+    # blocks (payload bytes included) and dictionary are the fresh
+    # build's, row for row
+    merged, fresh = _catalog(cfg, "merged2"), _catalog(cfg, "full_minus")
+    assert _postings_rows(spark, merged) == _postings_rows(spark, fresh)
+    assert sorted(map(tuple, merged.read(spark, "term_dict").collect())) \
+        == sorted(map(tuple, fresh.read(spark, "term_dict").collect()))
 
 
 def test_single_source_merge_refreshes_frozen_stats(spark, env):

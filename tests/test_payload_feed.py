@@ -1,25 +1,23 @@
-"""The r6 hybrid payload feed (builder._hybrid_rows +
-builder.block_term_stats) must be BYTE-IDENTICAL to the flat-decode
-path it replaces: same posting blocks (payload bytes included), same
-merged statistics — across removals, epoch re-adds, appends and
-multi-salt (hot) terms. The flat path is forced by monkeypatching
-catalog.TOMBSTONE_COLLECT_MAX to 0, so collect_tombstones reports "too
-large" (None). The same digest pins the layout against the session's
-shuffle task count."""
+"""coalesce_index feeds its one block kernel the hybrid feed
+(builder._hybrid_rows: single-salt terms' blocks still encoded, hot
+terms' postings flat, tombstones folded in the kernel). Its blocks,
+payload bytes included, must equal blockifying the index's live postings
+flat — every block decoded, tombstones anti-joined epoch-bounded,
+re-salted — composed here as the reference, across removals, epoch
+re-adds and multi-salt (hot) terms. The merge's identity is pinned
+against a fresh build in test_merger.py. The same digest pins the layout
+against the session's shuffle task count."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 import pyspark.sql.functions as F
 
 from colbert_spark.operators import builder
 from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.plans.index_updater import IndexUpdater
 from colbert_spark.plans.indexer import Indexer
-from colbert_spark.plans.merger import merge_indexes
-from colbert_spark.sources import catalog as catalog_mod
-from colbert_spark.sources.catalog import make_catalog
+from colbert_spark.sources.catalog import make_catalog, tombstone_bounds
 from colbert_spark.sources.datagen import gen_docs_pdf
 
 
@@ -38,79 +36,60 @@ def _docs(spark, n=200):
     return spark.createDataFrame(pdf[["pid", "text"]])
 
 
-def _postings_rows(spark, cfg, name):
-    c = ColBERTConfig.from_existing(cfg)
-    c.index_name = name
-    rows = make_catalog(c).read(spark, "postings").select(
-        "term_id", "block_id", "first_pid", "last_pid", "num_postings",
-        "max_block_score", "pids", "tfs", "dls", "enc_bytes",
-    ).collect()
+_COLS = ("term_id", "block_id", "first_pid", "last_pid", "num_postings",
+         "max_block_score", "pids", "tfs", "dls", "enc_bytes")
+
+
+def _sorted_rows(blocks):
     return sorted(
-        (r["term_id"], r["block_id"], r["first_pid"], r["last_pid"],
-         r["num_postings"], r["max_block_score"], bytes(r["pids"]),
-         bytes(r["tfs"]), bytes(r["dls"]), r["enc_bytes"])
-        for r in rows
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+              for v in r)
+        for r in blocks.select(*_COLS).collect()
     )
 
 
-def _lifecycle(spark, cfg, name, docs):
-    """build → remove → re-add (epoch append) → coalesce."""
-    Indexer(cfg).index(name, docs, overwrite=True)
-    IndexUpdater(name, spark, cfg).remove([3, 5, 7, 11])
-    IndexUpdater(name, spark, cfg).add(
-        docs.filter(F.col("pid").isin([5, 11])))
+def _postings_rows(spark, cfg, name):
     c = ColBERTConfig.from_existing(cfg)
     c.index_name = name
-    cat = make_catalog(c)
-    avgdl = cat.read_json("metadata.json")["avg_doclen"]
-    builder.coalesce_index(cat, c, avgdl)
+    return _sorted_rows(make_catalog(c).read(spark, "postings"))
 
 
-def test_hybrid_coalesce_byte_identical_to_flat(spark, tmp_path,
-                                                monkeypatch):
+def _flat_coalesce_reference(spark, cat, cfg, avgdl):
+    """The blocks coalesce_index must write, from the flat feed: decode
+    every block, anti-join the tombstones epoch-bounded (a pid drops only
+    from blocks whose epoch is below its before_epoch), re-salt by the
+    current posting counts and blockify."""
+    blocks = cat.read(spark, "postings")
+    counts = blocks.groupBy("term_id").agg(
+        F.sum("num_postings").alias("n_post"))
+    idf_table = cat.read(spark, "term_dict").select("term_id", "idf")
+    dict_slice = idf_table.join(counts, "term_id").select(
+        "term_id", builder._n_salts(F.col("n_post"), cfg))
+    tombs = tombstone_bounds(cat, spark).withColumnRenamed("pid", "t_pid")
+    live = builder.decode_blocks_flat(blocks).join(
+        tombs,
+        (F.col("pid") == F.col("t_pid"))
+        & (F.col("epoch") < F.col("before_epoch")),
+        "left_anti",
+    )
+    return _sorted_rows(builder._blockify(
+        builder._salted(live, dict_slice), avgdl, cfg, idf_table=idf_table))
+
+
+def test_hybrid_coalesce_byte_identical_to_flat(spark, tmp_path):
+    """build → remove → re-add (epoch append) → coalesce, against the
+    flat reference composed before the coalesce."""
     docs = _docs(spark)
-    cfg_h = _mk_cfg(tmp_path, "hyb")
-    _lifecycle(spark, cfg_h, "hyb", docs)
-    hyb = _postings_rows(spark, cfg_h, "hyb")
-
-    monkeypatch.setattr(catalog_mod, "TOMBSTONE_COLLECT_MAX", 0)
-    cfg_f = _mk_cfg(tmp_path, "flat")
-    _lifecycle(spark, cfg_f, "flat", docs)
-    flat = _postings_rows(spark, cfg_f, "flat")
-
+    cfg = _mk_cfg(tmp_path, "hyb")
+    Indexer(cfg).index("hyb", docs, overwrite=True)
+    IndexUpdater("hyb", spark, cfg).remove([3, 5, 7, 11])
+    up = IndexUpdater("hyb", spark, cfg)
+    up.add(docs.filter(F.col("pid").isin([5, 11])))
+    flat = _flat_coalesce_reference(spark, up.catalog, up.config, up.avgdl)
+    builder.coalesce_index(up.catalog, up.config, up.avgdl)
+    hyb = _postings_rows(spark, cfg, "hyb")
     assert len(hyb) > 0
     assert hyb == flat
-
-
-def test_hybrid_merge_byte_identical_to_flat(spark, tmp_path, monkeypatch):
-    docs = _docs(spark)
-    cfg = _mk_cfg(tmp_path, "s_a")
-    Indexer(cfg).index("s_a", docs.filter(F.col("pid") % 2 == 0),
-                       overwrite=True)
-    Indexer(cfg).index("s_b", docs.filter(F.col("pid") % 2 == 1),
-                       overwrite=True)
-    IndexUpdater("s_a", spark, cfg).remove([0, 2, 4])
-
-    merge_indexes(spark, ["s_a", "s_b"], "m_hyb", cfg)
-    hyb = _postings_rows(spark, cfg, "m_hyb")
-    c_hyb = ColBERTConfig.from_existing(cfg)
-    c_hyb.index_name = "m_hyb"
-    hyb_dict = sorted(
-        map(tuple,
-            make_catalog(c_hyb).read(spark, "term_dict").collect()))
-
-    monkeypatch.setattr(catalog_mod, "TOMBSTONE_COLLECT_MAX", 0)
-    merge_indexes(spark, ["s_a", "s_b"], "m_flat", cfg)
-    flat = _postings_rows(spark, cfg, "m_flat")
-    c_flat = ColBERTConfig.from_existing(cfg)
-    c_flat.index_name = "m_flat"
-    flat_dict = sorted(
-        map(tuple,
-            make_catalog(c_flat).read(spark, "term_dict").collect()))
-
-    assert len(hyb) > 0
-    assert hyb == flat
-    assert hyb_dict == flat_dict
 
 
 def test_hybrid_fixture_exercises_multi_salt(spark, tmp_path):
