@@ -4,9 +4,10 @@ terms' postings flat, tombstones folded in the kernel). Its blocks,
 payload bytes included, must equal blockifying the index's live postings
 flat — every block decoded, tombstones anti-joined epoch-bounded,
 re-salted — composed here as the reference, across removals, epoch
-re-adds and multi-salt (hot) terms. The merge's identity is pinned
-against a fresh build in test_merger.py. The same digest pins the layout
-against the session's shuffle task count."""
+re-adds and multi-salt (hot) terms. merge_indexes feeds the same
+kernel; its blocks and dictionary must equal a fresh build of the
+sources' live union, the flat reference for a merge. The same digest
+pins the layout against the session's shuffle task count."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ from colbert_spark.operators import builder
 from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.plans.index_updater import IndexUpdater
 from colbert_spark.plans.indexer import Indexer
+from colbert_spark.plans.merger import merge_indexes
 from colbert_spark.sources.catalog import make_catalog, tombstone_bounds
 from colbert_spark.sources.datagen import gen_docs_pdf
 
@@ -90,6 +92,36 @@ def test_hybrid_coalesce_byte_identical_to_flat(spark, tmp_path):
     hyb = _postings_rows(spark, cfg, "hyb")
     assert len(hyb) > 0
     assert hyb == flat
+
+
+def _term_dict_rows(spark, cfg, name):
+    c = ColBERTConfig.from_existing(cfg)
+    c.index_name = name
+    return sorted(
+        map(tuple, make_catalog(c).read(spark, "term_dict").collect()))
+
+
+def test_hybrid_merge_byte_identical_to_flat(spark, tmp_path):
+    """Two halves, one with tombstones, merged through the hybrid feed,
+    against a fresh build of the live union: the merge recomputes every
+    statistic from that union, so blocks (payload bytes included) and
+    term_dict must match row for row, multi-salt terms included."""
+    docs = _docs(spark)
+    cfg = _mk_cfg(tmp_path, "s_a")
+    Indexer(cfg).index("s_a", docs.filter(F.col("pid") % 2 == 0),
+                       overwrite=True)
+    Indexer(cfg).index("s_b", docs.filter(F.col("pid") % 2 == 1),
+                       overwrite=True)
+    IndexUpdater("s_a", spark, cfg).remove([0, 2, 4])
+    merge_indexes(spark, ["s_a", "s_b"], "m_hyb", cfg)
+    Indexer(cfg).index("m_flat", docs.filter(~F.col("pid").isin([0, 2, 4])),
+                       overwrite=True)
+
+    hyb = _postings_rows(spark, cfg, "m_hyb")
+    assert len(hyb) > 0
+    assert hyb == _postings_rows(spark, cfg, "m_flat")
+    assert _term_dict_rows(spark, cfg, "m_hyb") == \
+        _term_dict_rows(spark, cfg, "m_flat")
 
 
 def test_hybrid_fixture_exercises_multi_salt(spark, tmp_path):
