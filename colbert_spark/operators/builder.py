@@ -26,9 +26,8 @@ once per partition (mapInPandas). Only its input differs:
                driver-held tombstone pair (catalog.collect_tombstones)
                with catalog.tombstoned.
 
-Removal has one physical form too: tombstones, folded by coalesce_index
-(IndexUpdater.purge is remove + that fold). _make_block_builder is the
-per-group reference the tests pin the kernel against.
+Removal is tombstones, folded by coalesce_index. _make_block_builder is
+the per-group reference the tests pin the kernel against.
 
 Skew (north_rule; SURVEY.md §4.4): a head term ("the"/t00000) may hit >50%
 of docs — a single groupBy(term) group would be one straggler task. Every
@@ -64,8 +63,8 @@ from colbert_spark.functions.codec import (
 from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.sources.catalog import (
     POSTINGS_SCHEMA,
-    active_tombstone_pids,
     collect_tombstones,
+    drop_removed,
     tombstone_bounds,
     tombstoned,
 )
@@ -105,12 +104,6 @@ def term_dict_from_agg(agg: DataFrame, num_docs: int) -> DataFrame:
         "cf",
         bm25.idf(F.col("df"), num_docs).alias("idf"),
     )
-
-
-def build_term_dict(token_df: DataFrame, num_docs: int) -> DataFrame:
-    """(term, term_id, df, cf, idf). idf is frozen into the dictionary so
-    query time never recomputes corpus math."""
-    return term_dict_from_agg(term_agg(token_df), num_docs)
 
 
 def _make_block_builder(block_size: int, avgdl: float, k1: float, b: float):
@@ -396,16 +389,13 @@ def _blockify(rows: DataFrame, avgdl: float, config: ColBERTConfig,
     the hybrid feed of _hybrid_rows, which adds (epoch, pids, tfs, dls).
     ONE repartition on (term_id, salt), a partition-local sort on
     (term_id, salt, pid), then _make_block_kernel once per partition
-    (mapInPandas — no per-group pandas round-trips; groupBy.applyInPandas
-    performs the identical shuffle+sort internally but pays the Python
-    boundary per group). When idf_table is given, `rows` must NOT carry
-    idf — it broadcast-joins in AFTER the exchange (the join preserves the
-    exchange's partitioning — no second exchange) and the corpus-sized
-    shuffle never moves the per-term double. `tomb` (collect_tombstones)
-    folds inside the kernel; only the hybrid feed carries the epochs it
-    needs. The exchange takes its task count from the session's
-    spark.sql.shuffle.partitions, not from the config; any count keeps
-    every group whole, so the blocks never depend on it.
+    (mapInPandas: no per-group Python round-trips). When idf_table is
+    given, `rows` must NOT carry idf — it broadcast-joins in AFTER the
+    exchange, which keeps its partitioning, so the corpus-sized shuffle
+    never moves the per-term double. `tomb` (collect_tombstones) folds
+    inside the kernel (the hybrid feed carries the epochs). The exchange
+    takes the session's spark.sql.shuffle.partitions as its task count;
+    any count keeps every group whole, so the blocks never depend on it.
     """
     kernel = _make_block_kernel(config.block_size, avgdl, config.k1,
                                 config.b, tomb)
@@ -562,24 +552,16 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
     """Segment compaction (S13, colbert/utils/coalesce.py:9-111 analog +
     reference index_coalesce_test.py equivalence contract): decode every
     term's blocks across all salt runs / appended segments, drop
-    tombstoned pids, and rewrite clean pid-sorted runs. Rankings before
-    and after must be identical (tested).
+    tombstoned pids, and rewrite clean pid-sorted runs, with the same
+    rankings (tested). One commit publishes the new postings, doc_stats
+    without the removed pids, and no tombstones.
 
-    Skew-safe by the SAME mechanism as the build: a merge keyed on
-    term_id alone would put a head term's entire posting list (60% of a
-    10^12-doc corpus) in ONE pandas group. Instead the blocks re-blockify
-    through the build's kernel (_blockify) with n_salts derived from the
-    CURRENT per-term posting counts (block metadata only — column-pruned,
-    never touches the binary columns), so appended segments count too.
-    Its input is the hybrid feed (_hybrid_rows: single-salt terms' blocks
-    cross the exchange still encoded), and the tombstones fold inside the
-    kernel from the driver-collected pair.
-
-    Duplicate-pid detection survives salting: the salt is
-    pmod(xxhash64(pid), n_salts), so both copies of a duplicated
-    (term, pid) land in the same group and trip the kernel's
-    sorted-adjacent guard. Iceberg's rewrite_data_files would replace
-    this wholesale on a real catalog.
+    Skew-safe like the build: the blocks re-blockify through its kernel
+    (_blockify, hybrid feed) with n_salts from the CURRENT per-term
+    posting counts (block metadata only), so appended segments count
+    too. The salt is pmod(xxhash64(pid), n_salts), so both copies of a
+    duplicated (term, pid) meet in one group and trip the kernel's
+    sorted-adjacent guard.
     """
     from pyspark.sql import SparkSession
 
@@ -594,26 +576,20 @@ def coalesce_index(catalog, config: ColBERTConfig, avgdl: float) -> None:
     idf_table = catalog.read(ss, "term_dict").select("term_id", "idf")
     dict_slice = idf_table.join(counts, "term_id").select(
         "term_id", _n_salts(F.col("n_post"), config))
-    tomb = collect_tombstones([tombstone_bounds(catalog, ss)])
+    tombs = tombstone_bounds(catalog, ss)
+    tomb = collect_tombstones([tombs])
     merged = _blockify(_hybrid_rows(blocks, dict_slice), avgdl, config,
                        idf_table=idf_table, tomb=tomb)
-    catalog.replace(
-        merged.repartition("bucket")
-        .sortWithinPartitions("term_id", "block_id"),
-        "postings", partition_by=["bucket"],
-    )
-    # doc_stats must shrink with the postings: a compacted-away pid left
-    # in doc_stats makes IndexUpdater.add's clash check raise a false
-    # "already live" for a doc that is physically gone
-    gone = active_tombstone_pids(catalog, ss)
-    if gone is not None:
-        catalog.replace(
-            catalog.read(ss, "doc_stats").join(gone, "pid", "left_anti"),
-            "doc_stats",
+    with catalog.transaction():
+        catalog.write(
+            merged.repartition("bucket")
+            .sortWithinPartitions("term_id", "block_id"),
+            "postings", partition_by=["bucket"],
         )
-    catalog.delete_table("tombstones")
-    # parquet layout: the replace/delete mutated files behind Spark's back —
-    # drop cached listings so same-session readers see the compacted
-    # segment set (no-op on a snapshot-versioned catalog)
-    catalog.refresh(ss)
-
+        # doc_stats shrinks with the postings, or add()'s clash check
+        # calls a physically gone doc "already live"
+        if tombs is not None:
+            catalog.write(drop_removed(catalog.read(ss, "doc_stats"), tombs),
+                          "doc_stats")
+        catalog.delete_table("tombstones")
+        catalog.commit()

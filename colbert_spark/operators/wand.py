@@ -36,6 +36,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, Window
 
 from colbert_spark.functions.bm25 import B, K1, SCORE_DECIMALS
@@ -142,7 +143,7 @@ def score_query_blocks(pdf: pd.DataFrame, k: int, avgdl: float,
 
 def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
                  avgdl: float, qid_to_pids: DataFrame | None = None,
-                 tombstones: "tuple[np.ndarray, np.ndarray] | None" = None,
+                 tombstones: Broadcast | None = None,
                  allow_small: bool = False,
                  after: DataFrame | None = None) -> DataFrame:
     """Score blocks in place (no per-query gather), then relational top-k.
@@ -154,10 +155,12 @@ def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
     partials s = idf·core. Catalyst's map-side combine collapses the
     (qid, pid) partial sums before the one shuffle; window rank caps at k.
 
-    tombstones: the (sorted pids, aligned before_epochs) pair of
-    catalog.collect_tombstones; the kernel drops the postings it excludes
-    (catalog.tombstoned, epoch-bounded) right after decode, as
-    score_query_blocks does.
+    tombstones: a Broadcast of the (sorted pids, aligned before_epochs)
+    pair of catalog.collect_tombstones, or None when there are none; the
+    kernel drops the postings it excludes (catalog.tombstoned,
+    epoch-bounded) right after decode, as score_query_blocks does. A
+    broadcast ships the pair once per executor, where a closure would
+    ship it with every task.
 
     allow_small: the caller's assertion that the allow-list fits a
     broadcast. When False the join is left unhinted — an allow-list can
@@ -165,10 +168,8 @@ def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
     is a driver/executor OOM; AQE still converts to a runtime broadcast
     join when the set turns out small.
     """
-    if tombstones is not None and not tombstones[0].size:
-        tombstones = None
-
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        tomb = None if tombstones is None else tombstones.value
         for pdf in batches:
             tids, pids, cores = [], [], []
             for tid, bid, pb, tb, db in zip(
@@ -178,8 +179,8 @@ def topk_scatter(blocks: DataFrame, qterms: DataFrame, k: int,
                 p = decode_pids(bytes(pb))
                 c = _term_scores(decode_tfs(bytes(tb)), decode_tfs(bytes(db)),
                                  1.0, avgdl)
-                if tombstones is not None:
-                    keep = ~tombstoned(p, int(bid) >> 32, tombstones)
+                if tomb is not None:
+                    keep = ~tombstoned(p, int(bid) >> 32, tomb)
                     p, c = p[keep], c[keep]
                 tids.append(np.full(p.size, tid, dtype=np.int64))
                 pids.append(p)

@@ -47,7 +47,7 @@ class ColBERTConfig:
     def from_existing(cls, *sources: "ColBERTConfig | None") -> "ColBERTConfig":
         """Right-most non-default value wins (base_config.py:19-33)."""
         defaults = cls()
-        merged = dataclasses.replace(defaults)
+        merged = cls()
         for src in sources:
             if src is None:
                 continue

@@ -6,15 +6,16 @@ five overwrite modes (colbert/indexer.py:60-82):
     True                     — warn + delete + rebuild
     'force_silent_overwrite' — delete + rebuild, no warning
     'reuse'                  — return the existing index path untouched
-    'resume'                 — rebuild ONLY buckets missing from the manifest
+    'resume'                 — rebuild ONLY buckets missing from the manifest,
+                               over a fresh listing of the files on disk
                                (analog of chunk-exists skip,
                                collection_indexer.py:360-363 +
                                index_saver.py:30-50)
 
 Build phases mirror CollectionIndexer.run (collection_indexer.py:61-78):
 setup (plan.json) → train (term dict + corpus stats) → index (salted block
-build) → commit (`write_index`: the tables, then the manifest, then
-metadata.json last; collection_indexer.py:378-497). `merge_indexes` ends
+build) → commit (`write_index`: the tables, then the manifest, then one
+metadata.json that lists their files; collection_indexer.py:378-497). `merge_indexes` ends
 through the same `write_index`. Per-bucket manifest rows carry lineage +
 metrics (north_rule): content fingerprint, block/posting counts, encoded
 bytes, wall time.
@@ -42,32 +43,23 @@ MANIFEST_SCHEMA = (
 def write_index(cat, spark: SparkSession, *, term_dict: DataFrame,
                 doc_stats: DataFrame, blocks: DataFrame, buckets: list[int],
                 kept_rows: list[tuple], meta: dict, t0: float,
-                json_names: tuple[str, ...] = ("metadata.json",)) -> None:
-    """Commit a built index: term_dict, doc_stats, corpus_stats and the
-    postings of `buckets` (appended when `kept_rows` carries manifest
-    rows of earlier buckets, else overwritten), then the manifest, then
-    `meta` as each of `json_names` — metadata.json last: the index is
-    complete only once it exists. corpus_stats comes from `meta`.
+                plan_json: bool = False) -> None:
+    """Commit a built index: term_dict, doc_stats and the postings of
+    `buckets` (appended when `kept_rows` carries manifest rows of earlier
+    buckets, else overwritten), then the manifest, then one commit of
+    `meta` (also written as plan.json when `plan_json`).
 
-    The three stats tables do not depend on the postings, so they are
-    submitted from driver threads beside the postings write and their
-    tasks back-fill its tail. Manifest rows of `buckets` come from one
-    column-pruned read-back of the written postings (never the binary
-    payload columns). bit_xor of xxhash64 is order-independent and
-    overflow-free; the build is deterministic, so the fingerprint doubles
-    as an input-drift detector for resume. A bucket with no blocks, or
-    an index with no postings (nothing to read back), gets an "empty"
+    The stats tables are written from driver threads beside the postings
+    write. Manifest rows of `buckets` come from one column-pruned
+    read-back of the written postings; bit_xor of xxhash64 is
+    order-independent and overflow-free, and the build is deterministic,
+    so the fingerprint doubles as an input-drift detector for resume. A
+    bucket with no blocks, or an index with no postings, gets an "empty"
     row."""
-    stats_df = spark.createDataFrame(
-        [(meta["num_docs"], meta["avg_doclen"], meta["num_terms"],
-          meta["num_postings"])],
-        "num_docs long, avg_doclen double, num_terms long, num_postings long",
-    )
-    with ThreadPoolExecutor(max_workers=4) as pool:
+    with cat.transaction(), ThreadPoolExecutor(max_workers=3) as pool:
         futures = [
             pool.submit(cat.write, term_dict, "term_dict"),
             pool.submit(cat.write, doc_stats, "doc_stats"),
-            pool.submit(cat.write, stats_df, "corpus_stats"),
         ]
         if buckets:
             futures.append(pool.submit(
@@ -79,34 +71,32 @@ def write_index(cat, spark: SparkSession, *, term_dict: DataFrame,
             ))
         for fut in futures:
             fut.result()
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    written = {}
-    if buckets and meta["num_postings"] > 0:
-        written = {
-            r[0]: tuple(r[1:])
-            for r in cat.read(spark, "postings")
-            .filter(F.col("bucket").isin(buckets))
-            .groupBy("bucket")
-            .agg(
-                F.bit_xor(F.xxhash64("term_id", "block_id", "first_pid",
-                                     "num_postings")).cast("string"),
-                F.count(F.lit(1)),
-                F.sum("num_postings"),
-                F.sum("enc_bytes"),
-            )
-            .collect()
-        }
-    rows = kept_rows + [
-        (b, *written.get(b, ("empty", 0, 0, 0)), wall_ms, "ok")
-        for b in buckets
-    ]
-    cat.write(spark.createDataFrame(rows, MANIFEST_SCHEMA), "manifest")
-    meta = {**meta, "buckets_built_this_run": buckets, "wall_ms": wall_ms}
-    for name in json_names:
-        cat.write_json(name, meta)
-    # drop listings captured mid-build so post-build readers see the
-    # final file set (matters for append-mode resume in one session)
-    cat.refresh(spark)
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        written = {}
+        if buckets and meta["num_postings"] > 0:
+            written = {
+                r[0]: tuple(r[1:])
+                for r in cat.read(spark, "postings")
+                .filter(F.col("bucket").isin(buckets))
+                .groupBy("bucket")
+                .agg(
+                    F.bit_xor(F.xxhash64("term_id", "block_id", "first_pid",
+                                         "num_postings")).cast("string"),
+                    F.count(F.lit(1)),
+                    F.sum("num_postings"),
+                    F.sum("enc_bytes"),
+                )
+                .collect()
+            }
+        rows = kept_rows + [
+            (b, *written.get(b, ("empty", 0, 0, 0)), wall_ms, "ok")
+            for b in buckets
+        ]
+        cat.write(spark.createDataFrame(rows, MANIFEST_SCHEMA), "manifest")
+        meta = {**meta, "buckets_built_this_run": buckets, "wall_ms": wall_ms}
+        if plan_json:
+            cat.write_json("plan.json", meta)
+        cat.commit(**meta)
 
 
 class Indexer:
@@ -142,17 +132,10 @@ class Indexer:
 
         spark = collection.sparkSession
         t0 = time.monotonic()
-        # Spark's FileStatusCache is session-wide: a resume after external
-        # bucket loss (or this run's append) would otherwise serve stale
-        # file listings to this build and to Searchers created afterwards.
-        if cat.exists():
-            cat.refresh(spark)
 
         # ---- setup + train: tokens, corpus stats, term dictionary --------
         # job-count discipline: each driver action costs ~0.5-2s of fixed
-        # scheduling latency regardless of cluster size, which is exactly
-        # what erodes N→4N scaling efficiency. Stats are folded into as few
-        # actions as possible.
+        # scheduling latency, so stats fold into as few actions as possible
         token_df = builder.tokenize(collection, cfg).persist()
         # doc stats straight from the source (map-only), not via token_df —
         # no shuffle, and it doesn't force an early token materialization
@@ -161,10 +144,8 @@ class Indexer:
         doc_stats_df = collection.select(
             F.col("pid"), _doclen("text", cfg.doc_maxlen).alias("doclen")
         ).persist()
-        # ONE action for all build statistics: corpus stats × term stats
-        # (idf-free term_agg, since idf needs num_docs from this same
-        # action). The crossJoin of two 1-row aggregates materializes both
-        # persisted inputs in a single driver job.
+        # ONE action for all build statistics: corpus stats × idf-free term
+        # stats (idf needs num_docs), a crossJoin of two 1-row aggregates
         term_agg_df = builder.term_agg(token_df).persist()
         row = (
             doc_stats_df.agg(
@@ -219,16 +200,18 @@ class Indexer:
         )
 
         # ---- resume: which buckets still need building? -------------------
-        # ONE collect of the ok manifest rows: their buckets are done, and
-        # the rows themselves are kept in the manifest written below
+        # over the files on disk now (the repair path); ONE collect of the
+        # ok manifest rows gives the done buckets and the rows to keep
         kept_rows: list[tuple] = []
-        if overwrite == "resume" and cat.table_exists("manifest"):
-            kept_rows = [
-                tuple(r)
-                for r in cat.read(spark, "manifest")
-                .filter(F.col("status") == "ok")
-                .collect()
-            ]
+        if overwrite == "resume":
+            cat.pin(cat.relist())
+            if cat.table_exists("manifest"):
+                kept_rows = [
+                    tuple(r)
+                    for r in cat.read(spark, "manifest")
+                    .filter(F.col("status") == "ok")
+                    .collect()
+                ]
         done = {r[0] for r in kept_rows}
         todo = sorted(set(range(cfg.index_partitions)) - done)
 

@@ -18,23 +18,18 @@ required to be disjoint (guarded — a collision would silently merge two
 documents' postings).
 
 Reference analog: the reference merges sharded RANKINGS
-(utility/rankings/merge.py, ranking_shard_merge entry) but has no index
-merge — its single-machine index never shards. At 10^12 documents the
-build itself must shard; this is the fold step.
+(utility/rankings/merge.py) but has no index merge; this is the fold
+step of a sharded build.
 
 Plan shape: the postings re-blockify through the build's one kernel
-(builder._blockify) with df-proportional salts from the merged df. Its
-input is the hybrid feed (builder._hybrid_rows): single-salt terms'
-blocks cross the (term_id, salt) exchange STILL ENCODED (~1-2
-bytes/posting) and only multi-salt (hot) terms' postings flatten to rows.
-The union of source tombstones is one driver-held (pid, before_epoch)
-pair (catalog.collect_tombstones); both the kernel and the stats pass
-fold it epoch-bounded. The stats pass reads per-block (df, cf) partials
-from the tf payloads (builder.block_term_stats — one row per BLOCK
-shuffles, not per posting). The merged index equals a fresh build of
-the live union, payload bytes included (pytest-pinned), and commits
-through the Indexer's `write_index` (tables, manifest, then plan.json
-and metadata.json).
+(builder._blockify) with salts from the merged df, fed by the hybrid feed
+(builder._hybrid_rows). The union of source tombstones is one
+driver-held pair (catalog.collect_tombstones), folded epoch-bounded by
+the kernel and by the per-block (df, cf) stats pass
+(builder.block_term_stats). The result equals a fresh build of the live
+union, payload bytes included (pytest-pinned), and commits through the
+Indexer's `write_index`. Sources without per-version file lists are
+rejected (rebuild them).
 """
 
 from __future__ import annotations
@@ -51,18 +46,11 @@ from colbert_spark.operators import builder
 from colbert_spark.plans.config import ColBERTConfig
 from colbert_spark.plans.indexer import write_index
 from colbert_spark.sources.catalog import (
-    active_tombstone_pids,
     collect_tombstones,
+    drop_removed,
     make_catalog,
     tombstone_bounds,
 )
-
-
-def _live_doc_stats(catalog, spark: SparkSession) -> DataFrame:
-    """(pid, doclen) minus actively-tombstoned pids (readded stays)."""
-    d = catalog.read(spark, "doc_stats").select("pid", "doclen")
-    gone = active_tombstone_pids(catalog, spark)
-    return d if gone is None else d.join(gone, "pid", "left_anti")
 
 
 def merge_indexes(
@@ -80,7 +68,7 @@ def merge_indexes(
     fresh full-corpus build. Sources are untouched. Returns the dest
     index root.
 
-    A SINGLE source is the optimize / stats-refresh merge (Lucene
+    A SINGLE source is the optimize / stats-recompute merge (Lucene
     forceMerge(1) analog): after a run of IndexUpdater appends and
     removals, merging the index into a fresh name folds the tombstones
     physically AND erases the frozen-stats approximation in one pass —
@@ -105,7 +93,7 @@ def merge_indexes(
         cat = make_catalog(c)
         if not cat.exists():
             raise FileNotFoundError(f"source index {cat.root} not found")
-        meta = cat.read_json("metadata.json")
+        meta = cat.current()
         src_maxlen = meta.get("config", {}).get("doc_maxlen")
         if src_maxlen is not None and src_maxlen != cfg.doc_maxlen:
             # tf/doclen are analyzer products — merging across analyzer
@@ -116,7 +104,8 @@ def merge_indexes(
         srcs.append(cat)
 
     t0 = time.monotonic()
-    tomb = collect_tombstones([tombstone_bounds(c, spark) for c in srcs])
+    tombs = [tombstone_bounds(c, spark) for c in srcs]
+    tomb = collect_tombstones(tombs)
     blocks_all = reduce(
         DataFrame.unionByName,
         [cat.read(spark, "postings")
@@ -124,9 +113,11 @@ def merge_indexes(
          for cat in srcs],
     )
     tagg = builder.block_term_stats(blocks_all, tomb).persist()
-    doc_stats_df = reduce(
-        DataFrame.unionByName, [_live_doc_stats(c, spark) for c in srcs]
-    ).persist()
+    # live docs: minus the actively removed pids (re-added ones stay)
+    doc_stats_df = reduce(DataFrame.unionByName, [
+        drop_removed(c.read(spark, "doc_stats").select("pid", "doclen"), t)
+        for c, t in zip(srcs, tombs)
+    ]).persist()
 
     # ONE driver action for every merged statistic (the Indexer's stats
     # discipline): corpus stats × term-level totals
@@ -174,7 +165,7 @@ def merge_indexes(
     write_index(
         dest, spark, term_dict=term_dict, doc_stats=doc_stats_df,
         blocks=merged, buckets=list(range(cfg.index_partitions)),
-        kept_rows=[], t0=t0, json_names=("plan.json", "metadata.json"),
+        kept_rows=[], t0=t0, plan_json=True,
         meta={
             "config": asdict(cfg),
             "num_docs": num_docs,

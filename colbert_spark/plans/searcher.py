@@ -29,12 +29,16 @@ It falls back to search_all only when the catalog has no plain-file
 layout (IcebergIndexCatalog.read_arrow is None). These are two
 independent implementations of one ranking contract, each the other's
 test reference: the kernel answers search, the scatter plan search_all.
-Both apply the same tombstones: the (pid, before_epoch) pair collected
-to the driver once at open (catalog.collect_tombstones).
+
+A Searcher serves the index version it opened, as the reference serves
+the index state it loaded (colbert/searcher.py:23-51): both paths read
+only the files, stats and tombstones (one driver-held pair,
+catalog.collect_tombstones) of the metadata.json it pinned, and
+refresh() moves it to the current version.
 
 The reference's k-dependent funnel knobs (ncells/threshold/ndocs,
 searcher.py:106-127) have no free parameters here: block-max pruning is
-exact, so there is nothing to tune for quality.
+exact.
 """
 
 from __future__ import annotations
@@ -48,11 +52,11 @@ from pyspark.sql import DataFrame, SparkSession
 from colbert_spark.functions import analysis
 from colbert_spark.operators import wand
 from colbert_spark.plans.config import ColBERTConfig
-from colbert_spark.plans.index_updater import load_tombstones
 from colbert_spark.sources.catalog import (
     collect_tombstones,
     make_catalog,
     posting_buckets,
+    tombstone_bounds,
 )
 from colbert_spark.sources.ranking import Ranking
 
@@ -69,17 +73,30 @@ class Searcher:
         base.index_name = index
         self.config = base
         self.catalog = make_catalog(base)
-        meta = self.catalog.read_json("metadata.json")
-        self.num_docs: int = meta["num_docs"]
-        self.avgdl: float = meta["avg_doclen"]
-        self.term_dict = self.catalog.read(spark, "term_dict").persist()
+        self.term_dict = self._tomb_bc = None
+        self.refresh()
+
+    def refresh(self) -> None:
+        """Pin the index's current version for both query paths, whatever
+        later commits publish (a commit keeps the files of the version it
+        replaces). Not concurrent with this Searcher's own queries."""
+        rec = self.catalog.pin()
+        self.version: int = rec["version"]
+        self.num_docs: int = rec["num_docs"]
+        self.avgdl: float = rec["avg_doclen"]
+        if self.term_dict is not None:
+            self.term_dict.unpersist()
+        self.term_dict = self.catalog.read(self.spark, "term_dict").persist()
         self.term_dict.count()  # materialize once
-        # removed pids (IndexUpdater.remove analog) as (sorted pids,
-        # aligned before_epochs): both kernels drop a pid only from blocks
-        # whose epoch < its before_epoch, so a re-added pid's newer
-        # postings score normally
+        # removed pids as (sorted pids, aligned before_epochs): both kernels
+        # drop a pid only from blocks whose epoch < its before_epoch
         self.tombstones = collect_tombstones(
-            [load_tombstones(self.catalog, spark)])
+            [tombstone_bounds(self.catalog, self.spark)])
+        # one broadcast per pinned version for search_all's scatter kernel
+        if self._tomb_bc is not None:
+            self._tomb_bc.unpersist()
+        self._tomb_bc = (self.spark.sparkContext.broadcast(self.tombstones)
+                         if self.tombstones[0].size else None)
 
     # -- query encoding (lexical analog of Searcher.encode) ----------------
     def _query_terms(self, queries: DataFrame) -> DataFrame:
@@ -169,7 +186,7 @@ class Searcher:
             return Ranking(empty, self._provenance(k))
         ranking = wand.topk_scatter(blocks, self.spark.createDataFrame(qrows),
                                     k, self.avgdl, qid_to_pids=qid_to_pids,
-                                    tombstones=self.tombstones,
+                                    tombstones=self._tomb_bc,
                                     allow_small=allow_small, after=after)
         return Ranking(ranking, self._provenance(k))
 

@@ -15,10 +15,12 @@ from colbert_spark.plans.searcher import Searcher
 
 
 def make_api(searcher: Searcher, cache_size: int = 1_000_000):
-    """Build a memoized query function (reference lru_cache(2**20), :19)."""
+    """Build a memoized query function (reference lru_cache(2**20), :19).
+    Answers are cached under the searcher's pinned version, so none
+    computed before a `Searcher.refresh()` is served after it."""
 
     @lru_cache(maxsize=cache_size)
-    def api_search(query: str, k: int = 10) -> tuple[dict, ...]:
+    def cached(version: int, query: str, k: int) -> tuple[dict, ...]:
         pids, ranks, scores = searcher.search(query, k=k)
         if not pids:
             return ()
@@ -29,6 +31,11 @@ def make_api(searcher: Searcher, cache_size: int = 1_000_000):
             for p, r, s, pr in zip(pids, ranks, scores, probs)
         )
 
+    def api_search(query: str, k: int = 10) -> tuple[dict, ...]:
+        return cached(searcher.version, query, k)
+
+    api_search.cache_info = cached.cache_info
+    api_search.cache_clear = cached.cache_clear
     return api_search
 
 

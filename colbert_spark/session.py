@@ -56,6 +56,12 @@ def get_spark(
         # every parallelism level on the index build
         .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # an index version lists its files (sources/catalog.py), so a read
+        # passes them explicitly; Spark lists more paths than this
+        # threshold (default 32) with a parallel job instead of on the
+        # driver, which cost a job per batch search after one append
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -23,15 +23,18 @@ per-stream ledger in the index sidecar (stream_append.json):
   append-only list — the ledger is O(#streams) forever, not O(#batches)
   (v1 ledgers are migrated on first read).
 - inflight: written BEFORE IndexUpdater.add runs, cleared with the hwm
-  bump after it. add() is itself multi-step (postings append → term_dict
-  append → doc_stats replace), so a crash inside it can leave a PARTIAL
-  append; on re-delivery the marker identifies exactly which batch may
-  be partial, and the appender rolls it back by tombstoning the batch's
-  pids (IndexUpdater.remove) and re-applies. add() consumes its epoch
-  before it writes postings, so the tombstone's bound excludes whatever
-  the crashed attempt appended, and it hides any doc_stats rows it left
-  from add's clash check; the retry appends in a fresh epoch. No silent
-  double-append, no spurious "already live".
+  bump after it. add() publishes its postings, term_dict and doc_stats in
+  one metadata.json commit, so a crash inside it publishes nothing (its
+  files are swept by the next commit). The window the marker covers is a
+  crash between add's commit and the ledger update: the batch is live but
+  not recorded. On re-delivery the marker identifies that batch, and the
+  appender rolls it back by tombstoning its pids (IndexUpdater.remove)
+  and re-applies. The rollback's bound lies past every committed epoch,
+  so it excludes what the first attempt appended and hides its doc_stats
+  rows from add's clash check; the retry appends in a fresh epoch. After
+  a crash before the commit the rollback tombstones pids that are not in
+  the index, which changes nothing. No silent double-append, no spurious
+  "already live".
 
 Concurrent streams against ONE index are unsupported: the ledger is a
 read-modify-write JSON sidecar with no lock (two writers can lose each
@@ -75,12 +78,11 @@ def _load_ledger(catalog) -> dict:
 
 def _rollback_partial(cfg: ColBERTConfig, index: str, batch_df: DataFrame,
                       id_col: str) -> None:
-    """Undo whatever a crashed add() left behind for this batch's pids by
-    tombstoning them: the bound lies past the crashed attempt's epoch, so
-    its postings (if any landed) are excluded and its doc_stats rows stop
-    counting as live. Leftover df=0 term_dict rows from the crashed
-    attempt are harmless (the retry's new-term anti-join skips them;
-    their idf is the same frozen-stats value either way)."""
+    """Undo a batch whose add() may have committed before the crash by
+    tombstoning its pids: the bound lies past the committed epochs, so
+    the batch's postings (if its commit landed) are excluded and its
+    doc_stats rows stop counting as live. After a crash before the
+    commit there is nothing to undo, and the tombstones are harmless."""
     from colbert_spark.plans.index_updater import IndexUpdater
 
     pids = [

@@ -41,29 +41,46 @@ def test_make_catalog_selects_backend(tmp_path):
     assert cat2.ident("postings") == "lake.my_index_2.postings"
 
 
-def test_parquet_replace_and_delete_table(spark, tmp_path):
+def test_parquet_write_from_own_table_and_delete_table(spark, tmp_path):
     cat = IndexCatalog(str(tmp_path / "idx"))
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "pid long, v string")
-    cat.write(df1, "t")
+    with cat.transaction():
+        cat.write(df1, "t")
+        cat.commit()
     assert cat.table_exists("t")
+    assert cat.current()["version"] == 1
     assert sorted(map(tuple, cat.read(spark, "t").collect())) == \
         [(1, "a"), (2, "b")]
+    v1_files = cat.current()["tables"]["t"]["files"]
 
-    # replace derived FROM the current contents (read-modify-write on the
-    # same table — the exact shape IndexUpdater.remove/doc_stats uses)
+    # a write derived FROM the table it overwrites (read-modify-write on
+    # the same table — the shape IndexUpdater.remove/doc_stats use): the
+    # old files stay until the commit, so the read never sees a gap
     merged = cat.read(spark, "t").unionByName(
         spark.createDataFrame([(3, "c")], "pid long, v string")
     )
-    cat.replace(merged, "t")
-    cat.refresh(spark)
+    with cat.transaction():
+        cat.write(merged, "t")
+        assert cat.current()["version"] == 1  # nothing visible yet
+        cat.commit()
+    rec = cat.current()
+    assert rec["version"] == 2
+    assert not set(rec["tables"]["t"]["files"]) & set(v1_files)
     assert sorted(map(tuple, cat.read(spark, "t").collect())) == \
         [(1, "a"), (2, "b"), (3, "c")]
-    # no tmp dir left behind
-    assert not (tmp_path / "idx" / "t_tmp").exists()
+    # the replaced version's files stay one version for pinned readers
+    assert all((tmp_path / "idx" / f).exists() for f in v1_files)
 
-    cat.delete_table("t")
+    with cat.transaction():
+        cat.delete_table("t")
+        cat.commit()
     assert not cat.table_exists("t")
-    cat.delete_table("t")  # idempotent
+    assert not any((tmp_path / "idx" / f).exists() for f in v1_files)
+    with cat.transaction():
+        cat.delete_table("t")  # idempotent
+        cat.commit()
+    assert not cat.table_exists("t")
+    assert not (tmp_path / "idx" / "t").exists()
 
 
 @pytest.mark.skipif(not _has_iceberg_jar(),
@@ -71,7 +88,7 @@ def test_parquet_replace_and_delete_table(spark, tmp_path):
                            "(documented skip; SURVEY §7.0)")
 def test_iceberg_catalog_roundtrip(spark, tmp_path):
     """Runs only where an Iceberg jar is on the classpath: tables round-trip
-    through writeTo/createOrReplace and replace() is a snapshot swap."""
+    through writeTo/createOrReplace and an overwrite is a snapshot swap."""
     spark.conf.set("spark.sql.catalog.lake",
                    "org.apache.iceberg.spark.SparkCatalog")
     spark.conf.set("spark.sql.catalog.lake.type", "hadoop")
@@ -80,7 +97,7 @@ def test_iceberg_catalog_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "pid long, v string")
     cat.write(df, "t")
     assert cat.table_exists("t")
-    cat.replace(df.unionByName(df), "t")
+    cat.write(df.unionByName(df), "t")
     assert cat.read(spark, "t").count() == 2
     cat.delete_table("t")
     assert not cat.table_exists("t")
@@ -100,7 +117,7 @@ def test_iceberg_full_index_lifecycle(tmp_path):
     coalesce_index → re-add cycle through IcebergIndexCatalog, on a
     DEDICATED session with the runtime jar. Proves the semantics the
     in-sandbox suite can only select-test: createOrReplace snapshot swaps
-    (replace), DROP TABLE (delete_table), the namespace-existence guard in
+    (write), DROP TABLE (delete_table), the namespace-existence guard in
     delete(), and that rankings through the Iceberg backend equal the
     parquet backend's on the same docs.
 

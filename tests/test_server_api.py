@@ -34,6 +34,36 @@ def test_api_search_probs_and_cache(searcher):
     assert api("zzabsent", k=5) == ()
 
 
+def test_api_cache_is_keyed_on_the_pinned_version(spark, tmp_path):
+    """No answer cached before Searcher.refresh() is served after it: a
+    removal stays invisible while the searcher holds its version, then
+    shows at once after refresh — and a rebuild of the index under the
+    same name continues the version numbers, so it cannot reuse a key."""
+    from colbert_spark.plans.index_updater import IndexUpdater
+
+    cfg = ColBERTConfig(index_root=str(tmp_path), index_partitions=4)
+    docs_pdf = gen_docs_pdf(np.arange(60))
+    docs_pdf["pid"] = np.arange(60)
+    docs = spark.createDataFrame(docs_pdf[["pid", "text"]])
+    Indexer(cfg).index("srv2", docs, overwrite=True)
+    s = Searcher("srv2", spark, cfg)
+    api = make_api(s)
+    out = api("t00000 t00011", k=5)
+    top = out[0]["pid"]
+    IndexUpdater("srv2", spark, cfg).remove([top])
+    assert api("t00000 t00011", k=5) is out  # still the pinned version
+    s.refresh()
+    after = api("t00000 t00011", k=5)
+    assert top not in [r["pid"] for r in after]
+    assert api.cache_info().misses == 2
+
+    version = s.version
+    Indexer(cfg).index("srv2", docs, overwrite=True)
+    s.refresh()
+    assert s.version > version
+    assert api("t00000 t00011", k=5)[0]["pid"] == top
+
+
 def test_hop_search_expands_context(searcher):
     s, docs_pdf = searcher
     texts = dict(zip(docs_pdf["pid"], docs_pdf["text"]))

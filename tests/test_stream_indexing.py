@@ -196,7 +196,7 @@ def test_crash_inside_add_rolls_back_then_reapplies(spark, tmp_path,
 def test_crash_mid_add_before_doc_stats_rolls_back_then_reapplies(
         spark, tmp_path, monkeypatch):
     """add() crashes after its postings append and before its doc_stats
-    replace, in a batch that re-adds a removed pid and adds a new one.
+    write, in a batch that re-adds a removed pid and adds a new one.
     Re-delivery rolls back and re-applies: both pids are searchable, the
     point rankings equal those of the same index state reached without
     the crash, and coalesce_index passes its duplicate-pid guard with the
@@ -215,19 +215,19 @@ def test_crash_mid_add_before_doc_stats_rolls_back_then_reapplies(
     for name in ("st8", "st8ref"):
         IndexUpdater(name, spark, cfg).remove([7])
 
-    real_replace = IndexCatalog.replace
+    real_write = IndexCatalog.write
 
-    def crashing_replace(self, df, table, partition_by=None):
+    def crashing_write(self, df, table, mode="overwrite", partition_by=None):
         if table == "doc_stats":
             raise RuntimeError("crash before the doc_stats replace")
-        return real_replace(self, df, table, partition_by)
+        return real_write(self, df, table, mode, partition_by)
 
-    monkeypatch.setattr(IndexCatalog, "replace", crashing_replace)
+    monkeypatch.setattr(IndexCatalog, "write", crashing_write)
     with pytest.raises(RuntimeError, match="before the doc_stats replace"):
         _apply_batch(cfg, "st8", batch, 0, "pid", "text", stream_key="ck")
     assert cat.read_json("stream_append.json")["streams"]["ck"] == {
         "hwm": -1, "inflight": 0}
-    monkeypatch.setattr(IndexCatalog, "replace", real_replace)
+    monkeypatch.setattr(IndexCatalog, "write", real_write)
     assert _apply_batch(cfg, "st8", batch, 0, "pid", "text",
                         stream_key="ck") is True
     assert _apply_batch(ref_cfg, "st8ref", batch, 0, "pid", "text",
